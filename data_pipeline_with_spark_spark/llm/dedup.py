@@ -72,12 +72,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 # --------------------------------------------------------------------------
 # Shingling + MinHash
-def word_shingles(toks: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingles from a token array; documents
-    shorter than k yield their single short shingle."""
-    return F.array_distinct(_shingle_expr(toks, k))
-
-
 def _shingle_expr(toks: Column, k: int) -> Column:
     seq = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
     return F.transform(seq, lambda i: F.array_join(F.slice(toks, i, k), " "))

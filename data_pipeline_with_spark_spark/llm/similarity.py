@@ -65,10 +65,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def with_norm(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
-    return df.withColumn("emb_norm", norm(F.col(emb_col)))
-
-
 # Both the brute-force scorer and the IVF probe BROADCAST the query
 # side: right for the intended regime (|queries| ≪ corpus — ad-hoc
 # search, eval probes), wrong past executor memory. The guard below

@@ -2,7 +2,8 @@
 
 Reference parity:
 - O1 ordering (``data_manipulation/serving_layer.py:260``).
-- O2 LIMIT truncation (``data_ingestion_and_cleaning/curate_data.py:154``).
+- O2 LIMIT truncation (``data_ingestion_and_cleaning/curate_data.py:154``),
+  spelled ``df.limit(n)`` directly.
 - O3 union — positional in the reference (``serving_layer.py:116-133``,
   ``denormalized_tables.py:191-192``); positional union silently
   mis-aligns on schema drift (SURVEY §7 risk), so our engine's default
@@ -24,11 +25,6 @@ from pyspark.sql import Column, DataFrame
 def order_by(df: DataFrame, *cols: Column | str) -> DataFrame:
     """O1: global sort."""
     return df.orderBy(*cols)
-
-
-def limit_rows(df: DataFrame, n: int) -> DataFrame:
-    """O2: LIMIT n."""
-    return df.limit(n)
 
 
 def union_by_name(frames: Sequence[DataFrame], allow_missing: bool = False) -> DataFrame:

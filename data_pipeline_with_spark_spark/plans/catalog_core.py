@@ -42,7 +42,6 @@ from data_pipeline_with_spark_spark.util import ensure_min_partitions
 from data_pipeline_with_spark_spark.sources.readers import (
     read_testdata,
     register_testdata_views,
-    testdata_row_groups,
 )
 
 SHIP_YEARS = list(range(1995, 2002))  # observed l_shipdate span in fixtures
@@ -58,32 +57,12 @@ def _lineitem_with_year(spark: SparkSession, sf: str) -> DataFrame:
 # W1 flagship: top-100 per (returnflag, ship year) by extendedprice.
 # Reference: serving_layer.py:256-267 (top-100 emitters per MS/year).
 def _flagship(spark: SparkSession, sf: str) -> DataFrame:
-    # r15 (guide §2.4/§2.5): the window's map side is a full per-task
-    # SORT (the partial WindowGroupLimit needs sorted input) — by far
-    # the heaviest pre-exchange work in the plan. A single-file scan
-    # (one parquet row group = one task) runs it on one core; the
-    # guarded hash repartition splits it across the cluster and is a
-    # no-op whenever the scan already yields >= cores partitions (any
-    # real table). Hash on the high-cardinality l_orderkey: no
-    # sortBeforeRepartition pass, deterministic under retry. Measured
-    # sf0.1 min-of-sweeps 1.08 s -> 0.59 s (3 independent probes
-    # 1.5-1.8x). when_below=2: a sort's per-row cost is comparable to
-    # the shuffle's, so the repartition only pays at extreme
-    # parallelism gain — at sf1's 49-row-group scan the guard LOST
-    # (interleaved min 1.21 vs 0.96 s, tools/probe_w1_sf1.py), so it
-    # fires only on SINGLE-TASK inputs. r16 (verdict #4): the gate
-    # reads the parquet row-group count, not getNumPartitions() —
-    # Spark's byte-range splits of a ONE-row-group file report >= 2
-    # partitions of which all but one are empty, which silently
-    # disabled the gate at sf0.1 (all 600k rows in one task, "3
-    # partitions"). Row groups are the data-aware signal: they bound
-    # the number of row-carrying scan tasks.
-    li = ensure_min_partitions(
-        _lineitem_with_year(spark, sf),
-        by=("l_orderkey",),
-        when_below=2,
-        data_partitions=testdata_row_groups(sf, "lineitem"),
-    )
+    # The window's map side is a full per-task sort (the partial
+    # WindowGroupLimit needs sorted input), the heaviest pre-exchange
+    # work in the plan. A one-row-group fixture runs it in one task;
+    # the guard spreads it over the cores, hashed on the
+    # high-cardinality l_orderkey (no sortBeforeRepartition pass).
+    li = ensure_min_partitions(_lineitem_with_year(spark, sf), by=("l_orderkey",))
     return top_k_per_group(
         li.select("l_returnflag", "ship_year", "l_orderkey", "l_linenumber", "l_extendedprice"),
         partition_by=["l_returnflag", "ship_year"],

@@ -18,6 +18,11 @@ and partition-pruning capable out of the box.
 
 from __future__ import annotations
 
+import functools
+import os
+from collections.abc import Sequence
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -119,44 +124,42 @@ def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-def testdata_row_groups(sf_dir: str, table: str) -> int | None:
-    """Total parquet row groups across the table's files — the number of
-    scan tasks that can actually CARRY ROWS, regardless of how many byte
-    ranges Spark splits the files into.
+def parquet_row_groups(files: Sequence[str]) -> int | None:
+    """Total parquet row groups across ``files`` (paths or ``file:`` URIs,
+    e.g. ``df.inputFiles()``): the most scan tasks that can carry rows,
+    however many byte ranges Spark splits the files into. ``None`` when
+    there are no files or a footer cannot be read (object store, not
+    parquet). Footers are cached per (path, size, mtime)."""
+    total = 0
+    for f in files:
+        url = urlparse(f)
+        if url.scheme not in ("", "file"):
+            return None
+        path = unquote(url.path)
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        n = _footer_row_groups(path, st.st_size, st.st_mtime_ns)
+        if n is None:
+            return None
+        total += n
+    return total or None
 
-    Why this exists (r15 verdict #4): Spark's split planning charges
-    ``maxPartitionBytes``/``openCostInBytes`` against FILE BYTES, so a
-    one-row-group 10 MB file splits into ~3 partitions of which two are
-    EMPTY (rows only materialize in the split containing a row-group
-    start). ``df.rdd.getNumPartitions()`` therefore over-reports real
-    parallelism, which defeated the ``when_below`` gate of
-    ``util.ensure_min_partitions`` on exactly the single-row-group
-    inputs it targets. Footer metadata is the data-aware signal: row
-    groups ARE the max number of row-carrying scan tasks.
 
-    Local-filesystem paths only (the fixture layout); returns ``None``
-    when the footer can't be read (object store, missing pyarrow) so
-    callers can fall back to the partition count."""
-    import os
+@functools.lru_cache(maxsize=4096)
+def _footer_row_groups(path: str, size: int, mtime_ns: int) -> int | None:
+    import pyarrow.parquet as pq
 
     try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow ships with pyspark
-        return None
-    path = f"{sf_dir}/{table}.parquet"
-    try:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, fn)
-                        ).metadata.num_row_groups
-            return total or None
         return pq.ParquetFile(path).metadata.num_row_groups
-    except (OSError, ValueError):
+    except (OSError, ValueError):  # ArrowInvalid is a ValueError
         return None
+
+
+def testdata_row_groups(sf_dir: str, table: str) -> int | None:
+    """Row groups of one fixture table (a single parquet file)."""
+    return parquet_row_groups([f"{sf_dir}/{table}.parquet"])
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:

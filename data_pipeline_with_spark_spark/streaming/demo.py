@@ -1148,15 +1148,10 @@ def fold_near_dup_batch(
     from data_pipeline_with_spark_spark.lake.versioned import retry_on_conflict
     from data_pipeline_with_spark_spark.util import ensure_min_partitions
 
-    # r16 (r15 "not yet optimized" item): inside foreachBatch the batch
-    # frame is a CONCRETE batch DataFrame (isStreaming=False), so the
-    # partition-count side channel the conditional guard needs is simply
-    # batch_df.rdd.getNumPartitions() evaluated at fold time — no
-    # unconditional repartition. A maxFilesPerTrigger=1 micro-batch
-    # arrives as ONE scan partition, so the fold's heavy map side
-    # (tokenize → shingle → 4×md5 minhash) ran on one core; the guard
-    # hash-spreads it on doc_id and stays a no-op for batches that
-    # already arrive parallel (any real multi-file trigger).
+    # A maxFilesPerTrigger=1 micro-batch arrives as ONE scan partition,
+    # so the fold's heavy map side (tokenize → shingle → 4×md5 minhash)
+    # would run on one core; the guard hash-spreads it on doc_id and is
+    # a no-op for batches that already arrive parallel.
     new = _band_triples(
         ensure_min_partitions(batch_df.select("doc_id", "text"), by=("doc_id",)),
         k_shingle, num_hashes, bands,

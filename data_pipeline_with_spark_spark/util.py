@@ -4,81 +4,77 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_spark.sources.readers import parquet_row_groups
 
-def ensure_min_partitions(
-    df: DataFrame,
-    target: int | None = None,
-    by: Sequence[str] | None = None,
-    when_below: int | None = None,
-    data_partitions: int | None = None,
-) -> DataFrame:
-    """Repartition up to ``target`` (default: cluster parallelism) ONLY
-    if the input has fewer partitions.
 
-    The scale pattern behind it: CPU-bound per-row stages (hashing,
-    shingling, vector math) parallelize by partition count, and a small
-    dimension-sized input often arrives as one file → one partition →
-    one core. The guard keeps this a no-op on big inputs where the scan
-    already yields ≥ cores partitions — no gratuitous shuffle at 100 TB.
+def ensure_min_partitions(df: DataFrame, by: Sequence[str] | None = None) -> DataFrame:
+    """Spread a frame over the cluster's cores when its rows would run in
+    fewer tasks than there are cores, deciding from the plan alone: the
+    guard starts no Spark job. The policy, for every caller:
 
-    ``by`` (r15): optional high-cardinality, never-null columns to hash
-    the rows on instead of round-robin. A keyless ``repartition(n)``
-    first pays a LOCAL SORT of every input partition
-    (``spark.sql.execution.sortBeforeRepartition``, on by default since
-    SPARK-23207 so retried tasks reproduce their row→partition
-    assignment) — on the one fat partition this guard exists to split,
-    that sort is single-threaded and scales with the very input we are
-    trying to parallelize. Hash partitioning is deterministic per row,
-    needs no such sort, and on a unique key spreads as evenly as round
-    robin. Prefer ``by=<unique id>`` when the frame has one; keep round
-    robin for frames whose per-row cost is wildly skewed and whose id
-    correlates with it.
+    1. A plan that already holds an exchange is returned unchanged. The
+       exchange decides its own partitioning, and asking for its
+       partition count would run the shuffle at build time only to
+       learn "no-op".
+    2. Otherwise the partition count is known without running anything.
+       Rows sit in at most ``min(partitions, row groups)`` tasks, the row
+       groups summed over the parquet footers of ``df.inputFiles()``:
+       Spark's byte splits of a one-row-group file report several
+       partitions, all but one of them empty.
+    3. Below ``defaultParallelism`` row-carrying tasks, repartition to
+       ``defaultParallelism``. On a table whose scan already yields a
+       task per core, the guard adds no shuffle.
 
-    ``when_below`` (r15): only fire when the input has fewer than THIS
-    many partitions (default: ``target``, i.e. whenever under-parallel;
-    ``0`` means never fire; values above ``target`` are clamped to it —
-    partitions in [target, when_below) would make the repartition a
-    no-op anyway). For map sides whose per-row cost is comparable to
-    the shuffle's per-row cost (e.g. a window's per-task sort), the
-    repartition only pays at extreme parallelism gain — pass
-    ``when_below=2`` to fire only on single-partition inputs (measured
-    on w1 at sf1's multi-row-group scan: guard min 1.21 s vs no-guard
-    0.96 s interleaved, while the 1-row-group sf0.1 scan wins
-    1.08 → 0.59 s). Leave default for map sides that dominate the
-    shuffle per row (tokenize, codec encode).
-
-    ``data_partitions`` (r16): the caller's data-aware count of
-    partitions that actually HOLD ROWS — e.g. the parquet row-group
-    count (``sources.readers.testdata_row_groups``). Spark's byte-range
-    split planning can report several partitions for a one-row-group
-    file of which all but one are EMPTY, so ``getNumPartitions()``
-    over-reports real parallelism and a tight ``when_below`` gate never
-    fires on exactly the single-task inputs it targets (r15 verdict
-    finding #4: w1's sf0.1 scan reads "3 partitions" while one task
-    carries all 600k rows). The gate uses
-    ``min(getNumPartitions(), data_partitions)``; pass ``None`` (or a
-    failed footer read) to fall back to the partition count alone.
-
-    Null keys in ``by`` all hash to one partition (the docstring
-    contract is never-null keys — every current call site passes a
-    primary-key column); nothing enforces it here because a null-check
-    would cost a pass over the data in exactly the hot path this guard
-    protects.
+    ``by``: optional high-cardinality, never-null columns to hash on
+    instead of round-robin. A keyless ``repartition(n)`` first sorts
+    every input partition locally (``sortBeforeRepartition``, so retried
+    tasks reproduce their row assignment), single-threaded on exactly
+    the fat partition this guard splits; hashing needs no such sort and
+    spreads a unique key as evenly. Keep round robin for frames whose
+    per-row cost is skewed and correlates with the id. Null keys all
+    hash to one partition; checking for them would cost a pass.
     """
-    spark = df.sparkSession
-    target = target or spark.sparkContext.defaultParallelism
-    threshold = target if when_below is None else min(when_below, target)
-    effective = df.rdd.getNumPartitions()
-    if data_partitions is not None:
-        effective = min(effective, data_partitions)
-    if effective < threshold:
-        if by:
-            return df.repartition(target, *[F.col(c) for c in by])
-        return df.repartition(target)
-    return df
+    qe = df._jdf.queryExecution()
+    if _has_exchange(df.sparkSession, qe.executedPlan()):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    tasks = qe.toRdd().getNumPartitions()
+    files = df.inputFiles() if tasks >= target else []
+    # a file per core already gives every core a row group
+    if len(files) < target:
+        tasks = min(tasks, parquet_row_groups(files) or tasks)
+    if tasks >= target:
+        return df
+    if by:
+        return df.repartition(target, *[F.col(c) for c in by])
+    return df.repartition(target)
+
+
+_JOB_NODES = (
+    "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec",
+    "org.apache.spark.sql.execution.exchange.Exchange",
+    "org.apache.spark.sql.execution.BaseSubqueryExec",
+)
+
+
+def _has_exchange(spark: SparkSession, plan) -> bool:
+    """True when executing ``plan`` would start a job before its own
+    tasks run: an adaptive plan, an exchange (shuffle or broadcast) or
+    a subquery anywhere in the tree, including inside a cached
+    relation's plan and subquery plans (``innerChildren``)."""
+    jclass = spark._jvm.java.lang.Class
+    kinds = [jclass.forName(name) for name in _JOB_NODES]
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if any(k.isInstance(node) for k in kinds):
+            return True
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
 
 
 def plan_size_bytes(df: DataFrame) -> int:

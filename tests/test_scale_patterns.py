@@ -76,40 +76,73 @@ def test_a4_entry_prunes_partitions(spark, sf_dir):
     assert {r.o_orderpriority for r in df.collect()} == {"1-URGENT", "2-HIGH"}
 
 
+def _guard_jobs(spark, df, by=None):
+    """(guard output, Spark jobs started while the guard decided)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    out = ensure_min_partitions(df, by=by)
+    return out, dag.nextJobId() - j0
+
+
 def test_ensure_min_partitions_noop_when_parallel(spark):
-    df = spark.range(1000).repartition(64)
-    out = ensure_min_partitions(df, target=32)
-    assert out is df  # guard: no extra shuffle added
-    # keyed form: same guard semantics
-    out = ensure_min_partitions(df, target=32, by=("id",))
-    assert out is df
+    # A frame whose plan already holds an exchange comes back unchanged,
+    # and deciding so runs nothing: under AQE, asking a post-groupBy
+    # frame for its partition count would execute the shuffle.
+    frames = [
+        spark.range(1000).repartition(64),
+        spark.range(10_000).groupBy((F.col("id") % 7).alias("id")).count(),
+    ]
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            for df in frames:
+                for by in (None, ("id",)):
+                    out, jobs = _guard_jobs(spark, df, by)
+                    assert out is df, f"AQE {aqe}: guard added a shuffle"
+                    assert jobs == 0, f"AQE {aqe}: guard started {jobs} job(s)"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_ensure_min_partitions_by_key_hash_partitions(spark):
-    # r15: by=<cols> hash-partitions instead of round robin — no
+    # by=<cols> hash-partitions instead of round robin: no
     # sortBeforeRepartition local sort on the fat input partition, and
-    # deterministic row→partition assignment under retry. Pin the plan
-    # node and that the guard fires only below target.
+    # deterministic row-to-partition assignment under retry. Pin the
+    # plan node and that the guard fires up to the cluster parallelism.
     df = spark.range(1000).coalesce(1)
-    out = ensure_min_partitions(df, target=8, by=("id",))
-    assert out.rdd.getNumPartitions() == 8
+    out = ensure_min_partitions(df, by=("id",))
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "RepartitionByExpression [id" in plan
     # row set unchanged
     assert out.count() == 1000
 
 
-def test_ensure_min_partitions_when_below_threshold(spark):
-    # r15: when_below=N fires the guard only under N input partitions —
-    # for map sides whose per-row cost is comparable to the shuffle's
-    # (w1's window sort), the repartition only pays at extreme
-    # parallelism gain (measured sf1: guard 1.21 vs no-guard 0.96 s).
-    two = spark.range(1000).repartition(2)
-    out = ensure_min_partitions(two, target=8, by=("id",), when_below=2)
-    assert out is two  # 2 partitions: guard must NOT fire
-    one = spark.range(1000).coalesce(1)
-    out = ensure_min_partitions(one, target=8, by=("id",), when_below=2)
-    assert out.rdd.getNumPartitions() == 8  # 1 partition: fires to target
+def test_ensure_min_partitions_fires_on_one_row_group_split(spark, tmp_path):
+    # Spark's byte-range splits of a ONE-row-group parquet file report
+    # several partitions, all but one of them empty; the guard reads the
+    # row-group count from the footers and fires anyway.
+    from data_pipeline_with_spark_spark.sources.readers import parquet_row_groups
+
+    path = str(tmp_path / "one_group")
+    spark.range(200_000).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("h")
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert parquet_row_groups(df.inputFiles()) == 1
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    target = spark.sparkContext.defaultParallelism
+    try:
+        for k in keys:
+            spark.conf.set(k, "256k")
+        # enough reported partitions that only the row groups can fire it
+        assert df.rdd.getNumPartitions() >= target
+        out, jobs = _guard_jobs(spark, df, by=("id",))
+    finally:
+        for k in keys:
+            spark.conf.unset(k)
+    assert jobs == 0 and out.rdd.getNumPartitions() == target
+    assert "RepartitionByExpression [id" in out._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_w1_map_sort_parallelized(spark):
@@ -138,36 +171,33 @@ def test_w1_map_sort_parallelized(spark):
     assert "WindowGroupLimit" in plan
 
 
-def test_ensure_min_partitions_data_partitions_gate(spark):
-    # r16 (verdict #4): Spark byte-splits a ONE-row-group file into
-    # several partitions of which all but one are EMPTY, so the
-    # when_below gate must trust the caller's data-aware count over
-    # getNumPartitions(). data_partitions=1 fires the guard even when
-    # the frame reports more partitions; a data-aware count at/above
-    # the threshold keeps it off; when_below=0 means never.
-    df = spark.range(1000).repartition(3)
-    out = ensure_min_partitions(df, target=8, by=("id",), when_below=2)
-    assert out is df  # 3 reported partitions: gate off without the hint
-    out = ensure_min_partitions(
-        df, target=8, by=("id",), when_below=2, data_partitions=1
-    )
-    assert out.rdd.getNumPartitions() == 8  # 1 row-carrying task: fires
-    out = ensure_min_partitions(
-        df, target=8, by=("id",), when_below=2, data_partitions=2
-    )
-    assert out is df  # 2 row-carrying tasks: stays off
-    one = spark.range(10).coalesce(1)
-    assert ensure_min_partitions(one, target=8, when_below=0) is one
+def test_testdata_row_groups_matches_fixture_layout(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-
-def test_testdata_row_groups_matches_fixture_layout():
-    from data_pipeline_with_spark_spark.sources.readers import testdata_row_groups
+    from data_pipeline_with_spark_spark.sources.readers import (
+        _footer_row_groups,
+        parquet_row_groups,
+        testdata_row_groups,
+    )
 
     # every small-SF fixture is a single row group (the premise of the
-    # round's single-task findings); unknown table/paths report None
+    # single-task findings); unknown paths and non-file URIs report None
     assert testdata_row_groups("/root/testdata/sf0.1", "lineitem") == 1
     assert testdata_row_groups("/root/testdata/sf0.001", "documents") == 1
     assert testdata_row_groups("/does/not/exist", "lineitem") is None
+    path, t = str(tmp_path / "t.parquet"), pa.table({"x": list(range(1000))})
+    pq.write_table(t, path)
+    assert parquet_row_groups(["file://" + path, path]) == 2
+    assert parquet_row_groups(["s3a://bucket/lineitem.parquet"]) is None
+    assert parquet_row_groups([]) is None
+    # footers are cached per (path, size, mtime): a repeat read hits the
+    # cache, a rewritten file is read again
+    hits = _footer_row_groups.cache_info().hits
+    assert parquet_row_groups([path]) == 1
+    assert _footer_row_groups.cache_info().hits == hits + 1
+    pq.write_table(t, path, row_group_size=100)
+    assert parquet_row_groups([path]) == 10
 
 
 def test_curation_pipeline_single_pass_plan(spark):
@@ -190,9 +220,12 @@ def test_curation_pipeline_single_pass_plan(spark):
     scans = len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M))
     assert scans == 1, f"documents scanned {scans}x (want 1):\n{plan[:2000]}"
     assert "WindowGroupLimit" in plan
-    # the dedup exchange hashes on md5(text), never shuffles text itself
-    m = re.search(r"Arguments: hashpartitioning\(([^)]*)\)", plan)
-    assert m and "__text_hash" in m.group(1), plan[:2000]
+    # the dedup exchange hashes on md5(text); no exchange hashes on text
+    # itself (the pattern tolerates two levels of nested parentheses)
+    nested = r"(?:[^()]|\((?:[^()]|\([^()]*\))*\))*"
+    args = [m.group(1) for m in re.finditer(rf"hashpartitioning\(({nested})\)", plan)]
+    assert any("__text_hash" in a for a in args), plan[:2000]
+    assert not [a for a in args if re.search(r"\btext#", a)], args
 
 
 def test_headline_shuffle_budgets(spark):
