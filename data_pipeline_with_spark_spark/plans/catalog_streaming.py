@@ -405,7 +405,7 @@ def _stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     the batch time-bounded join the oracle computes."""
     from data_pipeline_with_spark_spark.streaming.demo import run_stream_stream_join
 
-    out = run_stream_stream_join(spark, sf, sink_table=f"ssj_{abs(hash(sf)) % 10**8}")
+    out = run_stream_stream_join(spark, sf)
     return out.select(
         "click_id", "user_id", "click_epoch", "purchase_epoch", "p_value"
     )

@@ -1,31 +1,56 @@
-"""True Structured Streaming execution of the engine's window operators.
+"""Structured Streaming faces of the engine's batch operators.
 
-``run_tumbling_stream`` replays the events fixture through a file
-source with a watermark and materializes the tumbling aggregation into
-a memory sink — the identical logical plan as the batch
-``tumbling_window_agg``, now with incremental state. Used by pytest to
-assert batch/stream result equivalence (the strongest check available
-for non-SQL-expressible streaming state; SURVEY §2.13).
+Every entry here runs a real streaming query and is checked against its
+batch twin (pytest, and the DuckDB oracle for the catalog faces) — the
+strongest check available for non-SQL-expressible streaming state
+(SURVEY §2.13). ``run_windowed_stream`` replays the events fixture
+through a watermarked file source under any ``streaming.windows``
+builder; the custom stateful operators (``applyInPandasWithState``,
+``transformWithStateInPandas``) cover semantics the built-in window
+operators can't express; the ledger entries fold micro-batches into
+transactional ``VersionedTable`` state through ``foreachBatch``.
 
-Also includes a custom stateful operator via ``applyInPandasWithState``
-(per-user running counters) — the escape hatch for semantics the
-built-in window operators can't express.
+Runner contract: every availableNow entry drains through ``_drain``,
+and every staged source comes from ``_staged_stream``.
+
+- ``_drain`` runs a stream to completion under the availableNow
+  trigger. With a ``foreachBatch`` sink it returns nothing; otherwise
+  the rows land in a memory sink under a fresh name, come back
+  checkpointed off it, and the sink's temp view is dropped.
+- ``_staged_stream`` writes a frame as ``n_files`` parquet files and
+  yields a stream reading one file per trigger — ``n_files`` real
+  micro-batches from a single-file fixture — and deletes the staged
+  copy once the drain is done.
+
+So a build leaves no temp view and no staged copy behind. Per-batch
+progress is not returned: a ``StreamingQueryListener`` on
+``streaming_session(spark)`` sees every query these entries start.
 """
 
 from __future__ import annotations
 
+import math
+import os
+import shutil
+import threading
+import uuid
 from collections.abc import Iterable, Iterator
+from contextlib import contextmanager
+from functools import partial
+from pathlib import Path
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from data_pipeline_with_spark_spark.sources.readers import read_testdata
+from data_pipeline_with_spark_spark.streaming.windows import tumbling_window_agg
 from data_pipeline_with_spark_spark.util import exploded
 
-# Default number of state-store partitions for the demo/fixture-scale
+# Number of state-store partitions for the demo/fixture-scale
 # streaming queries below. Profiled r13 (streaming HLL, sf0.01): the
 # ~1 s/micro-batch machinery floor was dominated by the 32 state-store
 # instances (one per shuffle partition) each writing checkpoint delta
@@ -38,10 +63,11 @@ from data_pipeline_with_spark_spark.util import exploded
 # raises it at FIRST query start (the checkpoint pins it thereafter —
 # Spark cannot repartition state under an existing checkpoint).
 STREAM_STATE_PARTITIONS = 4
+_STREAM_SESSION_LOCK = threading.Lock()
 
 
-def streaming_session(spark: SparkSession, state_partitions: int | None = None) -> SparkSession:
-    """A cached child session (``newSession`` — shared SparkContext,
+def streaming_session(spark: SparkSession) -> SparkSession:
+    """The cached child session (``newSession`` — shared SparkContext,
     OWN SQLConf) for the streaming demos, with
     ``spark.sql.shuffle.partitions`` sized for their bounded state.
 
@@ -51,23 +77,68 @@ def streaming_session(spark: SparkSession, state_partitions: int | None = None) 
     harness pools entries over threads sharing one session). The child
     session isolates the conf; everything a demo reads or joins is
     (re)built from it, so no frame crosses sessions.
+
+    Idempotent: one child per parent, and a child maps to itself, so a
+    listener attached to ``streaming_session(spark)`` sees every query
+    the demos start, including a ``run_*`` composed inside another.
     """
-    n = STREAM_STATE_PARTITIONS if state_partitions is None else state_partitions
-    # idempotent: a demo invoked with an already-derived child (e.g. a
-    # run_* composed inside another run_*) must not mint a grandchild
     if getattr(spark, "_dps_is_stream_session", False):
         return spark
-    cache = getattr(spark, "_dps_stream_sessions", None)
-    if cache is None:
-        cache = {}
-        spark._dps_stream_sessions = cache
-    s = cache.get(n)
-    if s is None:
-        s = spark.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", str(n))
-        s._dps_is_stream_session = True
-        cache[n] = s
-    return s
+    with _STREAM_SESSION_LOCK:  # concurrent first calls must share one child
+        child = getattr(spark, "_dps_stream_session", None)
+        if child is None:
+            child = spark.newSession()
+            child.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+            child._dps_is_stream_session = True
+            spark._dps_stream_session = child
+    return child
+
+
+def _take_memory_sink(spark: SparkSession, name: str) -> DataFrame:
+    """Checkpoint a terminated memory sink's rows off it and drop its
+    temp view, so nothing of the query outlives the returned frame."""
+    out = spark.table(name).localCheckpoint(eager=True)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def _drain(df: DataFrame, mode: str = "append", sink=None) -> DataFrame | None:
+    """Run the streaming frame ``df`` to completion under the
+    availableNow trigger, in output ``mode``. With a ``foreachBatch``
+    ``sink`` returns None; otherwise returns the rows of a memory sink
+    named afresh per call (reusing a memory-sink name after termination
+    is undefined behaviour to lean on)."""
+    writer = df.writeStream.outputMode(mode).trigger(availableNow=True)
+    if sink is not None:
+        writer.foreachBatch(sink).start().awaitTermination()
+        return None
+    name = f"sink_{uuid.uuid4().hex}"
+    writer.format("memory").queryName(name).start().awaitTermination()
+    return _take_memory_sink(df.sparkSession, name)
+
+
+@contextmanager
+def _staged_stream(
+    spark: SparkSession, df: DataFrame, path: str, n_files: int = 4
+) -> Iterator[DataFrame]:
+    """Stage ``df`` under ``path`` as ``n_files`` parquet files and yield
+    a stream reading one file per trigger: availableNow then runs
+    ``n_files`` real micro-batches (a fixture is a single file = one
+    batch). On exit the staged copy is deleted, and its parent directory
+    too if that leaves it empty."""
+    df.repartition(n_files).write.parquet(path)
+    try:
+        yield (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(path))
+        except OSError:
+            pass
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,62 +175,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def run_tumbling_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "1 hour",
-    sink_table: str = "tumbling_stream_sink",
-) -> DataFrame:
-    """Run the tumbling aggregation as a streaming query to completion
-    (complete mode, memory sink); returns the materialized result."""
-    spark = streaming_session(spark)
-    events = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
-    agg = (
-        events.groupBy(F.window("ts", window))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp("window.start").alias("win_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink_table)
-
-
 def run_windowed_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    build,
-    sink_table: str,
-    watermark: str = "1 hour",
+    spark: SparkSession, sf_dir: str, build, watermark: str = "1 hour"
 ) -> DataFrame:
     """Run any batch window-agg builder (``streaming.windows.*``) as a
     streaming query: identical logical plan, incremental state, complete
-    mode into a memory sink. The batch face is the oracle."""
+    mode. The batch face is the oracle."""
     spark = streaming_session(spark)
     events = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
-    query = (
-        build(events)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(build(events), "complete")
 
 
 USER_STATS_SCHEMA = T.StructType(
@@ -189,9 +213,7 @@ def user_running_stats(
     )
 
 
-def run_stateful_user_stats(
-    spark: SparkSession, sf_dir: str, sink_table: str = "user_stats_sink"
-) -> DataFrame:
+def run_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandasWithState over the event stream: running per-user
     counters, update mode."""
     spark = streaming_session(spark)
@@ -203,15 +225,7 @@ def run_stateful_user_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    query = (
-        stats.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(stats, "update")
 
 
 def run_streaming_dedup(
@@ -219,7 +233,6 @@ def run_streaming_dedup(
     sf_dir: str,
     keys: tuple[str, ...] = ("user_id", "event_type"),
     watermark: str = "45 days",
-    sink_table: str = "dedup_stream_sink",
 ) -> DataFrame:
     """Streaming deduplication: dropDuplicatesWithinWatermark keeps one
     row per key combination with bounded state (keys expire after the
@@ -227,17 +240,7 @@ def run_streaming_dedup(
     this equals a global batch dropDuplicates — pytest asserts that."""
     spark = streaming_session(spark)
     events = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
-    deduped = events.dropDuplicatesWithinWatermark(list(keys))
-    query = (
-        deduped.select(*keys)
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(events.dropDuplicatesWithinWatermark(list(keys)).select(*keys))
 
 
 def run_stream_into_lakehouse(
@@ -269,51 +272,26 @@ def run_stream_into_lakehouse(
     from data_pipeline_with_spark_spark.lake.versioned import VersionedTable
 
     events = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
-    agg = (
-        events.groupBy(F.window("ts", "1 hour"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp("window.start").alias("win_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    agg = tumbling_window_agg(events, window="1 hour")
     table = VersionedTable(spark, table_path)
     table.create(spark.createDataFrame([], agg.schema))
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         table.idempotent_append(batch_df, app_id="stream_ingest", batch_id=epoch_id)
 
-    query = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(agg, "complete", sink)
     return table
 
 
-def run_stream_stream_join(
-    spark: SparkSession,
-    sf_dir: str,
-    sink_table: str = "ss_join_sink",
-    max_lag: str = "1 HOUR",
+def _stream_stream_join(
+    spark: SparkSession, sf_dir: str, how: str, max_lag: str
 ) -> DataFrame:
-    """Stream–stream inner join: clicks joined to purchases by the same
-    user within ``max_lag`` after the click. Watermarks on BOTH sides +
-    the time-range join condition let Spark bound the join state (a
-    click can be dropped from state once the purchase-side watermark
-    passes click_ts + max_lag) — unbounded state is the failure mode of
-    naive stream joins at scale. Batch face: the identical join over the
-    static events table (asserted equal in pytest)."""
+    """Clicks joined ``how`` to purchases by the same user within
+    ``max_lag`` after the click, both sides watermarked at 1 hour."""
     spark = streaming_session(spark)
-    ev = read_events_stream(spark, sf_dir)
     clicks = (
-        ev.where("event_type = 'click'")
+        read_events_stream(spark, sf_dir)
+        .where("event_type = 'click'")
         .select(
             F.col("event_id").alias("click_id"),
             "user_id",
@@ -336,7 +314,7 @@ def run_stream_stream_join(
         (clicks.user_id == purchases.p_user)
         & (purchases.p_ts > clicks.click_ts)
         & (purchases.p_ts <= clicks.click_ts + F.expr(f"INTERVAL {max_lag}")),
-        "inner",
+        how,
     ).select(
         "click_id",
         "user_id",
@@ -344,48 +322,24 @@ def run_stream_stream_join(
         F.unix_timestamp("p_ts").alias("purchase_epoch"),
         "p_value",
     )
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(joined)
 
 
-def _click_purchase_streams(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    ev = read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.where("event_type = 'click'")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .where("event_type = 'purchase'")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    return clicks, purchases
+def run_stream_stream_join(
+    spark: SparkSession, sf_dir: str, max_lag: str = "1 HOUR"
+) -> DataFrame:
+    """Stream–stream inner join: clicks joined to purchases by the same
+    user within ``max_lag`` after the click. Watermarks on BOTH sides +
+    the time-range join condition let Spark bound the join state (a
+    click can be dropped from state once the purchase-side watermark
+    passes click_ts + max_lag) — unbounded state is the failure mode of
+    naive stream joins at scale. Batch face: the identical join over the
+    static events table (asserted equal in pytest)."""
+    return _stream_stream_join(spark, sf_dir, "inner", max_lag)
 
 
 def run_stream_stream_left_join(
-    spark: SparkSession,
-    sf_dir: str,
-    sink_table: str = "ss_left_join_sink",
-    max_lag: str = "1 HOUR",
+    spark: SparkSession, sf_dir: str, max_lag: str = "1 HOUR"
 ) -> DataFrame:
     """Stream–stream LEFT OUTER join — the state-eviction variant.
 
@@ -401,30 +355,7 @@ def run_stream_stream_left_join(
     semantics a replayed deployment observes (Spark runs a final
     no-data micro-batch to flush evictable state; see
     ``noDataMicroBatches``)."""
-    spark = streaming_session(spark)
-    clicks, purchases = _click_purchase_streams(spark, sf_dir)
-    joined = clicks.join(
-        purchases,
-        (clicks.user_id == purchases.p_user)
-        & (purchases.p_ts > clicks.click_ts)
-        & (purchases.p_ts <= clicks.click_ts + F.expr(f"INTERVAL {max_lag}")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "user_id",
-        F.unix_timestamp("click_ts").alias("click_epoch"),
-        F.unix_timestamp("p_ts").alias("purchase_epoch"),
-        "p_value",
-    )
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink_table)
+    return _stream_stream_join(spark, sf_dir, "left_outer", max_lag)
 
 
 def run_rate_limited_stream(
@@ -432,7 +363,6 @@ def run_rate_limited_stream(
     rows_per_second: int = 500,
     min_batches: int = 3,
     timeout_seconds: float = 90.0,
-    sink_table: str = "rate_sink",
 ) -> DataFrame:
     """Live micro-batch ingestion from the ``rate`` source — the one
     truly unbounded demo (everything else replays a finite fixture).
@@ -475,9 +405,10 @@ def run_rate_limited_stream(
     # memory sink then holds one row per emitted update — a window
     # growing across triggers appears several times, so the returned
     # frame takes the last (max) count per second.
+    name = f"sink_{uuid.uuid4().hex}"
     query = (
         agg.writeStream.format("memory")
-        .queryName(sink_table)
+        .queryName(name)
         .outputMode("update")
         .trigger(processingTime="1 second")
         .start()
@@ -487,15 +418,13 @@ def run_rate_limited_stream(
     while _time.time() < deadline:
         lp = query.lastProgress
         n_batches = (lp["batchId"] + 1) if lp else 0
-        if n_batches >= min_batches and spark.table(sink_table).count() > 0:
+        if n_batches >= min_batches and spark.table(name).count() > 0:
             break
         _time.sleep(0.25)
     query.stop()
     query.awaitTermination()
-    out = (
-        spark.table(sink_table)
-        .groupBy("sec")
-        .agg(F.max("n_rows").alias("n_rows"))
+    out = _take_memory_sink(spark, name).groupBy("sec").agg(
+        F.max("n_rows").alias("n_rows")
     )
     return out.withColumn("n_trigger_batches", F.lit(int(n_batches)))
 
@@ -530,9 +459,7 @@ class UserStatsProcessor(StatefulProcessor):
         pass
 
 
-def run_transform_with_state(
-    spark: SparkSession, sf_dir: str, sink_table: str = "tws_sink"
-) -> DataFrame:
+def run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transformWithStateInPandas face of the per-user running stats.
 
     Requires ``google.protobuf`` at runtime (the transformWithState
@@ -549,15 +476,7 @@ def run_transform_with_state(
         outputMode="Update",
         timeMode="None",
     )
-    query = (
-        stats.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(stats, "update")
 
 
 def run_stream_matview(
@@ -589,11 +508,8 @@ def run_stream_matview(
     integer cents: sums maintained by signed add/subtract must be
     exact, not floating drift."""
     spark = streaming_session(spark)
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.lake.matview import IncrementalAggView
     from data_pipeline_with_spark_spark.lake.versioned import VersionedTable
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
     work = Path(work_dir)
     ev = read_testdata(spark, sf_dir, "events").select(
@@ -602,10 +518,6 @@ def run_stream_matview(
         # floor(x+0.5): the cross-engine half-up shared with the oracle
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("value_cents"),
     )
-    # stage as 4 files so availableNow + maxFilesPerTrigger=1 yields 4
-    # real micro-batches (the fixture is a single file = one batch)
-    staging = str(work / "staging")
-    ev.repartition(4).write.parquet(staging)
     base = VersionedTable(spark, str(work / "base")).create(
         spark.createDataFrame([], ev.schema)
     )
@@ -617,15 +529,8 @@ def run_stream_matview(
         base.idempotent_append(batch_df, app_id="mv_ingest", batch_id=epoch_id)
         view.refresh()
 
-    query = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with _staged_stream(spark, ev, str(work / "staging")) as stream:
+        _drain(stream, sink=sink)
     return base, view
 
 
@@ -649,10 +554,7 @@ _PSI_STATE_SCHEMA = T.StructType(
 
 
 def run_streaming_psi_drift(
-    spark: SparkSession,
-    sf_dir: str,
-    work_dir: str,
-    sink_table: str = "psi_stream_sink",
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Stateful streaming drift monitor — the production shape of
     ``events_psi_drift``: a REFERENCE value histogram (here the stream's
@@ -666,10 +568,6 @@ def run_streaming_psi_drift(
     smoothing), which is how the driver oracle checks a genuinely
     streaming-executed query."""
     spark = streaming_session(spark)
-    from pathlib import Path
-
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
-
     ev = read_testdata(spark, sf_dir, "events").select(
         "event_type",
         F.unix_timestamp("ts").alias("es"),
@@ -699,12 +597,7 @@ def run_streaming_psi_drift(
         else:
             ref.setdefault(r.event_type, [0] * 10)
 
-    # live side staged as 4 files for 4 real micro-batches
-    staging = str(Path(work_dir) / "psi_live")
     live = binned.where(F.col("es") > mid).select("event_type", "bin")
-    live.repartition(4).write.parquet(staging)
-
-    import math
 
     def fold(key: tuple, pdfs, state: GroupState):
         if state.exists:
@@ -737,31 +630,19 @@ def run_streaming_psi_drift(
             }
         )
 
-    stream = (
-        spark.readStream.schema(live.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    monitored = stream.groupBy("event_type").applyInPandasWithState(
-        fold,
-        outputStructType=PSI_SCHEMA,
-        stateStructType=_PSI_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    query = (
-        monitored.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with _staged_stream(spark, live, str(Path(work_dir) / "staging")) as stream:
+        sink = _drain(
+            stream.groupBy("event_type").applyInPandasWithState(
+                fold,
+                outputStructType=PSI_SCHEMA,
+                stateStructType=_PSI_STATE_SCHEMA,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            ),
+            "update",
+        )
     # updates accumulate per micro-batch: the final emission per type is
     # the row with that type's maximum live count
-    from pyspark.sql import Window
-
-    sink = spark.table(sink_table)
     w = Window.partitionBy("event_type").orderBy(F.desc("n_second_half"))
     return (
         sink.withColumn("__r", F.row_number().over(w))
@@ -770,12 +651,7 @@ def run_streaming_psi_drift(
     )
 
 
-def run_streaming_hll(
-    spark: SparkSession,
-    sf_dir: str,
-    work_dir: str,
-    sink_table: str | None = None,
-) -> DataFrame:
+def run_streaming_hll(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
     """Streaming HyperLogLog: distinct-user registers maintained as
     INCREMENTAL AGGREGATION STATE — the mergeable-sketch property
     (register = per-bucket max) is exactly what lets Spark's streaming
@@ -788,128 +664,48 @@ def run_streaming_hll(
     the max-merge property equals the batch `sketches.hll_registers`
     output bit-for-bit — how the driver oracle checks this
     streaming-executed query against batch SQL.
-
-    Hygiene: the sink name is unique per invocation (memory-sink
-    queryName reuse after termination is undefined behaviour to lean
-    on), the drained result is materialized off the sink, and the
-    staging parquet copy + sink view are removed before returning — a
-    catalog sweep that rebuilds this entry many times leaks nothing.
     """
     spark = streaming_session(spark)
-    import uuid
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.llm import sketches
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
-    if sink_table is None:
-        sink_table = f"hll_stream_sink_{uuid.uuid4().hex[:8]}"
     ev = read_testdata(spark, sf_dir, "events").select("event_type", "user_id")
-    staging = str(Path(work_dir) / "hll_live")
-    ev.repartition(4).write.parquet(staging)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    regs = (
-        sketches.hll_project(stream, "user_id", ["event_type"])
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("reg"))
-    )
-    query = (
-        regs.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return _drain_memory_sink(spark, sink_table, staging, work_dir)
+    with _staged_stream(spark, ev, str(Path(work_dir) / "staging")) as stream:
+        regs = (
+            sketches.hll_project(stream, "user_id", ["event_type"])
+            .groupBy("event_type", "bucket")
+            .agg(F.max("rho").alias("reg"))
+        )
+        return _drain(regs, "complete")
 
 
-def _drain_memory_sink(
-    spark: SparkSession, sink_table: str, staging: str, work_dir: str
-) -> DataFrame:
-    """Materialize a terminated memory sink and clean up after it: the
-    O(sketch) result is checkpointed off the sink, the sink's temp view
-    is dropped, and the staging parquet copy is deleted — nothing from
-    this invocation outlives the returned frame."""
-    import os
-    import shutil
-
-    out = spark.table(sink_table).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink_table)
-    shutil.rmtree(staging, ignore_errors=True)
-    try:
-        os.rmdir(work_dir)  # best-effort: only if the caller's dir is now empty
-    except OSError:
-        pass
-    return out
-
-
-def run_streaming_cms(
-    spark: SparkSession,
-    sf_dir: str,
-    work_dir: str,
-    sink_table: str | None = None,
-) -> DataFrame:
+def run_streaming_cms(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
     """Streaming Count-Min: token counters fold as incremental
     aggregation state (counter merge = +, the other half of the
     mergeable-sketch pair next to `run_streaming_hll`'s max). The
     documents fixture stages as 4 files → 4 real micro-batches; state is
     O(d·w) rows forever; the drained complete-mode sink equals the batch
     `sketches.cms_sketch` counters bit-for-bit because per-instance
-    counting distributes over any micro-batch split.
-
-    Same per-invocation hygiene as `run_streaming_hll`: unique sink
-    name, result checkpointed off the sink, staging copy + sink view
-    removed before returning."""
+    counting distributes over any micro-batch split."""
     spark = streaming_session(spark)
-    import uuid
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.llm import sketches
     from data_pipeline_with_spark_spark.llm.text import tokens
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
-    if sink_table is None:
-        sink_table = f"cms_stream_sink_{uuid.uuid4().hex[:8]}"
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id", "text")
-    staging = str(Path(work_dir) / "cms_live")
-    docs.repartition(4).write.parquet(staging)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    toks = exploded(stream, [], tokens("text"), "token")
     keys = F.array(
         *[sketches.cms_key(i, "token") for i in range(sketches.CMS_DEPTH)]
     )
-    counters = (
-        exploded(toks, [], keys, "key", pos="row")
-        .groupBy("row", "key")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    query = (
-        counters.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return _drain_memory_sink(spark, sink_table, staging, work_dir)
+    with _staged_stream(spark, docs, str(Path(work_dir) / "staging")) as stream:
+        toks = exploded(stream, [], tokens("text"), "token")
+        counters = (
+            exploded(toks, [], keys, "key", pos="row")
+            .groupBy("row", "key")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        return _drain(counters, "complete")
 
 
 def run_streaming_quantile(
-    spark: SparkSession,
-    sf_dir: str,
-    work_dir: str,
-    sink_table: str | None = None,
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Streaming quantile histogram: HdrHistogram-style bucket counters
     fold as incremental aggregation state (counter merge = +, same
@@ -917,44 +713,19 @@ def run_streaming_quantile(
     as 4 files → 4 real micro-batches over `value` cents; state is
     O(64·QH_SUB) rows forever; the drained complete-mode sink equals the
     batch `sketches.quantile_hist` counters bit-for-bit, so any quantile
-    is answerable from the drained sketch without reprocessing.
-
-    Same per-invocation hygiene as the other sketch streams: unique
-    sink name, result checkpointed off the sink, staging + sink view
-    removed before returning."""
+    is answerable from the drained sketch without reprocessing."""
     spark = streaming_session(spark)
-    import uuid
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.llm import sketches
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
-    if sink_table is None:
-        sink_table = f"qh_stream_sink_{uuid.uuid4().hex[:8]}"
     ev = read_testdata(spark, sf_dir, "events").select("value")
-    staging = str(Path(work_dir) / "qh_live")
-    ev.repartition(4).write.parquet(staging)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
     cents = "greatest(CAST(round(value * 100) AS BIGINT), CAST(1 AS BIGINT))"
-    hist = (
-        stream.select(F.expr(sketches.qh_bucket_sql(cents)).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    query = (
-        hist.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return _drain_memory_sink(spark, sink_table, staging, work_dir)
+    with _staged_stream(spark, ev, str(Path(work_dir) / "staging")) as stream:
+        hist = (
+            stream.select(F.expr(sketches.qh_bucket_sql(cents)).alias("bucket"))
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        return _drain(hist, "complete")
 
 
 DEDUP_LEDGER_SCHEMA = "text_hash STRING, keeper_id BIGINT, n_copies BIGINT"
@@ -1045,31 +816,15 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str, work_dir: str):
     never re-read. Returns the ledger whose read() must equal the batch
     exact-dedup aggregate (the DuckDB oracle)."""
     spark = streaming_session(spark)
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.lake.versioned import VersionedTable
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
     work = Path(work_dir)
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id", "text")
-    # stage as 4 files so availableNow + maxFilesPerTrigger=1 yields 4
-    # real micro-batches (same staging idiom as run_stream_matview)
-    staging = str(work / "staging")
-    docs.repartition(4).write.parquet(staging)
     ledger = VersionedTable(spark, str(work / "ledger")).create(
         spark.createDataFrame([], DEDUP_LEDGER_SCHEMA)
     )
-    query = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(
-            lambda batch_df, epoch_id: fold_dedup_batch(ledger, batch_df, epoch_id)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with _staged_stream(spark, docs, str(work / "staging")) as stream:
+        _drain(stream, sink=partial(fold_dedup_batch, ledger))
     return ledger
 
 
@@ -1148,7 +903,7 @@ def fold_near_dup_batch(
     from data_pipeline_with_spark_spark.lake.versioned import retry_on_conflict
     from data_pipeline_with_spark_spark.util import ensure_min_partitions
 
-    # A maxFilesPerTrigger=1 micro-batch arrives as ONE scan partition,
+    # A one-file micro-batch arrives as ONE scan partition,
     # so the fold's heavy map side (tokenize → shingle → 4×md5 minhash)
     # would run on one core; the guard hash-spreads it on doc_id and is
     # a no-op for batches that already arrive parallel.
@@ -1202,34 +957,18 @@ def run_stream_near_dup(
     the pairs table must equal the batch LSH candidate set (the DuckDB
     oracle)."""
     spark = streaming_session(spark)
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.lake.versioned import VersionedTable
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
     work = Path(work_dir)
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id", "text")
-    staging = str(work / "staging")
-    docs.repartition(4).write.parquet(staging)
     bands_ledger = VersionedTable(spark, str(work / "bands")).create(
         spark.createDataFrame([], "band_idx INT, band_hash STRING, doc_id BIGINT")
     )
     pairs_table = VersionedTable(spark, str(work / "pairs")).create(
         spark.createDataFrame([], "id_a BIGINT, id_b BIGINT")
     )
-    query = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(
-            lambda batch_df, epoch_id: fold_near_dup_batch(
-                bands_ledger, pairs_table, batch_df, epoch_id
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with _staged_stream(spark, docs, str(work / "staging")) as stream:
+        _drain(stream, sink=partial(fold_near_dup_batch, bands_ledger, pairs_table))
     return bands_ledger, pairs_table
 
 
@@ -1326,17 +1065,14 @@ def run_stream_ivfpq_ingest(
     the index, and time travel replays any historical index state.
 
     ``n_increments`` is the number of staged files and therefore of
-    micro-batches/commits (maxFilesPerTrigger=1) — batch-count
+    micro-batches/commits (one file per trigger) — batch-count
     independence is itself pinned by pytest (streamed index ≡ the
     one-append twin), so a smaller count only trades per-commit fixed
     cost, never semantics.
 
     Returns the ``VersionedIvfPqIndex``; the caller probes it."""
     spark = streaming_session(spark)
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.llm.similarity import VersionedIvfPqIndex
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
     work = Path(work_dir)
     emb = read_testdata(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1346,19 +1082,8 @@ def run_stream_ivfpq_ingest(
         base, str(work / "index"),
         n_cells=n_cells, m=m, k_codes=k_codes, pq_iters=pq_iters,
     )
-    staging = str(work / "staging")
-    arriving.repartition(n_increments).write.parquet(staging)
-    query = (
-        spark.readStream.schema(arriving.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(
-            lambda batch_df, epoch_id: idx.ingest(batch_df, batch_id=epoch_id)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with _staged_stream(spark, arriving, str(work / "staging"), n_increments) as stream:
+        _drain(stream, sink=idx.ingest)
     return idx
 
 
@@ -1384,14 +1109,11 @@ def run_stream_quality_filter(
     CTE chain). Scale shape: per batch O(batch) scoring + one append;
     nothing global is recomputed per batch."""
     spark = streaming_session(spark)
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.lake.versioned import (
         VersionedTable,
         retry_on_conflict,
     )
     from data_pipeline_with_spark_spark.llm import classifier
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
     work = Path(work_dir)
     docs = read_testdata(spark, sf_dir, "documents").select(
@@ -1407,8 +1129,6 @@ def run_stream_quality_filter(
         .agg(F.round(F.avg("quality_score"), 6))
         .collect()[0][0]
     )
-    staging = str(work / "staging")
-    docs.repartition(4).write.parquet(staging)
     curated = VersionedTable(spark, str(work / "curated")).create(
         spark.createDataFrame([], QUALITY_CURATED_SCHEMA)
     )
@@ -1425,23 +1145,13 @@ def run_stream_quality_filter(
             )
         )
 
-    query = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with _staged_stream(spark, docs, str(work / "staging")) as stream:
+        _drain(stream, sink=fold)
     return curated, thr
 
 
 def run_streaming_static_enrich(
-    spark: SparkSession,
-    sf_dir: str,
-    work_dir: str,
-    sink_table: str | None = None,
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Stream-static enrichment: the canonical dimension-join-at-ingest
     pattern — a live event stream inner-joined to a STATIC customer
@@ -1454,45 +1164,21 @@ def run_streaming_static_enrich(
 
     Counters are integer (event count + value-cents sum), so the
     complete-mode drained state equals the batch join+agg bit-for-bit.
-    Same hygiene as `run_streaming_hll`: unique sink name, result
-    checkpointed off the sink, staging copy removed.
     """
     spark = streaming_session(spark)
-    import uuid
-    from pathlib import Path
-
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
-
-    if sink_table is None:
-        sink_table = f"enrich_stream_sink_{uuid.uuid4().hex[:8]}"
     ev = read_testdata(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )
     cust = read_testdata(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    staging = str(Path(work_dir) / "enrich_live")
-    ev.repartition(4).write.parquet(staging)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    enriched = stream.join(F.broadcast(cust), "user_id")
-    agg = enriched.groupBy("c_mktsegment", "event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.sum(F.expr("CAST(round(value * 100) AS BIGINT)")).alias("value_cents"),
-    )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return _drain_memory_sink(spark, sink_table, staging, work_dir)
+    with _staged_stream(spark, ev, str(Path(work_dir) / "staging")) as stream:
+        enriched = stream.join(F.broadcast(cust), "user_id")
+        agg = enriched.groupBy("c_mktsegment", "event_type").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)")).alias("value_cents"),
+        )
+        return _drain(agg, "complete")
 
 
 NOVELTY_POSTINGS_SCHEMA = "doc_id BIGINT, sid STRING"
@@ -1555,31 +1241,15 @@ def run_stream_novelty(spark: SparkSession, sf_dir: str, work_dir: str):
     accepted state shape as the near-dup band ledger (which also keeps
     all its triples)."""
     spark = streaming_session(spark)
-    from pathlib import Path
-
     from data_pipeline_with_spark_spark.lake.versioned import VersionedTable
-    from data_pipeline_with_spark_spark.sources.readers import read_testdata
 
     work = Path(work_dir)
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id", "text")
-    staging = str(work / "staging")
-    docs.repartition(4).write.parquet(staging)
     postings = VersionedTable(spark, str(work / "postings")).create(
         spark.createDataFrame([], NOVELTY_POSTINGS_SCHEMA)
     )
-    query = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(
-            lambda batch_df, epoch_id: fold_novelty_batch(
-                postings, batch_df, epoch_id
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with _staged_stream(spark, docs, str(work / "staging")) as stream:
+        _drain(stream, sink=partial(fold_novelty_batch, postings))
     # Serve at drain through the SAME code as the batch twin
     # (dedup.novelty_from_postings) — the pinned stream == batch
     # bit-equality is enforced structurally, not by hand-synced copies.

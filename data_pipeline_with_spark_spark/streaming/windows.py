@@ -4,7 +4,7 @@ The reference pipeline is pure batch; the engine adds the streaming
 surface Spark-first: the SAME ``F.window``/``F.session_window``
 expressions run in batch (DuckDB-oracle-checkable) and under
 ``readStream`` with a watermark (true incremental state). Batch is the
-correctness gate; ``streaming.demo.run_tumbling_stream`` proves the
+correctness gate; ``streaming.demo.run_windowed_stream`` proves the
 identical plan runs incrementally.
 
 Window semantics notes (for oracle parity):

@@ -126,9 +126,7 @@ def test_streaming_hll_registers_equal_batch(spark, tmp_path):
 
     ev = read_testdata(spark, SF_SMOKE, "events")
     batch = sketches.hll_registers(ev, "user_id", ["event_type"])
-    streamed = run_streaming_hll(
-        spark, SF_SMOKE, str(tmp_path), sink_table="hll_stream_sink_test"
-    )
+    streamed = run_streaming_hll(spark, SF_SMOKE, str(tmp_path))
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
 
@@ -171,9 +169,7 @@ def test_streaming_cms_counters_equal_batch(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     batch = sketches.cms_sketch(cnt)
-    streamed = run_streaming_cms(
-        spark, SF_SMOKE, str(tmp_path), sink_table="cms_stream_sink_test"
-    )
+    streamed = run_streaming_cms(spark, SF_SMOKE, str(tmp_path))
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
 

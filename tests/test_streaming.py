@@ -18,7 +18,7 @@ def _rows(df, *order):
 
 def test_tumbling_stream_equals_batch(spark, sf_dir):
     batch = windows.tumbling_window_agg(read_testdata(spark, sf_dir, "events"))
-    stream = demo.run_tumbling_stream(spark, sf_dir)
+    stream = demo.run_windowed_stream(spark, sf_dir, windows.tumbling_window_agg)
     assert _rows(stream, "win_start") == _rows(batch, "win_start")
 
 
@@ -45,19 +45,32 @@ def test_streaming_dedup_equals_batch(spark, sf_dir):
     assert _rows(stream, "user_id", "event_type") == _rows(batch, "user_id", "event_type")
 
 
+def test_streaming_entries_leave_no_temp_views(spark, sf_dir, tmp_path):
+    # Each memory-sink drain registers a temp view on the streaming
+    # session; the entries must drop theirs, also when built twice.
+    catalog = demo.streaming_session(spark).catalog
+
+    def temp_views():
+        return {t.name for t in catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    demo.run_streaming_dedup(spark, sf_dir)
+    demo.run_streaming_dedup(spark, sf_dir)
+    demo.run_stream_stream_join(spark, sf_dir)
+    demo.run_stateful_user_stats(spark, sf_dir)
+    demo.run_streaming_psi_drift(spark, sf_dir, str(tmp_path))
+    assert temp_views() - before == set()
+
+
 def test_sliding_stream_equals_batch(spark, sf_dir):
     batch = windows.sliding_window_agg(read_testdata(spark, sf_dir, "events"))
-    stream = demo.run_windowed_stream(
-        spark, sf_dir, windows.sliding_window_agg, "sliding_stream_sink"
-    )
+    stream = demo.run_windowed_stream(spark, sf_dir, windows.sliding_window_agg)
     assert _rows(stream, "win_start") == _rows(batch, "win_start")
 
 
 def test_session_stream_equals_batch(spark, sf_dir):
     batch = windows.session_window_agg(read_testdata(spark, sf_dir, "events"))
-    stream = demo.run_windowed_stream(
-        spark, sf_dir, windows.session_window_agg, "session_stream_sink"
-    )
+    stream = demo.run_windowed_stream(spark, sf_dir, windows.session_window_agg)
     assert _rows(stream, "user_id", "sess_start") == _rows(batch, "user_id", "sess_start")
 
 
@@ -212,9 +225,7 @@ def test_streaming_psi_drift_equals_batch(spark, sf_dir, tmp_path):
 
     raw = {
         r.event_type: (r.n_first_half, r.n_second_half, r.psi)
-        for r in run_streaming_psi_drift(
-            spark, sf_dir, str(tmp_path), sink_table="psi_eq_sink"
-        ).collect()
+        for r in run_streaming_psi_drift(spark, sf_dir, str(tmp_path)).collect()
     }
     batch = {
         r.event_type: (r.n_first_half, r.n_second_half, r.psi)
@@ -252,6 +263,10 @@ def test_stream_dedup_equals_batch_and_replay_noop(spark, sf_dir, tmp_path):
     )
 
     ledger = run_stream_dedup(spark, sf_dir, str(tmp_path / "sd"))
+    # one commit per staged file on top of the create, and the staged
+    # copy is gone once the stream has drained
+    assert len(ledger.history()) == 1 + 4
+    assert not (tmp_path / "sd" / "staging").exists()
     got = {(r.text_hash, r.keeper_id, r.n_copies) for r in ledger.read().collect()}
     docs = read_testdata(spark, sf_dir, "documents")
     want = {
