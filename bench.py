@@ -1,64 +1,88 @@
 """Headline-query benchmark (driver contract).
 
-Runs the registry's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line: {"metric", "value", "unit", "queries", "sf"}.
+Times the registry's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1) and prints ONE JSON line on stdout: {"metric",
+"value", "unit", "queries", "sf", ...}, where ``value`` sums the per-query
+medians. Queries run into the noop sink (the reference's timing idiom,
+udf_complex_logic.py:64-68): the full plan executes, nothing is written
+or collected.
 
-Materialization uses the noop sink (reference's own timing idiom,
-udf_complex_logic.py:64-68): the full plan executes, no bytes written,
-no driver-side collect skew.
-
-Interpretation protocol (r15 verdict task 10): at sf0.1 every headline
-query is fixed-overhead/driver-bound — the r15 8-core scaling run read
-0.48-1.06x the 32-core time across the ENTIRE sf0.1 set, i.e. sf0.1
-timings cannot measure parallelism or data-path cost at all. sf0.1
-deltas under ~30% are therefore uninformative noise; the sf0.1 guard
-stays as a REGRESSION tripwire only, and "win" claims must come from
-the sf1 section (where data cost dominates: 8-core ratios 1.3-2.9x) or
-from a same-session interleaved A/B.
+The headline set runs first, then the scale-sensitive headline queries at
+``.scaling/sf1`` (built from sf0.1 by tools/make_scaled_fixture.py when
+missing) beside scaling extras timed at both scale factors. Each section
+runs as interleaved sweeps bracketed by box-speed anchors. The guard
+compares each query's min with ``baselines/c{cores}.json`` and reports
+under ``*_suspect_contention`` when no sweep was quiet-bracketed
+(``quiet_anchors``). sf0.1 is mostly fixed driver and
+scheduler cost: a data-path claim needs sf1 or an interleaved A/B
+(tools/ab.py). The full record also goes to
+``artifacts/BENCH_FULL_c{cores}_{UTC time}.json``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import math
 import os
 import statistics
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
+from datetime import datetime, timezone
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
 from data_pipeline_with_spark_spark.plans import all_queries, headline_queries
 from data_pipeline_with_spark_spark.session import get_spark
 from data_pipeline_with_spark_spark.sources.writers import write_noop
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+WARM_DIR = "/root/testdata/sf0.001"
+SF1_DIR = ROOT / ".scaling" / "sf1"
+RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+# An anchor reads contended when its single-thread time is this much
+# slower than the quickest anchor it is compared with, or its parallel
+# multiple falls this much short of the session's cores.
+QUIET_RATIO = 1.25
+# sf0.1→sf1 exponent past which a query's growth is flagged superlinear
+# (data grows 10×, so exp 1 is scan-bound).
+SUPERLINEAR = 1.15
+
+# Headline queries whose data-dependent cost dominates at sf1.
+SF1_SET = (
+    "tpch_q5_local_supplier_volume", "tpch_q9_product_profit",
+    "tpch_q18_large_volume_customer", "dedup_minhash_signatures",
+    "dedup_minhash_lsh_pairs", "w1_topk_per_group", "text_tfidf_top_terms",
+)
+# Not headline queries: timed at both scale factors only for their
+# exponent. Iterative graph rounds and per-micro-batch streaming cost are
+# where superlinear growth hides. phash's output is quadratic in
+# same-class doc count by design, so its ratio near 100× is expected.
+SCALING_EXTRAS = (
+    "graph_pagerank_event_flow", "graph_triangles_dup_docs",
+    "graph_ktruss_dup_edges", "graph_kcore_dup_docs",
+    "dedup_connected_components", "stream_dedup_exact",
+    "stream_near_dup_pairs", "stream_ivfpq_ingest",
+    "multimodal_phash_near_dups", "multimodal_video_motion",
+)
 
 
 def parse_sf(path: str) -> float:
-    name = Path(path).name
     try:
-        return float(name.replace("sf", ""))
+        return float(Path(path).name.replace("sf", ""))
     except ValueError:
         return -1.0
 
 
 def cpu_reference_seconds(reps: int = 200, size: int = 1_000_000) -> float:
-    """Median-of-3 wall time of a FIXED single-thread md5 workload — a
-    box-speed anchor recorded alongside the query timings.
-
-    Rationale (measured r10): the host's effective CPU speed swings up
-    to ~1.8× between minutes (shared-host contention that does NOT show
-    up as steal time), which shows up as across-the-board "regressions"
-    in cross-round comparisons. The same fixed workload measured in the
-    same process lets a reader normalize: if cpu_ref_sec is 1.6× the
-    previous round's, a uniform 1.6× query inflation is the box, not
-    the plans. Pre/post values bracket the run so a mid-run noise
-    window is visible too.
-    """
-    import hashlib
-
+    """Median-of-3 wall time of a fixed single-thread md5 workload: a
+    box-speed anchor recorded beside the query timings. The host's
+    effective CPU speed swings between minutes without showing up as
+    steal time, so a uniform inflation of every query reads as the box,
+    not the plans, when this anchor inflates with it."""
     blob = b"x" * size
     samples = []
     for _ in range(3):
@@ -69,22 +93,12 @@ def cpu_reference_seconds(reps: int = 200, size: int = 1_000_000) -> float:
     return round(statistics.median(samples), 4)
 
 
-def cpu_parallel_multiple(single_ref: float, workers: int = 32) -> float:
-    """Parallel-throughput anchor: how many single-thread workloads the
-    box completes per single-thread-workload-time when all ``workers``
-    lanes run at once (md5 releases the GIL, so threads suffice).
-
-    Why (r13 adjudication): the single-thread anchor stayed flat
-    (~0.30 s) across r11→r12 while every sf0.1 query inflated 15-35%
-    uniformly — including entries whose code hadn't changed — because
-    shared-host MULTI-core contention doesn't show up in a single-thread
-    probe. A quiet local[32] box reads ~15-20×; a heavily shared one
-    reads well under 12×. Recorded pre/post so cross-round readers can
-    attribute uniform inflation to the box.
-    """
-    import hashlib
-    from concurrent.futures import ThreadPoolExecutor
-
+def cpu_parallel_multiple(single_ref: float, workers: int) -> float:
+    """How many single-thread md5 workloads the box completes per
+    single-thread-workload time with ``workers`` lanes at once (md5
+    releases the GIL, so threads suffice). A quiet box reads close to
+    ``workers`` up to the core count; multi-core contention from other
+    tenants lowers it while the single-thread anchor stays flat."""
     blob = b"x" * 1_000_000
     reps = 40
 
@@ -98,19 +112,28 @@ def cpu_parallel_multiple(single_ref: float, workers: int = 32) -> float:
         with ThreadPoolExecutor(workers) as ex:
             list(ex.map(work, range(workers)))
         samples.append(time.perf_counter() - t0)
-    wall = statistics.median(samples)
-    # workers*reps md5s completed in `wall`; single ref does 200 in
-    # single_ref seconds -> multiple of single-thread throughput.
-    return round((workers * reps / 200) * single_ref / wall, 2)
+    # workers*reps md5s completed in the median wall; the single ref does
+    # 200 in single_ref seconds.
+    return round((workers * reps / 200) * single_ref / statistics.median(samples), 2)
+
+
+def anchor(cores: int) -> tuple[float, float]:
+    """(single-thread seconds, parallel multiple over ``cores`` lanes)."""
+    ref = cpu_reference_seconds()
+    return ref, cpu_parallel_multiple(ref, cores)
+
+
+def quiet_anchors(anchors: list[tuple[float, float]], cores: int) -> list[bool]:
+    """Which anchors read uncontended: single-thread time within
+    QUIET_RATIO of the quickest anchor in ``anchors``, and parallel
+    multiple within QUIET_RATIO of ``cores``."""
+    best = min(ref for ref, _ in anchors)
+    return [r <= best * QUIET_RATIO and p * QUIET_RATIO >= cores for r, p in anchors]
 
 
 def spark_task_floor(spark) -> float:
-    """Median wall of a 32-task no-op Spark job (count over 32 empty-ish
-    partitions) — the session's task-dispatch floor. sf0.1 headline
-    queries are 0.1-1.4 s, i.e. largely THIS floor; recording it per run
-    lets a reader split uniform sf0.1 inflation into scheduler-latency
-    vs data-path causes (r13: the adjudicated environmental inflation
-    class)."""
+    """Median wall of a 32-task no-op Spark job: the session's
+    task-dispatch floor, which most sf0.1 headline time is made of."""
     df = spark.range(0, 3200, 1, 32)
     df.count()  # warm
     samples = []
@@ -121,422 +144,151 @@ def spark_task_floor(spark) -> float:
     return round(statistics.median(samples), 4)
 
 
-def check_sf1_regressions(sf1_timings: dict, baseline: dict) -> dict:
-    """Compare fresh sf1 MINS (min over interleaved sweeps — the
-    uncontended-cost estimator) against the committed baseline
-    (SF1_BASELINE.json), whose values are themselves quiet-window mins
-    (re-frozen r11; the r8 file held medians, which gave the guard a
-    silent median/min slack). A query is a regression when it exceeds
-    ``baseline * regression_factor``. Pure so the guard is
-    unit-testable without running the bench."""
-    factor = float(baseline.get("regression_factor", 1.5))
-    refs = baseline.get("queries", {})
-    return {
+def timed_sweeps(spark, catalog, jobs, runs, cores):
+    """Run every ``(query, sf_dir)`` job once per sweep, ``runs`` sweeps.
+    Returns ({sf_dir: {query: seconds per sweep}}, anchors): one anchor
+    before each sweep and one after the last, so sweep i sits between
+    anchors i and i + 1."""
+    samples = {d: {n: [] for n, dd in jobs if dd == d} for _, d in jobs}
+    anchors = [anchor(cores)]
+    for _ in range(runs):
+        for name, sf_dir in jobs:
+            t0 = time.perf_counter()
+            write_noop(catalog[name].build(spark, sf_dir))
+            samples[sf_dir][name].append(time.perf_counter() - t0)
+        anchors.append(anchor(cores))
+    return samples, anchors
+
+
+def stat(samples: dict[str, list[float]], f, names=None) -> dict[str, float]:
+    return {n: round(f(s), 3) for n, s in samples.items() if not names or n in names}
+
+
+def check_regressions(key, mins, anchors, cores, refs, factor) -> tuple:
+    """Flag each query whose min over the section's sweeps exceeds
+    ``refs[query] * factor`` (strictly); returns (key, flags). Contention
+    only ever adds time, so the min is the uncontended-cost estimate, and
+    it is trusted when at least one sweep has a quiet anchor on both sides
+    (``quiet_anchors``): that sweep alone bounds it. With no such sweep
+    the key becomes ``{key}_suspect_contention``."""
+    quiet = quiet_anchors(anchors, cores)
+    if not any(quiet[i] and quiet[i + 1] for i in range(len(anchors) - 1)):
+        key = f"{key}_suspect_contention"
+    flags = {
         name: {"sec": sec, "baseline": refs[name]}
-        for name, sec in sf1_timings.items()
+        for name, sec in mins.items()
         if name in refs and sec > refs[name] * factor
     }
+    return key, flags
+
+
+def ensure_sf1() -> None:
+    """Build .scaling/sf1 from sf0.1 when it is missing (about 10 s of
+    DuckDB). It is written under a temporary name and renamed, so an
+    interrupted build never passes for a fixture."""
+    if SF1_DIR.is_dir():
+        return
+    sys.path.insert(0, str(ROOT / "tools"))
+    from make_scaled_fixture import build
+
+    print(f"building {SF1_DIR}", file=sys.stderr)
+    tmp = SF1_DIR.with_name(f"{SF1_DIR.name}.tmp{os.getpid()}")
+    build(out_dir=tmp)
+    tmp.rename(SF1_DIR)
 
 
 def main() -> None:
-    cpu_ref_pre = cpu_reference_seconds()
-    cpu_par_pre = cpu_parallel_multiple(cpu_ref_pre)
+    ensure_sf1()
+    sf1 = str(SF1_DIR)
     spark = get_spark("bench")
-    specs = headline_queries()
-    # JVM/codegen warmup outside the measured path: steady-state numbers,
-    # not first-query JIT. Each query runs once at sf0.001 (sub-second)
-    # so every operator's codegen + the fixture schemas are warm before
-    # anything is measured — the same steady state a long-lived cluster
-    # session is in.
-    for spec in specs.values():
-        write_noop(spec.build(spark, "/root/testdata/sf0.001"))
+    cores = spark.sparkContext.defaultParallelism
+    catalog = all_queries()
+    headline = list(headline_queries())
+    # One run of every query at sf0.001 before it is measured warms
+    # codegen and fixture schemas: a long-lived session's steady state.
+    timed_sweeps(spark, catalog, [(n, WARM_DIR) for n in headline], 1, cores)
     task_floor = spark_task_floor(spark)
-    # Median of 3 measured runs per query: host CPU steal can inflate a
-    # single run several-fold, which made cross-round comparisons noise.
-    # The median is robust to one bad run; per-query medians are what
-    # lands in the report, and the headline total is their sum.
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # INTERLEAVED sweeps (r10): the host's contention windows last
-    # minutes, so back-to-back repeats of one query all land in the same
-    # window and even the median inherits it. Sweeping the whole set
-    # `runs` times separates a query's samples by the full sweep length.
-    # The median stays the headline number (comparable with r4–r9); the
-    # MIN is also reported (one-sided noise ⇒ min estimates uncontended
-    # cost) and drives the regression guard — a regression that survives
-    # the min is real, a median-only one is a noise window.
-    sweep: dict[str, list[float]] = {name: [] for name in specs}
-    # Per-sweep quiet anchors for the sf0.1 set too (r13): the frozen
-    # SF01_BASELINE guard below needs the same quiet-bracketed-min
-    # machinery the sf1 guard has, or host contention windows read as
-    # regressions on the driver-graded surface.
-    sf01_sweep_refs: list[float] = [cpu_ref_pre]
-    for _ in range(runs):
-        for name, spec in specs.items():
-            t0 = time.perf_counter()
-            write_noop(spec.build(spark, SF_DIR))
-            sweep[name].append(time.perf_counter() - t0)
-        sf01_sweep_refs.append(cpu_reference_seconds())
-    timings = {n: round(statistics.median(s), 3) for n, s in sweep.items()}
-    timings_min = {n: round(min(s), 3) for n, s in sweep.items()}
-    total = round(sum(timings.values()), 3)
-    # Round-over-round attribution: the headline set grows as operators
-    # land (19 queries in r4 -> 22 in r5 -> ...), so the full-set total
-    # is not comparable across rounds by itself. Also report the
-    # subtotal over the frozen r4 19-query set, so "faster/slower than
-    # last round" claims stay attributable to real plan changes rather
-    # than set growth.
-    r4_set = {
-        "a2_group_avg_multikey", "curation_pipeline", "decontam_benchmark_overlap",
-        "dedup_minhash_lsh_pairs", "dedup_minhash_signatures", "j1_denormalize_star",
-        "j2_yoy_self_join", "j6_asof_join", "r1_unpivot_melt",
-        "sim_cosine_topk_bruteforce", "stream_tumbling_window", "text_profile",
-        "tpch_q18_large_volume_customer", "tpch_q1_pricing_summary",
-        "tpch_q3_top_revenue_orders", "tpch_q5_local_supplier_volume",
-        "tpch_q7_volume_shipping", "tpch_q9_product_profit", "w1_topk_per_group",
+    s01, a01 = timed_sweeps(
+        spark, catalog, [(n, SF_DIR) for n in headline], RUNS, cores
+    )
+    timed_sweeps(spark, catalog, [(n, WARM_DIR) for n in SCALING_EXTRAS], 1, cores)
+    s1, a1 = timed_sweeps(
+        spark, catalog,
+        [(n, sf1) for n in SF1_SET]
+        + [(n, d) for n in SCALING_EXTRAS for d in (SF_DIR, sf1)],
+        RUNS, cores,
+    )
+
+    queries = stat(s01[SF_DIR], statistics.median)
+    queries_min = stat(s01[SF_DIR], min)
+    sf1_queries = stat(s1[sf1], statistics.median, SF1_SET)
+    sf1_min = stat(s1[sf1], min, SF1_SET)
+    lo = {**queries_min, **stat(s1[SF_DIR], min)}
+    hi = stat(s1[sf1], min)
+    scaling = {
+        n: {"sf01_min": lo[n], "sf1_min": hi[n], "ratio": round(hi[n] / lo[n], 2),
+            "exp": round(math.log10(hi[n] / lo[n]), 2)}
+        for n in hi if lo.get(n, 0) > 0 and hi[n] > 0
     }
-    comparable = round(sum(v for k, v in timings.items() if k in r4_set), 3)
-    # Second frozen anchor: the full 24-query set as it stood at the end
-    # of round 6. If the headline set grows again, this subtotal keeps a
-    # stable full-set comparison point (the r4 set alone misses the
-    # LLM/multimodal additions of r5/r6).
-    r6_set = r4_set | {
-        "curation_overlapping_chunks", "multimodal_phash_near_dups",
-        "multimodal_video_motion", "sim_embedding_near_dups",
-        "text_tfidf_top_terms",
-    }
-    comparable_r6 = round(sum(v for k, v in timings.items() if k in r6_set), 3)
-    # sf1 anchor (r7 verdict item #1): at sf0.1 17/24 headliners are
-    # overhead-dominated, so the bench mostly measures fixed cost and
-    # real regressions hide inside the noise floor. A small frozen set
-    # of the most scale-sensitive queries re-runs at the derived sf1
-    # fixture (.scaling/sf1, built by tools/make_scaled_fixture.py;
-    # gitignored but persistent in the working tree) whenever that
-    # directory exists — data-dependent cost is ~10× larger there, so
-    # a plan regression moves the number well past host noise.
-    sf1_dir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR", str(Path(__file__).resolve().parent / ".scaling" / "sf1")
-    )
-    sf1_set = (
-        "tpch_q5_local_supplier_volume", "tpch_q9_product_profit",
-        "tpch_q18_large_volume_customer", "dedup_minhash_signatures",
-        "dedup_minhash_lsh_pairs", "w1_topk_per_group",
-        "text_tfidf_top_terms",
-    )
-    # Graph-family scaling probes (r13 verdict task 2): these are NOT
-    # headline queries (frozen cross-round comparables), but the judge's
-    # 100 TB question needs their sf0.1→sf1 growth on the per-round
-    # record — iterative label propagation and peeling rounds are
-    # exactly where superlinear cost hides. Timed rows-only (no oracle
-    # needed for wall clock) at BOTH SFs inside the same interleaved
-    # sweeps as the sf1 set.
-    scaling_extra = (
-        "graph_pagerank_event_flow", "graph_triangles_dup_docs",
-        "graph_ktruss_dup_edges", "graph_kcore_dup_docs",
-        "dedup_connected_components",
-        # r14 verdict task 4: the streaming family was the only major
-        # family with no sf0.1→sf1 exponent on record — these three are
-        # the slowest serial entries (ledger MERGE loops, LSH ledger
-        # probes, exactly-once index appends), exactly where a
-        # per-micro-batch cost that scales with TOTAL ingested data
-        # (instead of batch size) would hide. Timed rows-only at both
-        # SFs inside the same interleaved sweeps (r15 spot-read:
-        # exponents 0.05-0.22, fixed commit/job overhead dominates).
-        "stream_dedup_exact", "stream_near_dup_pairs", "stream_ivfpq_ingest",
-        # r15 verdict task 3: the multimodal attach restructure (payload
-        # generated ABOVE the exchange) trades a small local exchange for
-        # the at-scale payload-shuffle removal; these two entries put the
-        # trade on the sf1 record where payload volume is 10× larger.
-        # NOTE: phash's OUTPUT is quadratic in same-class doc count by
-        # design (near-dup pairs within 64 payload classes), so its
-        # sf0.1→sf1 ratio is expected ≈ 100× — a by-design output-volume
-        # exponent, not a plan regression (see OPTIMIZATION_r16.md).
-        "multimodal_phash_near_dups", "multimodal_video_motion",
-    )
-    sf1_timings: dict[str, float] = {}
-    sf1_timings_min: dict[str, float] = {}
-    sf1_sweep_refs: list[float] = []
-    extra_sf01_min: dict[str, float] = {}
-    extra_sf1_min: dict[str, float] = {}
-    if Path(sf1_dir).is_dir() and not os.environ.get("SPARK_GRAFT_SKIP_SF1"):
-        catalog = all_queries()
-        for name in scaling_extra:
-            write_noop(catalog[name].build(spark, "/root/testdata/sf0.001"))
-        sf1_sweep: dict[str, list[float]] = {
-            name: [] for name in (*sf1_set, *scaling_extra)
-        }
-        extra_sf01_sweep: dict[str, list[float]] = {n: [] for n in scaling_extra}
-        for _ in range(runs):
-            # Anchor per sf1 sweep (r11): the sf1 section is only ~2-3
-            # minutes at the END of the run, so a single contention
-            # window can contaminate all of a query's samples while the
-            # whole-run pre/post anchors read quiet — exactly how a
-            # quiet-bracket run still flagged 3 false regressions.
-            sf1_sweep_refs.append(cpu_reference_seconds())
-            for name in sf1_set:
-                t0 = time.perf_counter()
-                write_noop(specs[name].build(spark, sf1_dir))
-                sf1_sweep[name].append(time.perf_counter() - t0)
-            for name in scaling_extra:
-                t0 = time.perf_counter()
-                write_noop(catalog[name].build(spark, SF_DIR))
-                extra_sf01_sweep[name].append(time.perf_counter() - t0)
-                t0 = time.perf_counter()
-                write_noop(catalog[name].build(spark, sf1_dir))
-                sf1_sweep[name].append(time.perf_counter() - t0)
-        # sf1_timings keeps the FROZEN sf1_set composition (sf1_total is
-        # cross-round compared); the scaling extras live in their own
-        # dicts and only feed the scaling table below.
-        sf1_timings = {
-            n: round(statistics.median(sf1_sweep[n]), 3) for n in sf1_set
-        }
-        sf1_timings_min = {n: round(min(sf1_sweep[n]), 3) for n in sf1_set}
-        extra_sf1_min = {
-            n: round(min(sf1_sweep[n]), 3) for n in scaling_extra
-        }
-        extra_sf01_min = {
-            n: round(min(s), 3) for n, s in extra_sf01_sweep.items()
-        }
-        # Closing bracket for the last sf1 sweep (also reported as
-        # cpu_ref_post below).
-        sf1_sweep_refs.append(cpu_reference_seconds())
-    cpu_ref_post = (
-        sf1_sweep_refs[-1] if sf1_sweep_refs else cpu_reference_seconds()
-    )
+    superlinear = [n for n, r in scaling.items() if r["exp"] > SUPERLINEAR]
+    for n in superlinear:
+        print(f"superlinear: {n} {scaling[n]} (re-time it in a fresh session "
+              "with tools/scaling_probe.py before believing it)", file=sys.stderr)
     out = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(queries.values()), 3),
         "unit": "sec",
-        "queries": timings,
+        "queries": queries,
         "sf": parse_sf(SF_DIR),
-        "runs_per_query": runs,
+        "runs_per_query": RUNS,
         "aggregation": "median",
-        "r4_comparable_total": comparable,
-        "r4_comparable_n": sum(1 for k in timings if k in r4_set),
-        "r6_comparable_total": comparable_r6,
-        "r6_comparable_n": sum(1 for k in timings if k in r6_set),
-        # Box-speed anchors (see cpu_reference_seconds): compare across
-        # rounds before reading query deltas as plan changes.
-        "cpu_ref_pre": cpu_ref_pre,
-        "cpu_ref_post": cpu_ref_post,
-        # Multi-core contention anchor + Spark task-dispatch floor
-        # (r13 adjudication of the sf0.1 inflation — see
-        # cpu_parallel_multiple/spark_task_floor docstrings).
-        "cpu_par_multiple_pre": cpu_par_pre,
-        "cpu_par_multiple_post": cpu_parallel_multiple(cpu_ref_post),
+        "cores": cores,
+        "queries_min": queries_min,
+        "headline_min_total": round(sum(queries_min.values()), 3),
+        "sf1_total": round(sum(sf1_queries.values()), 3),
+        "sf1_queries": sf1_queries,
+        "sf1_n": len(sf1_queries),
+        "sf1_queries_min": sf1_min,
+        "sf1_min_total": round(sum(sf1_min.values()), 3),
+        "sf1_scaling": scaling,
+        "sf1_superlinear": superlinear,
         "spark_task_floor_sec": task_floor,
-        "sf01_sweep_refs": [round(r, 4) for r in sf01_sweep_refs],
-        # Noise-robust view: min over the interleaved sweeps.
-        "queries_min": timings_min,
-        "headline_min_total": round(sum(timings_min.values()), 3),
-        "r4_comparable_min_total": round(
-            sum(v for k, v in timings_min.items() if k in r4_set), 3
-        ),
-        "r6_comparable_min_total": round(
-            sum(v for k, v in timings_min.items() if k in r6_set), 3
-        ),
+        # [single-thread seconds, parallel multiple] around each sweep.
+        "anchors": {"sf01": a01, "sf1": a1},
     }
-    # Frozen sf0.1 regression guard (r12 verdict task 1): the driver
-    # benches THIS surface, and r12/r13 saw a uniform ~1.1-1.6x
-    # environmental inflation that a guard must not mistake for plan
-    # changes. Same machinery as the sf1 guard: MIN over
-    # quiet-bracketed sweeps vs SF01_BASELINE.json (r11 quiet mins);
-    # the baseline file documents the adjudicated environmental band
-    # and its wider factor + re-tighten protocol.
-    sf01_base_path = Path(__file__).resolve().parent / "SF01_BASELINE.json"
-    # Multi-core contention gate (r14, enables the 1.9→1.5 re-tighten):
-    # the r12 uniform inflation passed the single-thread quiet check —
-    # cpu_ref stayed ~0.30 while 32-way throughput degraded 1.5×/thread
-    # — so a guard tight enough to catch real regressions must ALSO
-    # demote to "suspect_contention" when either parallel anchor reads
-    # under the quiet floor (quiet box ≈ 15-20×).
-    PAR_QUIET = 12.0
-    par_quiet = (
-        min(cpu_par_pre, out["cpu_par_multiple_post"]) >= PAR_QUIET
-    )
-    if sf01_base_path.is_file():
-        sf01_base = json.loads(sf01_base_path.read_text())
-        HOT01 = 0.45
-        quiet01 = [
-            i
-            for i in range(runs)
-            if sf01_sweep_refs[i] < HOT01 and sf01_sweep_refs[i + 1] < HOT01
-        ]
-        if not par_quiet:
-            quiet01 = []
-        if quiet01:
-            gated01 = {
-                n: round(min(s[i] for i in quiet01), 3) for n, s in sweep.items()
-            }
-            key01, tag01 = "sf01_regressions", "sf01 regression"
-        else:
-            gated01 = timings_min
-            key01, tag01 = (
-                "sf01_regressions_suspect_contention",
-                "sf01 regression?(no quiet-bracketed sweep)",
-            )
-        sf01_regressions = check_sf1_regressions(gated01, sf01_base)
-        for name, r in sf01_regressions.items():
+    base_path = ROOT / "baselines" / f"c{cores}.json"
+    out["baseline"] = f"baselines/{base_path.name}" if base_path.is_file() else None
+    if out["baseline"] is None:
+        print(f"no baselines/{base_path.name}: no regression guard", file=sys.stderr)
+    base = json.loads(base_path.read_text()) if out["baseline"] else {}
+    for key, mins, anchors, section in (
+        ("sf01_regressions", queries_min, a01, Path(SF_DIR).name),
+        ("regressions", hi, a1, SF1_DIR.name),
+    ):
+        if section not in base:
+            continue
+        factor = base["regression_factor"]
+        key, flags = check_regressions(
+            key, mins, anchors, cores, base[section], factor
+        )
+        out[key] = flags
+        for n, r in flags.items():
             print(
-                f"{tag01}: {name} {r['sec']:.3f}s > "
-                f"{sf01_base.get('regression_factor', 1.5)}x baseline "
-                f"{r['baseline']:.3f}s (see SF01_BASELINE.json rerun protocol)",
+                f"{key}: {n} {r['sec']:.3f}s > {factor}x {r['baseline']:.3f}s "
+                f"({out['baseline']})",
                 file=sys.stderr,
             )
-        if sf01_regressions:
-            out[key01] = sf01_regressions
-    if sf1_timings:
-        out["sf1_total"] = round(sum(sf1_timings.values()), 3)
-        out["sf1_queries"] = sf1_timings
-        out["sf1_n"] = len(sf1_timings)
-        out["sf1_queries_min"] = sf1_timings_min
-        out["sf1_min_total"] = round(sum(sf1_timings_min.values()), 3)
-        # Superlinearity probe (r13 verdict task 2): per-query
-        # sf0.1→sf1 growth for every entry measured at both SFs this
-        # run — the sf1 regression set plus the graph family. Data
-        # grows 10×, so ratio ≈ 10 (exp ≈ 1) is scan-bound; the flag
-        # threshold matches tools/scaling_probe.py's SUPERLINEAR=1.15
-        # (ratio ≳ 14). Mins over interleaved sweeps on both sides, so
-        # one-sided host noise can't fabricate an exponent. A flagged
-        # entry is adjudicated by the standing fresh-subprocess rule
-        # (tools/scaling_probe.py re-times it in a clean session)
-        # before it's believed — in-session JVM aging has faked this
-        # twice. The 4-SF view with adjudication lives in SCALING.md.
-        import math
-
-        scaling: dict[str, dict] = {}
-        superlinear: list[str] = []
-        for name, hi in {**sf1_timings_min, **extra_sf1_min}.items():
-            lo = timings_min.get(name) or extra_sf01_min.get(name)
-            if not lo or lo <= 0 or hi <= 0:
-                continue
-            exp = math.log10(hi / lo)
-            scaling[name] = {
-                "sf01_min": lo,
-                "sf1_min": hi,
-                "ratio": round(hi / lo, 2),
-                "exp": round(exp, 2),
-            }
-            if exp > 1.15:
-                superlinear.append(name)
-                print(
-                    f"superlinear: {name} sf0.1→sf1 ratio "
-                    f"{hi / lo:.1f}x (exp {exp:.2f}) — adjudicate via "
-                    "tools/scaling_probe.py fresh-subprocess rule",
-                    file=sys.stderr,
-                )
-        out["sf1_scaling"] = scaling
-        out["sf1_superlinear"] = superlinear
-        # Machine-detectable regression guard (r8 verdict item #5): each
-        # sf1 timing compares against the committed SF1_BASELINE.json;
-        # exceeding baseline * regression_factor emits a loud
-        # "regression:" line on STDERR (stdout stays the one JSON line
-        # the driver contract requires) and lands in the JSON under
-        # "regressions". r10: the guard reads the MIN over interleaved
-        # sweeps, not the median — host contention windows are one-sided
-        # noise lasting minutes, and a regression that survives the min
-        # is a real plan change. Rerun protocol lives in the baseline
-        # file's _doc: reproduce across two quiet-box runs before
-        # believing it; accept deliberate changes by updating the
-        # baseline in the same commit as the plan change.
-        out["sf1_sweep_refs"] = sf1_sweep_refs
-        base_path = Path(__file__).resolve().parent / "SF1_BASELINE.json"
-        if base_path.is_file():
-            base = json.loads(base_path.read_text())
-            # The min is only a valid uncontended-cost estimator over
-            # sweeps BRACKETED by quiet anchors (a window opening
-            # mid-sweep defeats a start-only check — observed: one
-            # quiet-started sweep, two hot, and false flags survived).
-            # sf1_sweep_refs holds runs+1 anchors: sweep i is bracketed
-            # by refs[i] and refs[i+1].
-            HOT = 0.45
-            quiet_idx = [
-                i
-                for i in range(runs)
-                if sf1_sweep_refs[i] < HOT and sf1_sweep_refs[i + 1] < HOT
-            ]
-            if not par_quiet:  # same multi-core gate as the sf01 guard
-                quiet_idx = []
-            if quiet_idx:
-                gated = {
-                    n: round(min(s[i] for i in quiet_idx), 3)
-                    for n, s in sf1_sweep.items()
-                }
-                key, tag = "regressions", "regression"
-            else:
-                gated = sf1_timings_min
-                key, tag = (
-                    "regressions_suspect_contention",
-                    "regression?(no quiet-bracketed sf1 sweep)",
-                )
-            regressions = check_sf1_regressions(gated, base)
-            for name, r in regressions.items():
-                print(
-                    f"{tag}: {name} {r['sec']:.3f}s > "
-                    f"{base.get('regression_factor', 1.5)}x baseline "
-                    f"{r['baseline']:.3f}s (see SF1_BASELINE.json rerun protocol)",
-                    file=sys.stderr,
-                )
-            if regressions:
-                out[key] = regressions
-    _write_full_artifact(out)
-    # Compact cross-round summary line (r15 verdict task 2): the final
-    # full JSON line outgrew the 2,000-char tail some consumers keep, so
-    # a tail-only reader lost the ENTIRE per-query record (that is how
-    # PERF_r15 lost the r14 comparison). Emit a <2,000-char line first —
-    # headline totals + per-query MINS (the regression-guard estimator)
-    # — so any truncating consumer still has the essentials, then the
-    # unchanged full line LAST (the driver contract line; same timed
-    # region, same methodology, strictly additive).
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "headline_min_total": out["headline_min_total"],
-        "queries_min": out["queries_min"],
-    }
-    if "sf1_min_total" in out:
-        compact["sf1_min_total"] = out["sf1_min_total"]
-        compact["sf1_queries_min"] = out["sf1_queries_min"]
-    line = json.dumps(compact)
-    if len(line) > 1990:  # keep the tail-survivability guarantee
-        compact.pop("queries_min", None)
-        line = json.dumps(compact)
-    print(line)
+    write_artifact(out, cores)
     print(json.dumps(out))
 
 
-def _write_full_artifact(out: dict) -> None:
-    """Persist the COMPLETE bench output under artifacts/ (r14 verdict
-    task 3): the driver's ``BENCH_r{N}.json`` keeps only a 2,000-char
-    tail, which truncates the per-query medians/mins the next round's
-    judge needs for cross-round ratios. The round number is inferred
-    from the newest driver-written round file (+1 = the round in
-    progress). r15 verdict task 2: the filename carries the core count
-    and a per-round run ordinal — the r15 scheme overwrote one file per
-    round, so the driver's own 8-CPU scaling run clobbered the 32-core
-    record."""
-    import re
-
-    root = Path(__file__).resolve().parent
-    rounds = [0]
-    for pat in ("BENCH_r*.json", "CORRECTNESS_r*.json",
-                "artifacts/BENCH_r*.json", "artifacts/CORRECTNESS_r*.json"):
-        for f in root.glob(pat):
-            m = re.fullmatch(r"(?:BENCH|CORRECTNESS)_r(\d+)", f.stem)
-            if m:
-                rounds.append(int(m.group(1)))
-    rnd = max(rounds) + 1
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    adir = root / "artifacts"
-    ordinals = [0]
-    for f in adir.glob(f"BENCH_FULL_r{rnd}_c{cpus}_run*.json"):
-        m = re.fullmatch(rf"BENCH_FULL_r{rnd}_c{cpus}_run(\d+)", f.stem)
-        if m:
-            ordinals.append(int(m.group(1)))
-    dest = adir / f"BENCH_FULL_r{rnd}_c{cpus}_run{max(ordinals) + 1}.json"
+def write_artifact(out: dict, cores: int) -> None:
+    """Keep the complete record under artifacts/: consumers of the driver
+    line may keep only its tail."""
+    stamp = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%SZ")
+    dest = ROOT / "artifacts" / f"BENCH_FULL_c{cores}_{stamp}.json"
     try:
-        adir.mkdir(exist_ok=True)
+        dest.parent.mkdir(exist_ok=True)
         dest.write_text(json.dumps(out, indent=1) + "\n")
         print(f"full bench artifact: {dest}", file=sys.stderr)
     except OSError as e:  # never let artifact IO break the driver line

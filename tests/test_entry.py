@@ -113,33 +113,62 @@ def test_registry_rotation_policy():
 
 
 def test_sf1_regression_guard_logic():
-    # The bench's machine-detectable regression guard (SF1_BASELINE.json
-    # + bench.check_sf1_regressions): flags only entries past
-    # baseline * factor, ignores unknown queries, honors a custom factor.
+    # The bench's regression guard (baselines/c{cores}.json +
+    # bench.check_regressions): flags only entries past baseline *
+    # factor, ignores unknown queries, honors a custom factor.
     import json
     from pathlib import Path
 
-    from bench import check_sf1_regressions
+    from bench import check_regressions
 
-    base = {
-        "regression_factor": 1.5,
-        "queries": {"q_fast": 1.0, "q_slow": 2.0},
-    }
+    refs = {"q_fast": 1.0, "q_slow": 2.0}
+
+    def guard(mins, factor=1.5):
+        quiet = [(0.40, 3.8), (0.41, 3.7)]  # one quiet sweep on 4 cores
+        return check_regressions("regressions", mins, quiet, 4, refs, factor)
+
     # within budget: 1.5x exactly is NOT a regression (strict >)
-    assert check_sf1_regressions({"q_fast": 1.5, "q_slow": 2.9}, base) == {}
-    flagged = check_sf1_regressions(
-        {"q_fast": 1.51, "q_slow": 1.0, "q_unknown": 99.0}, base
-    )
-    assert flagged == {"q_fast": {"sec": 1.51, "baseline": 1.0}}
+    assert guard({"q_fast": 1.5, "q_slow": 2.9}) == ("regressions", {})
+    flagged = guard({"q_fast": 1.51, "q_slow": 1.0, "q_unknown": 99.0})
+    assert flagged == ("regressions", {"q_fast": {"sec": 1.51, "baseline": 1.0}})
     # custom factor honored
-    tight = dict(base, regression_factor=1.1)
-    assert "q_slow" in check_sf1_regressions({"q_slow": 2.3}, tight)
-    # the committed baseline file parses and covers the frozen sf1 set
-    committed = json.loads(
-        (Path(__file__).resolve().parent.parent / "SF1_BASELINE.json").read_text()
-    )
-    assert committed["regression_factor"] == 1.5
-    assert "dedup_minhash_lsh_pairs" in committed["queries"]
+    assert "q_slow" in guard({"q_slow": 2.3}, factor=1.1)[1]
+    # the committed baselines, one per core count, parse and cover both
+    # sections; the 32-core file keeps the factor it was frozen with
+    base_dir = Path(__file__).resolve().parent.parent / "baselines"
+    files = {p.stem: json.loads(p.read_text()) for p in base_dir.glob("c*.json")}
+    assert {"c4", "c32"} <= set(files)
+    for committed in files.values():
+        assert committed["regression_factor"] > 1
+        assert "tpch_q1_pricing_summary" in committed["sf0.1"]
+        assert "dedup_minhash_lsh_pairs" in committed["sf1"]
+    assert files["c32"]["regression_factor"] == 1.5
+
+
+def test_quiet_rule_on_4_core_anchors():
+    # bench.quiet_anchors decides from the session's cores and the run's
+    # own anchors (single-thread seconds, parallel multiple). The guard
+    # trusts a section's mins when one sweep has a quiet anchor on both
+    # sides, and demotes the section otherwise.
+    from bench import check_regressions, quiet_anchors
+
+    q, slow, short = (0.40, 3.8), (0.55, 3.8), (0.40, 2.1)
+    # 0.55 s is more than 1.25x the quickest anchor; 2.1 is more than
+    # 1.25x short of 4 cores
+    assert quiet_anchors([q, (0.42, 3.6), slow, short], 4) == [True, True, False, False]
+    mins, refs = {"q": 1.6}, {"q": 1.0}
+
+    def guard(anchors):
+        return check_regressions("regressions", mins, anchors, 4, refs, 1.5)
+
+    flags = {"q": {"sec": 1.6, "baseline": 1.0}}
+    # a quiet bracket counts, though the sweep before it was contended
+    assert guard([short, q, q]) == ("regressions", flags)
+    # a sweep hot only at its closing anchor is excluded
+    assert guard([q, slow]) == ("regressions_suspect_contention", flags)
+    assert guard([q, short]) == ("regressions_suspect_contention", flags)
+    # all hot: the section is demoted
+    assert guard([short] * 4) == ("regressions_suspect_contention", flags)
 
 
 def test_cpu_reference_probe_is_fast_and_positive():

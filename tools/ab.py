@@ -1,20 +1,17 @@
-"""Interleaved A/B probe between two repo roots (r16).
+"""Interleaved A/B of one query between two repo roots.
 
-Why fresh subprocesses: r16 touches OPERATOR INTERNALS (graph.py,
-dedup.py, streaming folds), so the old arm can't be reconstructed from
-the new modules inside one session the way r15's probes did. Each
-sample spawns a fresh python against one root (old = a git worktree at
-the pre-round HEAD, new = the working tree), builds a session, warms
-the query once at sf0.001 (codegen + schema), then times ``runs``
-noop-sink materializations at the probe SF. Arms alternate per rep so
-host contention windows hit both equally (the r10 interleaving rule);
-a cpu anchor is recorded per rep. Session startup is OUTSIDE the timed
-region; both arms pay identical cold-JVM costs, so the comparison is
-fair even though absolute numbers sit above the bench's warm ones.
+Each sample spawns a fresh python against one root (old = a checkout of
+the commit to compare against, new = this repo), builds a session, warms
+the query once at sf0.001 (codegen and schemas), then times ``runs``
+noop-sink materializations at the probe SF. Fresh processes let the arms
+differ anywhere, operator internals included. Arms alternate per rep so
+host contention windows hit both equally, and a bench.py box-speed
+anchor is recorded per rep. Session startup is outside the timed region
+and both arms pay the same cold-JVM cost, so the comparison is fair
+even though absolute numbers sit above the bench's warm ones.
 
 Usage:
-  python tools/probe_ab_r16.py <query> [reps] [runs_per_rep] [sf_dir]
-  (old root defaults to /tmp/r16_head, new root to this repo)
+  python tools/ab.py <old_root> <query> [reps] [runs_per_rep] [sf_dir]
 """
 
 from __future__ import annotations
@@ -23,8 +20,11 @@ import json
 import statistics
 import subprocess
 import sys
-import time
 from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from bench import cpu_reference_seconds
 
 CHILD = r"""
 import json, sys, time
@@ -45,16 +45,6 @@ print(json.dumps(samples))
 """
 
 
-def cpu_ref() -> float:
-    import hashlib
-
-    blob = b"x" * 1_000_000
-    t0 = time.perf_counter()
-    for _ in range(200):
-        hashlib.md5(blob)
-    return round(time.perf_counter() - t0, 3)
-
-
 def run_arm(root: str, query: str, sf_dir: str, runs: int) -> list[float]:
     out = subprocess.run(
         [sys.executable, "-c", CHILD, root, query, sf_dir, str(runs)],
@@ -69,17 +59,16 @@ def run_arm(root: str, query: str, sf_dir: str, runs: int) -> list[float]:
 
 
 def main() -> None:
-    query = sys.argv[1]
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
-    old_root = "/tmp/r16_head"
+    old_root, query = sys.argv[1], sys.argv[2]
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 4
+    runs = int(sys.argv[4]) if len(sys.argv) > 4 else 3
+    sf_dir = sys.argv[5] if len(sys.argv) > 5 else "/root/testdata/sf0.1"
     new_root = str(Path(__file__).resolve().parent.parent)
     arms: dict[str, list[float]] = {"old": [], "new": []}
     anchors: list[float] = []
     for rep in range(reps):
         for name, root in (("old", old_root), ("new", new_root)):
-            anchors.append(cpu_ref())
+            anchors.append(cpu_reference_seconds())
             s = run_arm(root, query, sf_dir, runs)
             arms[name].extend(s)
             print(f"rep{rep} {name}: {s} (anchor {anchors[-1]})", flush=True)

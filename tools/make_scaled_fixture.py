@@ -36,9 +36,9 @@ from pathlib import Path
 
 import duckdb
 
-SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-OUT = sys.argv[2] if len(sys.argv) > 2 else str(Path(__file__).resolve().parents[1] / ".scaling" / "sf1")
-FACTOR = int(sys.argv[3]) if len(sys.argv) > 3 else 10
+SRC = "/root/testdata/sf0.1"
+OUT = Path(__file__).resolve().parents[1] / ".scaling" / "sf1"
+FACTOR = 10
 
 # (table, {column: stride}) — stride 0 keeps the column; key columns
 # shift by copy_index * stride.
@@ -62,8 +62,10 @@ def _rotated(c: int) -> str:
     return LETTERS[r:] + LETTERS[:r]
 
 
-def scale_table(con: duckdb.DuckDBPyConnection, table: str, out_dir: Path) -> None:
-    src = f"{SRC}/{table}.parquet"
+def scale_table(
+    con: duckdb.DuckDBPyConnection, src_dir: str, table: str, out_dir: Path, factor: int
+) -> None:
+    src = f"{src_dir}/{table}.parquet"
     cols = [r[0] for r in con.sql(f"DESCRIBE SELECT * FROM '{src}'").fetchall()]
     strides = OFFSETS.get(table, {})
     exprs = []
@@ -74,7 +76,7 @@ def scale_table(con: duckdb.DuckDBPyConnection, table: str, out_dir: Path) -> No
             # per-copy letter bijection; copy 0 is the original text
             cases = " ".join(
                 f"WHEN {c} THEN translate(text, '{LETTERS}', '{_rotated(c)}')"
-                for c in range(1, FACTOR)
+                for c in range(1, factor)
             )
             exprs.append(f"CASE c {cases} ELSE text END AS text")
         elif table == "events" and col == "event_type":
@@ -99,24 +101,24 @@ def scale_table(con: duckdb.DuckDBPyConnection, table: str, out_dir: Path) -> No
             exprs.append(col)
     out = out_dir / f"{table}.parquet"
     con.sql(
-        f"COPY (SELECT {', '.join(exprs)} FROM '{src}', range({FACTOR}) t(c)"
+        f"COPY (SELECT {', '.join(exprs)} FROM '{src}', range({factor}) t(c)"
         f" ORDER BY c) TO '{out}' (FORMAT parquet)"
     )
     n = con.sql(f"SELECT count(*) FROM '{out}'").fetchall()[0][0]
-    print(f"{table}: {n} rows -> {out}")
+    print(f"{table}: {n} rows -> {out}", file=sys.stderr)
 
 
-def main() -> None:
-    out_dir = Path(OUT)
+def build(src_dir: str = SRC, out_dir: Path = OUT, factor: int = FACTOR) -> None:
+    out_dir = Path(out_dir)
     out_dir.mkdir(parents=True, exist_ok=True)
     con = duckdb.connect()
     for table in SINGLE_COPY:
-        con.sql(f"COPY (SELECT * FROM '{SRC}/{table}.parquet') TO "
+        con.sql(f"COPY (SELECT * FROM '{src_dir}/{table}.parquet') TO "
                 f"'{out_dir / (table + '.parquet')}' (FORMAT parquet)")
-        print(f"{table}: copied unchanged")
+        print(f"{table}: copied unchanged", file=sys.stderr)
     for table in OFFSETS:
-        scale_table(con, table, out_dir)
+        scale_table(con, src_dir, table, out_dir, factor)
 
 
 if __name__ == "__main__":
-    main()
+    build(*sys.argv[1:3], *map(int, sys.argv[3:4]))

@@ -28,6 +28,8 @@ from data_pipeline_with_spark_spark.plans import all_queries, headline_queries
 from data_pipeline_with_spark_spark.session import get_spark
 from data_pipeline_with_spark_spark.sources.writers import write_noop
 
+from bench import QUIET_RATIO, SUPERLINEAR, anchor, quiet_anchors
+
 # Iterative-lineage entries probed IN ADDITION to the headliners (r9
 # verdict item #5): unrolled-round lineage (Lloyd, GD, BPE merges) is
 # exactly where superlinear blowup hides — a per-round plan that grows
@@ -135,7 +137,6 @@ _DERIVED_SF1 = Path(__file__).resolve().parents[1] / ".scaling" / "sf1"
 if (_DERIVED_SF1 / "lineitem.parquet").exists():
     SFS.append(str(_DERIVED_SF1))
 
-SUPERLINEAR = 1.15
 RUNS = 3  # min-of-N per cell (one-sided-noise de-noising; see below)
 
 # Hand-written sections below this marker in SCALING.md are carried
@@ -145,6 +146,7 @@ MANUAL_MARKER = "<!-- MANUAL -->"
 
 def main() -> None:
     spark = get_spark("scaling_probe")
+    cores = spark.sparkContext.defaultParallelism
     specs = dict(headline_queries())
     catalog = all_queries()
     for name in ITERATIVE_EXTRA:
@@ -154,7 +156,7 @@ def main() -> None:
         write_noop(spec.build(spark, SFS[0]))
     # Noise discipline (r10): the shared host's effective CPU speed
     # swings up to ~2x in MULTI-MINUTE contention windows that don't
-    # register as steal time (measured via bench.cpu_reference_seconds).
+    # register as steal time (measured via bench.anchor).
     # Two consequences for the probe:
     #   1. MIN, not median — contamination is strictly one-sided (noise
     #      only ever ADDS time), so the minimum is the consistent
@@ -168,44 +170,42 @@ def main() -> None:
     #      times separates a cell's samples by many minutes; one of them
     #      lands quiet with high probability.
     samples: dict[tuple[str, str], list[float]] = {}
-    # cpu_ref anchor per (run, sf) sweep: the probe's sf1 sweeps take
+    # Box-speed anchor per (run, sf) sweep: the probe's sf1 sweeps take
     # minutes, so contention windows can swallow ALL of a cell's samples
     # and survive the min — the anchors let a reader (and the flagged-
     # entry adjudication below) tell a contaminated sweep from a plan
     # change without re-running anything.
-    from bench import cpu_reference_seconds
+    sweep_refs: list[tuple[int | str, str, tuple[float, float]]] = []
 
-    sweep_refs: list[tuple[int | str, str, float]] = []
-
-    def sweep(run_label: int | str, sf: str) -> float:
-        ref = cpu_reference_seconds()
-        sweep_refs.append((run_label, Path(sf).name, ref))
+    def sweep(run_label: int | str, sf: str) -> None:
+        sweep_refs.append((run_label, Path(sf).name, anchor(cores)))
         for name, spec in specs.items():
             t0 = time.perf_counter()
             write_noop(spec.build(spark, sf))
             samples.setdefault((name, sf), []).append(
                 time.perf_counter() - t0
             )
-        return ref
 
     for run in range(RUNS):
         for sf in SFS:
             sweep(run, sf)
 
     # Auto-adjudication (r11): if EVERY sweep of a scale column started
-    # hot (anchor >= HOT_REF), all of that column's samples may sit in
-    # one contention window and the min is contaminated — exactly the
-    # failure that fabricated two SUPERLINEAR flags this round. Wait
-    # out the window (bounded) and take ONE extra quiet sweep of just
-    # that column; if the box never quiets, the hot anchors in the
-    # header document the residual risk.
-    HOT_REF, QUIET_WAITS, WAIT_S = 0.45, 6, 60
+    # on a contended anchor (bench.quiet_anchors against the run's other
+    # anchors), all of that column's samples may sit in one contention
+    # window and the min is contaminated — the failure that once
+    # fabricated two SUPERLINEAR flags. Wait out the window (bounded) and
+    # take ONE extra quiet sweep of just that column; if the box never
+    # quiets, the anchors in the header document the residual risk.
+    QUIET_WAITS, WAIT_S = 6, 60
     for sf in SFS:
-        col = [r for lbl, name, r in sweep_refs if name == Path(sf).name]
-        if min(col) < HOT_REF:
+        anchors = [a for *_, a in sweep_refs]
+        quiet = quiet_anchors(anchors, cores)
+        col = [q for q, (_, name, _) in zip(quiet, sweep_refs) if name == Path(sf).name]
+        if any(col):
             continue
         for _ in range(QUIET_WAITS):
-            if cpu_reference_seconds() < HOT_REF:
+            if quiet_anchors(anchors + [anchor(cores)], cores)[-1]:
                 sweep("requiet", sf)
                 break
             time.sleep(WAIT_S)
@@ -228,19 +228,21 @@ def main() -> None:
     lines = [
         "# SCALING — headline query wall clock vs scale factor",
         "",
-        "Generated by `python tools/scaling_probe.py` on local[32]; every cell",
+        f"Generated by `python tools/scaling_probe.py` on local[{cores}]; every cell",
         f"is the MIN of {RUNS} runs (host contention is one-sided noise; the",
-        "minimum estimates uncontended cost — see the r10 box-noise notes in",
-        "NEXT.md and the cpu_ref anchors in bench.py).",
+        "minimum estimates uncontended cost — see the anchors in bench.py).",
         "",
-        "Per-sweep cpu_ref anchors (quiet ≈ 0.34 s; a sweep at ≥ ~0.5 s is a",
-        "contention window and its cells overstate cost — if EVERY sweep of a",
-        "scale column is hot, even the min is contaminated):",
+        "Per-sweep anchors, single-thread md5 seconds / parallel multiple over",
+        f"{cores} lanes (bench.quiet_anchors: contended when {QUIET_RATIO}x slower",
+        f"than the quickest anchor or {QUIET_RATIO}x short of {cores}; a contended",
+        "sweep's cells overstate cost — if EVERY sweep of a scale column is",
+        "contended, even the min is contaminated):",
         "",
         "    "
         + "  ".join(
-            (f"run{r}" if isinstance(r, int) else str(r)) + f" {sf}: {ref:.2f}"
-            for r, sf, ref in sweep_refs
+            (f"run{r}" if isinstance(r, int) else str(r))
+            + f" {sf}: {ref:.2f}/{par:.1f}"
+            for r, sf, (ref, par) in sweep_refs
         ),
         "",
         "Data grows 10× per column"
@@ -274,10 +276,10 @@ def main() -> None:
     # vs 2.9-3.6 s fresh at cpu_ref 0.35-0.40 — in-session aging from a
     # ~600-plan sweep, not plan scaling). So the probe now re-times
     # every flagged entry in a FRESH subprocess (warm at the smallest
-    # SF, then min-of-3 at the top two SFs, cpu_ref-bracketed) and
+    # SF, then min-of-3 at the top two SFs, anchor-bracketed) and
     # demotes the flag when the fresh exponent is clean on a quiet box.
     # A flag that SURVIVES this is a real plan defect by construction.
-    adjudication: dict[str, tuple[float, float, float]] = {}
+    adjudication: dict[str, tuple[float, list, list]] = {}
     if flagged and n >= 2:
         import json as _json
         import subprocess
@@ -288,17 +290,18 @@ def main() -> None:
                 "from data_pipeline_with_spark_spark.session import get_spark\n"
                 "from data_pipeline_with_spark_spark.plans import all_queries\n"
                 "from data_pipeline_with_spark_spark.sources.writers import write_noop\n"
-                "from bench import cpu_reference_seconds\n"
+                "from bench import anchor\n"
                 f"spark = get_spark('scaling_adjudicate')\n"
+                "cores = spark.sparkContext.defaultParallelism\n"
                 f"spec = all_queries()[{name!r}]\n"
-                "ref0 = cpu_reference_seconds()\n"
+                "a0 = anchor(cores)\n"
                 f"write_noop(spec.build(spark, {SFS[0]!r}))\n"
                 "lo, hi = [], []\n"
                 "for _ in range(3):\n"
                 f"    t0 = time.perf_counter(); write_noop(spec.build(spark, {SFS[-2]!r})); lo.append(time.perf_counter() - t0)\n"
                 "for _ in range(3):\n"
                 f"    t0 = time.perf_counter(); write_noop(spec.build(spark, {SFS[-1]!r})); hi.append(time.perf_counter() - t0)\n"
-                "print(json.dumps({'lo': lo, 'hi': hi, 'ref0': ref0, 'ref1': cpu_reference_seconds()}))\n"
+                "print(json.dumps({'lo': lo, 'hi': hi, 'a0': a0, 'a1': anchor(cores)}))\n"
             )
             try:
                 proc = subprocess.run(
@@ -313,11 +316,14 @@ def main() -> None:
                 print(f"adjudication subprocess failed for {name}: {ex}")
                 continue
             fexp = math.log10(min(data["hi"]) / min(data["lo"]))
-            adjudication[name] = (fexp, data["ref0"], data["ref1"])
+            adjudication[name] = (fexp, data["a0"], data["a1"])
 
+    run_anchors = [tuple(a) for *_, a in sweep_refs]
     demoted: dict[str, float] = {}
-    for name, (fexp, ref0, ref1) in adjudication.items():
-        if fexp <= SUPERLINEAR and max(ref0, ref1) < HOT_REF:
+    for name, (fexp, a0, a1) in adjudication.items():
+        if fexp <= SUPERLINEAR and all(
+            quiet_anchors(run_anchors + [tuple(a0), tuple(a1)], cores)[-2:]
+        ):
             demoted[name] = fexp
     flagged = [(nm, e) for nm, e in flagged if nm not in demoted]
 
@@ -343,10 +349,10 @@ def main() -> None:
         for name, exp in flagged:
             note = ""
             if name in adjudication:
-                fexp, r0, r1 = adjudication[name]
+                fexp, a0, a1 = adjudication[name]
                 note = (
-                    f" (fresh-session recheck exp {fexp:.2f} at cpu_ref"
-                    f" {r0:.2f}/{r1:.2f} did NOT clear it)"
+                    f" (fresh-session recheck exp {fexp:.2f} at anchors"
+                    f" {a0} -> {a1} did NOT clear it)"
                 )
             lines.append(
                 f"- `{name}`: exp {exp:.2f} — investigate before scale-up.{note}"
@@ -359,15 +365,14 @@ def main() -> None:
         lines.append("## Fresh-session adjudication")
         lines.append("")
         lines.append("In-probe flags re-timed in a fresh subprocess (warm at the")
-        lines.append("smallest SF, min-of-3 at the top two SFs, cpu_ref-bracketed);")
+        lines.append("smallest SF, min-of-3 at the top two SFs, anchor-bracketed);")
         lines.append("a clean fresh exponent on a quiet box demotes the flag to")
         lines.append("aging-suspect — in-session JVM aging, not plan scaling:")
         lines.append("")
         for name, fexp in sorted(demoted.items()):
-            _, r0, r1 = adjudication[name]
+            _, a0, a1 = adjudication[name]
             lines.append(
-                f"- `{name}`: fresh exp {fexp:.2f}"
-                f" (cpu_ref {r0:.2f} -> {r1:.2f})"
+                f"- `{name}`: fresh exp {fexp:.2f} (anchors {a0} -> {a1})"
             )
     lines.append("")
     # Preserve hand-written analysis: everything at or below the MANUAL
@@ -401,7 +406,7 @@ def main() -> None:
                     nm: round(e, 3) for nm, e in demoted.items()
                 },
                 "sweep_refs": [
-                    [str(r), sf, round(ref, 4)] for r, sf, ref in sweep_refs
+                    [str(r), sf, *a] for r, sf, a in sweep_refs
                 ],
             },
             indent=1,
