@@ -124,15 +124,19 @@ def test_sf1_regression_guard_logic():
     refs = {"q_fast": 1.0, "q_slow": 2.0}
 
     def guard(mins, factor=1.5):
+        base = {"regression_factor": factor, "sf1": refs}
         quiet = [(0.40, 3.8), (0.41, 3.7)]  # one quiet sweep on 4 cores
-        return check_regressions("regressions", mins, quiet, 4, refs, factor)
+        return check_regressions(base, [("regressions", "sf1", mins, quiet)])
 
     # within budget: 1.5x exactly is NOT a regression (strict >)
-    assert guard({"q_fast": 1.5, "q_slow": 2.9}) == ("regressions", {})
+    assert guard({"q_fast": 1.5, "q_slow": 2.9}) == {"regressions": {}}
     flagged = guard({"q_fast": 1.51, "q_slow": 1.0, "q_unknown": 99.0})
-    assert flagged == ("regressions", {"q_fast": {"sec": 1.51, "baseline": 1.0}})
+    assert flagged == {"regressions": {"q_fast": {"sec": 1.51, "baseline": 1.0}}}
     # custom factor honored
-    assert "q_slow" in guard({"q_slow": 2.3}, factor=1.1)[1]
+    assert "q_slow" in guard({"q_slow": 2.3}, factor=1.1)["regressions"]
+    # a section the baseline file lacks is not guarded
+    sections = [("regressions", "sf1", {"q_fast": 9.0}, [(0.40, 3.8)] * 2)]
+    assert check_regressions({}, sections) == {}
     # the committed baselines, one per core count, parse and cover both
     # sections; the 32-core file keeps the factor it was frozen with
     base_dir = Path(__file__).resolve().parent.parent / "baselines"
@@ -146,29 +150,47 @@ def test_sf1_regression_guard_logic():
 
 
 def test_quiet_rule_on_4_core_anchors():
-    # bench.quiet_anchors decides from the session's cores and the run's
-    # own anchors (single-thread seconds, parallel multiple). The guard
-    # trusts a section's mins when one sweep has a quiet anchor on both
-    # sides, and demotes the section otherwise.
+    # bench.quiet_anchors judges each anchor (single-thread seconds,
+    # parallel multiple over the session's cores) against the whole
+    # run's anchors. The guard trusts a section's mins when one of its
+    # sweeps has a quiet anchor on both sides, and demotes it otherwise.
     from bench import check_regressions, quiet_anchors
 
     q, slow, short = (0.40, 3.8), (0.55, 3.8), (0.40, 2.1)
     # 0.55 s is more than 1.25x the quickest anchor; 2.1 is more than
-    # 1.25x short of 4 cores
-    assert quiet_anchors([q, (0.42, 3.6), slow, short], 4) == [True, True, False, False]
-    mins, refs = {"q": 1.6}, {"q": 1.0}
+    # 1.25x short of the highest multiple
+    assert quiet_anchors([q, (0.42, 3.6), slow, short]) == [True, True, False, False]
+    # md5 lanes scale to about 19 of 32 cores: a steady 32-core run is quiet
+    assert quiet_anchors([(0.30, 19.0), (0.31, 18.0)]) == [True, True]
 
-    def guard(anchors):
-        return check_regressions("regressions", mins, anchors, 4, refs, 1.5)
+    base = {"regression_factor": 1.5, "sf0.1": {"q": 1.0}, "sf1": {"q": 1.0}}
+    mins, flags = {"q": 1.6}, {"q": {"sec": 1.6, "baseline": 1.0}}
 
-    flags = {"q": {"sec": 1.6, "baseline": 1.0}}
+    def guard(a01, a1=(q, q, q)):
+        return check_regressions(base, [
+            ("sf01_regressions", "sf0.1", mins, list(a01)),
+            ("regressions", "sf1", mins, list(a1)),
+        ])
+
     # a quiet bracket counts, though the sweep before it was contended
-    assert guard([short, q, q]) == ("regressions", flags)
+    assert guard([short, q, q]) == {"sf01_regressions": flags, "regressions": flags}
     # a sweep hot only at its closing anchor is excluded
-    assert guard([q, slow]) == ("regressions_suspect_contention", flags)
-    assert guard([q, short]) == ("regressions_suspect_contention", flags)
-    # all hot: the section is demoted
-    assert guard([short] * 4) == ("regressions_suspect_contention", flags)
+    assert "sf01_regressions_suspect_contention" in guard([q, slow])
+    assert "sf01_regressions_suspect_contention" in guard([q, short])
+    # all hot, each anchor on one axis: both sections are demoted
+    assert guard([short, slow] * 2, [slow, short]) == {
+        "sf01_regressions_suspect_contention": flags,
+        "regressions_suspect_contention": flags,
+    }
+    # one contention window over the whole sf1 section: its anchors agree
+    # with each other but read 1.5x the sf0.1 ones, so sf1 is demoted
+    assert guard([q] * 4, [(0.60, 3.8)] * 4) == {
+        "sf01_regressions": flags,
+        "regressions_suspect_contention": flags,
+    }
+    # a 32-core run's steady anchors keep both guards
+    c32 = [(0.30, 19.0), (0.31, 18.0), (0.29, 17.2)]
+    assert set(guard(c32, c32)) == {"sf01_regressions", "regressions"}
 
 
 def test_cpu_reference_probe_is_fast_and_positive():

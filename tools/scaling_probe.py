@@ -200,12 +200,12 @@ def main() -> None:
     QUIET_WAITS, WAIT_S = 6, 60
     for sf in SFS:
         anchors = [a for *_, a in sweep_refs]
-        quiet = quiet_anchors(anchors, cores)
+        quiet = quiet_anchors(anchors)
         col = [q for q, (_, name, _) in zip(quiet, sweep_refs) if name == Path(sf).name]
         if any(col):
             continue
         for _ in range(QUIET_WAITS):
-            if quiet_anchors(anchors + [anchor(cores)], cores)[-1]:
+            if quiet_anchors(anchors + [anchor(cores)])[-1]:
                 sweep("requiet", sf)
                 break
             time.sleep(WAIT_S)
@@ -234,7 +234,7 @@ def main() -> None:
         "",
         "Per-sweep anchors, single-thread md5 seconds / parallel multiple over",
         f"{cores} lanes (bench.quiet_anchors: contended when {QUIET_RATIO}x slower",
-        f"than the quickest anchor or {QUIET_RATIO}x short of {cores}; a contended",
+        f"than the quickest anchor or {QUIET_RATIO}x short of the highest; a contended",
         "sweep's cells overstate cost — if EVERY sweep of a scale column is",
         "contended, even the min is contaminated):",
         "",
@@ -322,7 +322,7 @@ def main() -> None:
     demoted: dict[str, float] = {}
     for name, (fexp, a0, a1) in adjudication.items():
         if fexp <= SUPERLINEAR and all(
-            quiet_anchors(run_anchors + [tuple(a0), tuple(a1)], cores)[-2:]
+            quiet_anchors(run_anchors + [tuple(a0), tuple(a1)])[-2:]
         ):
             demoted[name] = fexp
     flagged = [(nm, e) for nm, e in flagged if nm not in demoted]
