@@ -23,7 +23,9 @@ time travel, restore) with an explicitly simpler physical design:
   the file-list in its log entry, so appends reference prior
   directories without copying;
 - the log is one JSON file per version (``_log/{N:020d}.json``),
-  committed via atomic rename — single-writer, crash-safe;
+  published put-if-absent — ``link(2)``, or an O_EXCL create where
+  the filesystem cannot hardlink — so concurrent writers race for a
+  version slot and the loser gets ``CommitConflict``; crash-safe;
 - DML is file-granular like Delta's matched-file rewrite: UPDATE /
   DELETE intersect the predicate with hive path values + parquet
   footer min/max stats and rewrite only the intersecting files,
@@ -52,7 +54,7 @@ import tempfile
 import threading
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import reduce
 from operator import and_
 from pathlib import Path
@@ -320,8 +322,8 @@ class VersionedTable:
         call of an operation fixes the slot; every later call in the
         same operation (data-dir naming, DV-dir naming, the commit
         itself) returns the SAME slot even if _latest() re-armed the
-        token in between (e.g. the dv='carry' / properties reads inside
-        _commit_write). If a concurrent writer takes the pinned slot
+        token in between (e.g. the base-snapshot read before the
+        commit is built). If a concurrent writer takes the pinned slot
         meanwhile, the put-if-absent publish fails LOUDLY with a
         conflict instead of silently committing past it. Cleared after
         every publish attempt."""
@@ -729,26 +731,13 @@ class VersionedTable:
             if not props:
                 return self
         latest = self._latest()
-        merged = {**(latest.properties or {}), **props}
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="SET TBLPROPERTIES",
-                params={"properties": dict(props)},
-                data_dirs=latest.data_dirs,
-                schema_json=latest.schema_json,
-                partition_by=latest.partition_by,
-                constraints=latest.constraints,
-                generated=latest.generated,
-                column_mapping=latest.column_mapping,
-                dv_paths=latest.dv_paths,
-                properties=merged,
-                stats_refs=latest.stats_refs,
-                cdf={"mode": "empty"},  # metadata-only: no row changes
-            )
+        return self._commit(
+            latest,
+            "SET TBLPROPERTIES",
+            {"properties": dict(props)},
+            cdf={"mode": "empty"},  # metadata-only: no row changes
+            properties={**(latest.properties or {}), **props},
         )
-        return self
 
     def _dv_enabled(self) -> bool:
         return (
@@ -811,28 +800,19 @@ class VersionedTable:
         )
         d = self._write_data(with_ids, self._next_version(), self.partition_columns())
         latest = self._latest()
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ROW TRACKING BACKFILL",
-                params={"rows_backfilled": acc},
-                data_dirs=[d],
-                schema_json=json.dumps(with_ids.schema.jsonValue()),
-                partition_by=latest.partition_by,
-                constraints=latest.constraints,
-                generated=latest.generated,
-                column_mapping=latest.column_mapping,
-                dv_paths=None,  # backfill materialized a clean snapshot
-                properties={
-                    **(latest.properties or {}),
-                    "delta.enableRowTracking": "true",
-                    self._HWM_PROP: str(acc),
-                },
-                stats_refs=self._stats_for_commit([d]),
-            )
+        return self._commit(
+            latest,
+            "ROW TRACKING BACKFILL",
+            {"rows_backfilled": acc},
+            data_dirs=[d],
+            schema_json=json.dumps(with_ids.schema.jsonValue()),
+            dv_paths=None,  # backfill materialized a clean snapshot
+            properties={
+                **(latest.properties or {}),
+                "delta.enableRowTracking": "true",
+                self._HWM_PROP: str(acc),
+            },
         )
-        return self
 
     def disable_row_tracking(self) -> "VersionedTable":
         """Real disable path (so enable/disable round-trips): flip the
@@ -848,23 +828,7 @@ class VersionedTable:
         props = dict(latest.properties or {})
         props["delta.enableRowTracking"] = "false"
         props.pop(self._HWM_PROP, None)
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="DISABLE ROW TRACKING",
-                params={},
-                data_dirs=latest.data_dirs,
-                schema_json=latest.schema_json,
-                partition_by=latest.partition_by,
-                constraints=latest.constraints,
-                generated=latest.generated,
-                column_mapping=latest.column_mapping,
-                dv_paths=latest.dv_paths,
-                properties=props,
-                stats_refs=latest.stats_refs,
-            )
-        )
+        self._commit(latest, "DISABLE ROW TRACKING", {}, properties=props)
         # tracking is now off, so the drop guard admits the column
         return self.drop_column(self.ROW_ID_COL)
 
@@ -994,16 +958,12 @@ class VersionedTable:
     def _stats_dir(self) -> Path:
         return self.log_dir / "_stats"
 
-    def _stats_for_commit(self, data_dirs: list[str]) -> dict:
-        """Stats refs for a commit's snapshot: carried dirs reuse the
-        previous commit's pointer (no I/O), each NEW dir gets one
-        write-once stats file holding its files' footer stats."""
+    def _stats_for_commit(self, data_dirs: list[str], prev: dict) -> dict:
+        """Stats refs for a commit's snapshot: dirs already in the base
+        commit's refs ``prev`` reuse its pointer (no I/O), each NEW dir
+        gets one write-once stats file holding its files' footer stats."""
         import hashlib
 
-        try:
-            prev = self._latest().stats_refs or {}
-        except FileNotFoundError:
-            prev = {}
         out: dict[str, str] = {}
         for d in data_dirs:
             if d in prev:
@@ -1162,22 +1122,12 @@ class VersionedTable:
             props[self._NOT_NULL_PROP] = json.dumps(sorted(cols))
         else:
             props.pop(self._NOT_NULL_PROP, None)
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation=op,
-                params={"column": col},
-                data_dirs=latest.data_dirs,
-                schema_json=json.dumps(new_schema.jsonValue()),
-                partition_by=latest.partition_by,
-                constraints=latest.constraints,
-                generated=latest.generated,
-                column_mapping=latest.column_mapping,
-                dv_paths=latest.dv_paths,
-                properties=props or None,
-                stats_refs=latest.stats_refs,
-            )
+        self._commit(
+            latest,
+            op,
+            {"column": col},
+            schema_json=json.dumps(new_schema.jsonValue()),
+            properties=props or None,
         )
 
     def set_not_null(self, col: str) -> "VersionedTable":
@@ -1213,50 +1163,24 @@ class VersionedTable:
             raise ValueError(f"constraint {name!r} already exists")
         self._check_constraints(self.read(), {name: expr})
         cons[name] = expr
-        latest = self._latest()
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ADD CONSTRAINT",
-                params={"name": name, "expr": expr},
-                data_dirs=latest.data_dirs,
-                schema_json=latest.schema_json,
-                partition_by=latest.partition_by,
-                constraints=cons,
-                generated=latest.generated,
-                column_mapping=latest.column_mapping,
-                dv_paths=latest.dv_paths,
-                properties=latest.properties,
-                stats_refs=latest.stats_refs,
-                cdf={"mode": "empty"},
-            )
+        return self._commit(
+            self._latest(),
+            "ADD CONSTRAINT",
+            {"name": name, "expr": expr},
+            cdf={"mode": "empty"},
+            constraints=cons,
         )
-        return self
 
     def drop_constraint(self, name: str) -> "VersionedTable":
         cons = self.constraints()
         cons.pop(name, None)
-        latest = self._latest()
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="DROP CONSTRAINT",
-                params={"name": name},
-                data_dirs=latest.data_dirs,
-                schema_json=latest.schema_json,
-                partition_by=latest.partition_by,
-                constraints=cons or None,
-                generated=latest.generated,
-                column_mapping=latest.column_mapping,
-                dv_paths=latest.dv_paths,
-                properties=latest.properties,
-                stats_refs=latest.stats_refs,
-                cdf={"mode": "empty"},
-            )
+        return self._commit(
+            self._latest(),
+            "DROP CONSTRAINT",
+            {"name": name},
+            cdf={"mode": "empty"},
+            constraints=cons or None,
         )
-        return self
 
     def rename_column(self, old: str, new: str) -> "VersionedTable":
         """ALTER TABLE … RENAME COLUMN (Delta column mapping, 'name'
@@ -1310,27 +1234,18 @@ class VersionedTable:
                 for f in schema.fields
             ]
         )
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="RENAME COLUMN",
-                params={"old": old, "new": new, "physical": physical},
-                data_dirs=latest.data_dirs,
-                schema_json=json.dumps(new_schema.jsonValue()),
-                partition_by=[new if c == old else c for c in (latest.partition_by or [])]
-                or None,
-                constraints=latest.constraints,
-                generated=latest.generated,
-                column_mapping=mapping,
-                dv_paths=latest.dv_paths,
-                properties=props or None,
-                # stats are keyed by PHYSICAL names, which a rename
-                # never changes — carry verbatim
-                stats_refs=latest.stats_refs,
-            )
+        # stats are keyed by PHYSICAL names, which a rename never
+        # changes — the carried stats refs stay valid
+        return self._commit(
+            latest,
+            "RENAME COLUMN",
+            {"old": old, "new": new, "physical": physical},
+            schema_json=json.dumps(new_schema.jsonValue()),
+            partition_by=[new if c == old else c for c in (latest.partition_by or [])]
+            or None,
+            column_mapping=mapping,
+            properties=props or None,
         )
-        return self
 
     def _guard_column_refs(self, col: str, action: str) -> None:
         """Reject DDL on a column referenced by stored SQL text (CHECK
@@ -1382,24 +1297,13 @@ class VersionedTable:
         new_schema = T.StructType(
             list(schema.fields) + [T.StructField(name, _parse_datatype_string(dtype))]
         )
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ADD COLUMN",
-                params={"name": name, "type": dtype, "physical": physical},
-                data_dirs=latest.data_dirs,
-                schema_json=json.dumps(new_schema.jsonValue()),
-                partition_by=latest.partition_by,
-                constraints=latest.constraints,
-                generated=latest.generated,
-                column_mapping=mapping or None,
-                dv_paths=latest.dv_paths,
-                properties=latest.properties,
-                stats_refs=latest.stats_refs,
-            )
+        return self._commit(
+            latest,
+            "ADD COLUMN",
+            {"name": name, "type": dtype, "physical": physical},
+            schema_json=json.dumps(new_schema.jsonValue()),
+            column_mapping=mapping or None,
         )
-        return self
 
     def drop_column(self, name: str) -> "VersionedTable":
         """ALTER TABLE … DROP COLUMN (metadata-only, Delta column
@@ -1442,24 +1346,14 @@ class VersionedTable:
             else:
                 props.pop(self._NOT_NULL_PROP)
         new_schema = T.StructType([f for f in schema.fields if f.name != name])
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="DROP COLUMN",
-                params={"name": name},
-                data_dirs=latest.data_dirs,
-                schema_json=json.dumps(new_schema.jsonValue()),
-                partition_by=latest.partition_by,
-                constraints=latest.constraints,
-                generated=latest.generated,
-                column_mapping=mapping or None,
-                dv_paths=latest.dv_paths,
-                properties=props or None,
-                stats_refs=latest.stats_refs,
-            )
+        return self._commit(
+            latest,
+            "DROP COLUMN",
+            {"name": name},
+            schema_json=json.dumps(new_schema.jsonValue()),
+            column_mapping=mapping or None,
+            properties=props or None,
         )
-        return self
 
     def _mapping(self, version: int | None = None) -> dict[str, str]:
         """Logical -> physical column names for a snapshot, identity-
@@ -1501,44 +1395,53 @@ class VersionedTable:
     # so their recorded change feed is empty by construction.
     _CONTENT_PRESERVING_OPS = frozenset({"OPTIMIZE", "CLUSTER", "REORG"})
 
-    def _commit_write(
+    def _commit(
         self,
-        df: DataFrame,
+        base: Commit | None,
         operation: str,
         params: dict,
-        data_dirs: list[str],
-        dv_paths: object = "carry",
-        properties: dict | None = None,
         cdf: dict | None = None,
+        **changes,
     ) -> "VersionedTable":
-        # "carry" keeps the previous commit's deletion vectors (partial
-        # rewrites: untouched files still need their tombstones); a
-        # full-snapshot rewrite passes None — every surviving row was
-        # re-materialized, so tombstones are obsolete.
-        dv = self._latest().dv_paths if dv_paths == "carry" else (dv_paths or None)
+        """The one commit builder: publish ``base`` — the snapshot the
+        operation builds on — at the next slot, with this operation's
+        ``operation``/``params``/``cdf`` and the Commit fields it owns
+        (``changes``). Every other field carries forward unchanged,
+        deletion vectors included: partial rewrites keep the tombstones
+        their untouched files need, and a full-snapshot rewrite passes
+        ``dv_paths=None`` (every surviving row was re-materialized).
+        ``stats_refs`` follows ``data_dirs``: carried while the dirs are
+        the base's, resolved by ``_stats_for_commit`` when they change.
+        ``base=None`` seeds version 0 of a new table."""
+        if base is None:
+            base = Commit(
+                version=0, timestamp=0.0, operation="", params={}, data_dirs=[], schema_json=""
+            )
+        dirs = changes.get("data_dirs", base.data_dirs)
+        if dirs != base.data_dirs:
+            changes["stats_refs"] = self._stats_for_commit(dirs, base.stats_refs or {})
         if cdf is None and operation in self._CONTENT_PRESERVING_OPS:
             cdf = {"mode": "empty"}
         self._write_commit(
-            Commit(
+            replace(
+                base,
                 version=self._next_version(),
                 timestamp=time.time(),
                 operation=operation,
                 params=params,
-                data_dirs=data_dirs,
-                schema_json=json.dumps(df.schema.jsonValue()),
-                partition_by=self.partition_columns() or None,
-                constraints=self.constraints() or None,
-                generated=self.generated_columns() or None,
-                column_mapping=self._latest().column_mapping,
-                dv_paths=dv,
-                properties=(
-                    properties if properties is not None else self._latest().properties
-                ),
-                stats_refs=self._stats_for_commit(data_dirs),
                 cdf=cdf,
+                **changes,
             )
         )
         return self
+
+    def _claim_new_table(self) -> None:
+        """Create-style ops start from an empty log: refuse an existing
+        table, and make the empty log this thread's base snapshot so the
+        first commit takes slot 0 or raises ``CommitConflict``."""
+        if self.log_dir.exists() and any(self.log_dir.glob("*.json")):
+            raise FileExistsError(f"table already exists at {self.root}")
+        self._snapshot_version, self._pinned_slot = -1, None
 
     def _write_cdf_feed(self, feed: DataFrame, version: int) -> dict:
         """Write one commit's explicit change feed (rows + _change_type)
@@ -1573,8 +1476,7 @@ class VersionedTable:
         (name -> {"start", "step"}): the engine mints the values on
         every write (callers must OMIT the column), unique and
         increasing but not contiguous — Delta's identity contract."""
-        if self.log_dir.exists() and any(self.log_dir.glob("*.json")):
-            raise FileExistsError(f"table already exists at {self.root}")
+        self._claim_new_table()
         missing = set(partition_by or []) - set(df.columns)
         if missing:
             raise ValueError(f"partition columns {sorted(missing)} not in schema")
@@ -1605,21 +1507,16 @@ class VersionedTable:
         d = self._write_data(df, 0, partition_by)
         if specs:
             props = self._advance_identity(props, id_obs, specs)
-        self._write_commit(
-            Commit(
-                version=0,
-                timestamp=time.time(),
-                operation="CREATE",
-                params={"partition_by": partition_by or []},
-                data_dirs=[d],
-                schema_json=json.dumps(df.schema.jsonValue()),
-                partition_by=list(partition_by) if partition_by else None,
-                generated=dict(generated) if generated else None,
-                properties=props,
-                stats_refs=self._stats_for_commit([d]),
-            )
+        return self._commit(
+            None,
+            "CREATE",
+            {"partition_by": partition_by or []},
+            data_dirs=[d],
+            schema_json=json.dumps(df.schema.jsonValue()),
+            partition_by=list(partition_by) if partition_by else None,
+            generated=dict(generated) if generated else None,
+            properties=props,
         )
-        return self
 
     @classmethod
     def convert_from_parquet(
@@ -1629,75 +1526,18 @@ class VersionedTable:
         rewriting data (the log references the original directory)."""
         df = spark.read.parquet(parquet_path)
         table = cls(spark, table_path)
-        if table.log_dir.exists() and any(table.log_dir.glob("*.json")):
-            raise FileExistsError(f"table already exists at {table_path}")
-        table._write_commit(
-            Commit(
-                version=0,
-                timestamp=time.time(),
-                operation="CONVERT",
-                params={"source": parquet_path},
-                data_dirs=[parquet_path],
-                schema_json=json.dumps(df.schema.jsonValue()),
-                stats_refs=table._stats_for_commit([parquet_path]),
-            )
+        table._claim_new_table()
+        return table._commit(
+            None,
+            "CONVERT",
+            {"source": parquet_path},
+            data_dirs=[parquet_path],
+            schema_json=json.dumps(df.schema.jsonValue()),
         )
-        return table
 
     def append(self, df: DataFrame, merge_schema: bool = False) -> "VersionedTable":
         """D6/D7 append with schema enforcement / opt-in evolution."""
-        rt = self._row_tracking_enabled()
-        if rt and self.ROW_ID_COL in df.columns:
-            raise ValueError(f"{self.ROW_ID_COL} is engine-managed; drop it")
-        specs = self.identity_columns()
-        clash = set(specs) & set(df.columns)
-        if clash:
-            raise ValueError(
-                f"identity columns {sorted(clash)} are GENERATED ALWAYS; "
-                "omit them from the data"
-            )
-        merged = self._enforce(df.schema, merge_schema)
-        aligned = self._align(df, merged)
-        self._check_constraints(aligned)
-        obs = None
-        if rt:
-            aligned, obs = self._assign_fresh_row_ids(
-                aligned.drop(self.ROW_ID_COL)
-            )
-        id_obs: dict[str, Observation] = {}
-        if specs:
-            aligned, id_obs = self._assign_identity(
-                aligned.drop(*specs), specs
-            )
-        version = self._next_version()
-        d = self._write_data(aligned, version, self.partition_columns())
-        props = self._latest().properties
-        if obs is not None:
-            max_id = obs.get["max_id"]
-            if max_id is not None:
-                props = {**(props or {}), self._HWM_PROP: str(int(max_id) + 1)}
-        if id_obs:
-            props = self._advance_identity(dict(props or {}), id_obs, specs)
-        dirs = self._latest().data_dirs + [d]
-        self._write_commit(
-            Commit(
-                version=version,
-                timestamp=time.time(),
-                operation="APPEND",
-                params={"mergeSchema": merge_schema},
-                data_dirs=dirs,
-                schema_json=json.dumps(merged.jsonValue()),
-                partition_by=self.partition_columns() or None,
-                constraints=self.constraints() or None,
-                generated=self.generated_columns() or None,
-                column_mapping=self._latest().column_mapping,
-                dv_paths=self._latest().dv_paths,
-                properties=props,
-                stats_refs=self._stats_for_commit(dirs),
-                cdf={"mode": "insert_dirs", "dirs": [d]},
-            )
-        )
-        return self
+        return self._append(df, merge_schema)
 
     def idempotent_append(
         self,
@@ -1727,45 +1567,54 @@ class VersionedTable:
                 break
         if batch_id <= last:
             return False
+        self._append(df, merge_schema, txn_app=app_id, txn_batch=batch_id)
+        return True
+
+    def _append(self, df: DataFrame, merge_schema: bool, **txn) -> "VersionedTable":
+        """The one append body; ``txn`` is the exactly-once marker
+        ``idempotent_append`` records in the commit's params."""
         rt = self._row_tracking_enabled()
         if rt and self.ROW_ID_COL in df.columns:
             raise ValueError(f"{self.ROW_ID_COL} is engine-managed; drop it")
+        specs = self.identity_columns()
+        clash = set(specs) & set(df.columns)
+        if clash:
+            raise ValueError(
+                f"identity columns {sorted(clash)} are GENERATED ALWAYS; "
+                "omit them from the data"
+            )
         merged = self._enforce(df.schema, merge_schema)
         aligned = self._align(df, merged)
         self._check_constraints(aligned)
         obs = None
         if rt:
-            aligned, obs = self._assign_fresh_row_ids(aligned.drop(self.ROW_ID_COL))
+            aligned, obs = self._assign_fresh_row_ids(
+                aligned.drop(self.ROW_ID_COL)
+            )
+        id_obs: dict[str, Observation] = {}
+        if specs:
+            aligned, id_obs = self._assign_identity(
+                aligned.drop(*specs), specs
+            )
         version = self._next_version()
-        d = self._write_data(aligned, version, self.partition_columns())
-        props = self._latest().properties
+        base = self._latest()
+        d = self._write_data(aligned, version, base.partition_by)
+        props = base.properties
         if obs is not None:
             max_id = obs.get["max_id"]
             if max_id is not None:
                 props = {**(props or {}), self._HWM_PROP: str(int(max_id) + 1)}
-        self._write_commit(
-            Commit(
-                version=version,
-                timestamp=time.time(),
-                operation="APPEND",
-                params={
-                    "mergeSchema": merge_schema,
-                    "txn_app": app_id,
-                    "txn_batch": batch_id,
-                },
-                data_dirs=self._latest().data_dirs + [d],
-                schema_json=json.dumps(merged.jsonValue()),
-                partition_by=self.partition_columns() or None,
-                constraints=self.constraints() or None,
-                generated=self.generated_columns() or None,
-                column_mapping=self._latest().column_mapping,
-                dv_paths=self._latest().dv_paths,
-                properties=props,
-                stats_refs=self._stats_for_commit(self._latest().data_dirs + [d]),
-                cdf={"mode": "insert_dirs", "dirs": [d]},
-            )
+        if id_obs:
+            props = self._advance_identity(dict(props or {}), id_obs, specs)
+        return self._commit(
+            base,
+            "APPEND",
+            {"mergeSchema": merge_schema, **txn},
+            cdf={"mode": "insert_dirs", "dirs": [d]},
+            data_dirs=base.data_dirs + [d],
+            schema_json=json.dumps(merged.jsonValue()),
+            properties=props,
         )
-        return True
 
     def _dml_target_files(self, where: str) -> tuple[list[str], list[str], T.StructType]:
         """File-granular DML planning: intersect the predicate with hive
@@ -1834,13 +1683,7 @@ class VersionedTable:
             "num_affected_rows": 0,
         }
         if not selected:  # predicate can't match any file: metadata-only
-            return self._commit_write(
-                self.spark.createDataFrame([], schema),
-                "UPDATE",
-                params,
-                self._latest().data_dirs,  # snapshot unchanged, dirs verbatim
-                cdf={"mode": "empty"},
-            )
+            return self._commit(self._latest(), "UPDATE", params, cdf={"mode": "empty"})
         src = self._df_for_paths(selected, schema, self._mapping(), self._dv())
         updated = apply_set(src)
         self._check_constraints(updated)
@@ -1877,13 +1720,15 @@ class VersionedTable:
                 apply_set(src.where(hit)).withColumn("_change_type", F.lit(post_tag))
             )
         )
-        return self._commit_write(
-            updated,
+        base = self._latest()
+        return self._commit(
+            base,
             "UPDATE",
             params,
-            untouched + [d],
-            dv_paths="carry" if untouched else None,
             cdf=self._write_cdf_feed(feed, version),
+            data_dirs=untouched + [d],
+            schema_json=json.dumps(updated.schema.jsonValue()),
+            dv_paths=base.dv_paths if untouched else None,
         )
 
     def delete(self, where: str, use_dv: bool | None = None) -> "VersionedTable":
@@ -1911,13 +1756,7 @@ class VersionedTable:
             "num_affected_rows": 0,
         }
         if not selected:
-            return self._commit_write(
-                self.spark.createDataFrame([], schema),
-                "DELETE",
-                params,
-                self._latest().data_dirs,
-                cdf={"mode": "empty"},
-            )
+            return self._commit(self._latest(), "DELETE", params, cdf={"mode": "empty"})
         if use_dv:
             src = self._df_for_paths(
                 selected, schema, self._mapping(), self._dv(), with_meta=True
@@ -1954,13 +1793,8 @@ class VersionedTable:
                 # with one more anti-join input until REORG. Drop it —
                 # the commit is metadata-only.
                 shutil.rmtree(dv_dir, ignore_errors=True)
-                return self._commit_write(
-                    self.spark.createDataFrame([], schema),
-                    "DELETE",
-                    params,
-                    self._latest().data_dirs,
-                    dv_paths="carry",
-                    cdf={"mode": "empty"},
+                return self._commit(
+                    self._latest(), "DELETE", params, cdf={"mode": "empty"}
                 )
             # Recorded feed: the tombstoned rows themselves (schema cols
             # only — the DV path/idx identity is physical, not logical).
@@ -1968,13 +1802,13 @@ class VersionedTable:
             feed = src.where(F.coalesce(F.expr(where), F.lit(False))).select(
                 *[F.col(f"`{f.name}`") for f in schema.fields]
             ).withColumn("_change_type", F.lit("delete"))
-            return self._commit_write(
-                self.spark.createDataFrame([], schema),
+            base = self._latest()  # data files untouched
+            return self._commit(
+                base,
                 "DELETE",
                 params,
-                self._latest().data_dirs,  # data files untouched
-                dv_paths=self._dv() + [str(dv_dir)],
                 cdf=self._write_cdf_feed(feed, version),
+                dv_paths=list(base.dv_paths or []) + [str(dv_dir)],
             )
         src = self._df_for_paths(selected, schema, self._mapping(), self._dv())
         # Deleted-row metric observed on the pre-filter scan of the same
@@ -1995,13 +1829,15 @@ class VersionedTable:
         feed = src.where(F.coalesce(F.expr(where), F.lit(False))).withColumn(
             "_change_type", F.lit("delete")
         )
-        return self._commit_write(
-            remaining,
+        base = self._latest()
+        return self._commit(
+            base,
             "DELETE",
             params,
-            untouched + [d],
-            dv_paths="carry" if untouched else None,
             cdf=self._write_cdf_feed(feed, version),
+            data_dirs=untouched + [d],
+            schema_json=json.dumps(remaining.schema.jsonValue()),
+            dv_paths=base.dv_paths if untouched else None,
         )
 
     def _dv_counts_by_file(self, dv_paths: list[str]) -> dict[str, int]:
@@ -2061,12 +1897,13 @@ class VersionedTable:
             "carried_files": len(untouched),
             **({"max_dv_fraction": max_dv_fraction} if partial else {}),
         }
-        return self._commit_write(
-            self.spark.createDataFrame([], schema),
+        base = self._latest()
+        return self._commit(
+            base,
             "REORG",
             params,
-            untouched + ([d] if d else []),
-            dv_paths="carry" if partial else None,
+            data_dirs=untouched + ([d] if d else []),
+            dv_paths=base.dv_paths if partial else None,
         )
 
     def merge_upsert(self, source: DataFrame, keys: list[str]) -> "VersionedTable":
@@ -2127,13 +1964,14 @@ class VersionedTable:
                 )
             )
         )
-        return self._commit_write(
-            merged,
+        return self._commit(
+            self._latest(),
             "MERGE",
             {"keys": keys},
-            [d],
-            dv_paths=None,
             cdf=self._write_cdf_feed(feed, version),
+            data_dirs=[d],
+            schema_json=json.dumps(merged.schema.jsonValue()),
+            dv_paths=None,
         )
 
     def merge(
@@ -2423,7 +2261,8 @@ class VersionedTable:
                     )
                 )
             cdf = self._write_cdf_feed(feed, version)
-        props = self._latest().properties
+        base = self._latest()
+        props = base.properties
         if rt:
             max_id = obs_rt.get["max_id"]
             if max_id is not None:
@@ -2441,12 +2280,9 @@ class VersionedTable:
             # caller tracking state in them (e.g. an incremental view's
             # source watermark) can never observe the merge without its
             # watermark or vice versa
-            props = {
-                **(props if props is not None else (self._latest().properties or {})),
-                **extra_properties,
-            }
-        return self._commit_write(
-            merged,
+            props = {**(props or {}), **extra_properties}
+        return self._commit(
+            base,
             "MERGE",
             {
                 "keys": keys,
@@ -2455,10 +2291,11 @@ class VersionedTable:
                 "num_affected_rows": sum(metrics.values()),
                 **metrics,
             },
-            [d],
+            cdf=cdf,
+            data_dirs=[d],
+            schema_json=json.dumps(merged.schema.jsonValue()),
             dv_paths=None,
             properties=props,
-            cdf=cdf,
         )
 
     @classmethod
@@ -2480,8 +2317,7 @@ class VersionedTable:
         """
         src_commit = source._resolve_commit(version)
         table = cls(source.spark, target_path)
-        if table.log_dir.exists() and any(table.log_dir.glob("*.json")):
-            raise FileExistsError(f"table already exists at {target_path}")
+        table._claim_new_table()
         # stats files resolve against the CLONE's _log/_stats — copy the
         # referenced ones over (tiny JSON; the data files stay shared)
         for name in (src_commit.stats_refs or {}).values():
@@ -2489,43 +2325,18 @@ class VersionedTable:
             if src_f.exists():
                 table._stats_dir().mkdir(parents=True, exist_ok=True)
                 shutil.copyfile(src_f, table._stats_dir() / name)
-        table._write_commit(
-            Commit(
-                version=0,
-                timestamp=time.time(),
-                operation="CLONE",
-                params={"source": str(source.root), "source_version": src_commit.version},
-                data_dirs=src_commit.data_dirs,
-                schema_json=src_commit.schema_json,
-                partition_by=src_commit.partition_by,
-                column_mapping=src_commit.column_mapping,
-                dv_paths=src_commit.dv_paths,
-                properties=src_commit.properties,
-                stats_refs=src_commit.stats_refs,
-            )
+        return table._commit(
+            src_commit,
+            "CLONE",
+            {"source": str(source.root), "source_version": src_commit.version},
         )
-        return table
 
     def restore(self, version: int) -> "VersionedTable":
         """D6 RESTORE TABLE ... TO VERSION AS OF: new commit pointing at
         the old snapshot's files (no data copy, history preserved)."""
-        old = self._resolve_commit(version)
-        self._write_commit(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="RESTORE",
-                params={"to_version": version},
-                data_dirs=old.data_dirs,
-                schema_json=old.schema_json,
-                partition_by=old.partition_by,
-                column_mapping=old.column_mapping,
-                dv_paths=old.dv_paths,
-                properties=old.properties,
-                stats_refs=old.stats_refs,
-            )
+        return self._commit(
+            self._resolve_commit(version), "RESTORE", {"to_version": version}
         )
-        return self
 
     def optimize(
         self,
@@ -2574,25 +2385,39 @@ class VersionedTable:
             )
         ):
             return self
-        cur = self.read()
         pcols = self.partition_columns()
+        cur = self._compact(self.read(), pcols, zorder_by, target_partitions)
+        d = self._write_data(cur, self._next_version(), pcols)
+        return self._commit(
+            self._latest(),
+            "OPTIMIZE",
+            {"zorder_by": zorder_by or []},
+            data_dirs=[d],
+            schema_json=json.dumps(cur.schema.jsonValue()),
+            dv_paths=None,
+        )
+
+    @classmethod
+    def _compact(
+        cls,
+        df: DataFrame,
+        pcols: list[str],
+        zorder_by: list[str] | None,
+        target_partitions: int,
+    ) -> DataFrame:
+        """OPTIMIZE's layout step. A partitioned table keeps its hive
+        layout: one task per partition-key hash, rows sorted by
+        (partition cols, zorder cols) within it — ``target_partitions``
+        is a per-table knob and doesn't apply. Otherwise Z-order-lite
+        clustering with ``zorder_by``, or a plain coalesce."""
         if pcols:
-            # hive layout preserved: one task per partition-key hash,
-            # rows clustered by (partition cols, zorder cols) within it;
-            # target_partitions is a per-table knob and doesn't apply.
             order = pcols + [c for c in (zorder_by or []) if c not in pcols]
-            cur = cur.repartition(*[F.col(c) for c in pcols]).sortWithinPartitions(
+            return df.repartition(*[F.col(c) for c in pcols]).sortWithinPartitions(
                 *[F.col(c) for c in order]
             )
-        elif zorder_by:
-            cur = self._cluster(cur, zorder_by, target_partitions)
-        else:
-            cur = cur.coalesce(target_partitions)
-        version = self._next_version()
-        d = self._write_data(cur, version, pcols)
-        return self._commit_write(
-            cur, "OPTIMIZE", {"zorder_by": zorder_by or []}, [d], dv_paths=None
-        )
+        if zorder_by:
+            return cls._cluster(df, zorder_by, target_partitions)
+        return df.coalesce(target_partitions)
 
     @staticmethod
     def _cluster(df: DataFrame, zorder_by: list[str], target_partitions: int) -> DataFrame:
@@ -2639,18 +2464,10 @@ class VersionedTable:
         # deleted rows would resurrect under the new path.
         df = self._df_for_paths(selected, schema, self._mapping(), self._dv())
         pcols = self.partition_columns()
-        if pcols:
-            order = pcols + [c for c in (zorder_by or []) if c not in pcols]
-            df = df.repartition(*[F.col(c) for c in pcols]).sortWithinPartitions(
-                *[F.col(c) for c in order]
-            )
-        elif zorder_by:
-            df = self._cluster(df, zorder_by, target_partitions)
-        else:
-            df = df.coalesce(target_partitions)
+        df = self._compact(df, pcols, zorder_by, target_partitions)
         d = self._write_data(df, self._next_version(), pcols)
-        return self._commit_write(
-            df,
+        return self._commit(
+            self._latest(),
             "OPTIMIZE",
             {
                 "where": list(predicate),
@@ -2658,7 +2475,8 @@ class VersionedTable:
                 "rewritten_files": len(selected),
                 "carried_files": len(untouched),
             },
-            untouched + [d],
+            data_dirs=untouched + [d],
+            schema_json=json.dumps(df.schema.jsonValue()),
         )
 
     # ------------------------------------------- liquid-style clustering
@@ -2855,8 +2673,8 @@ class VersionedTable:
             parts = max(1, n_overlapped)
         df = self._cluster(df, cols, parts)
         d = self._write_data(df, self._next_version(), self.partition_columns())
-        return self._commit_write(
-            df,
+        return self._commit(
+            self._latest(),
             "CLUSTER",
             {
                 "cluster_by": cols,
@@ -2864,7 +2682,8 @@ class VersionedTable:
                 "carried_files": len(untouched),
                 "max_overlap": max_overlap,
             },
-            untouched + [d],
+            data_dirs=untouched + [d],
+            schema_json=json.dumps(df.schema.jsonValue()),
         )
 
     def optimize_fragmented(
@@ -2957,6 +2776,8 @@ class VersionedTable:
             if orphan_retention_seconds is None
             else orphan_retention_seconds
         )
+        # strict parse, unlike history(): skipping an in-flight RESTORE
+        # here could delete the old dirs it points back to
         all_commits = [
             Commit(**json.loads(f.read_text())) for f in self._log_files()
         ]
@@ -3548,12 +3369,13 @@ class VersionedTable:
         checkpoint file + the ≤CHECKPOINT_INTERVAL commits after it
         (see ``_write_history_checkpoint``), not an O(versions) walk."""
         entries, base = self._latest_checkpoint()
-        tail = [
-            self._history_entry(Commit(**json.loads(f.read_text())))
-            for f in self._log_files()
-            if int(f.stem) > base
-        ]
-        return list(reversed(entries + tail))
+        files = [f for f in self._log_files() if int(f.stem) > base]
+        # a young unparsable newest entry (a live publish) is skipped,
+        # as _latest() skips it
+        tail = [self._read_commit_file(f, newest=(f == files[-1])) for f in files]
+        return list(
+            reversed(entries + [self._history_entry(c) for c in tail if c is not None])
+        )
 
     def detail(self) -> dict:
         """DESCRIBE DETAIL (Delta): table-level metadata snapshot —

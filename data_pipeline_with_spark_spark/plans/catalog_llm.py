@@ -1100,8 +1100,10 @@ def _boilerplate_rate(spark: SparkSession, sf: str) -> DataFrame:
     paragraphs that are duplicates of an earlier occurrence anywhere in
     the corpus — the curation dashboard number paragraph dedup exists
     to drive (high rate → templated/scraped source). Derived entirely
-    from paragraph_dedup output, so the shuffles stay digest-only;
-    the ratio divides two longs once, per NEXT.md float discipline."""
+    from paragraph_dedup output, so the shuffles stay digest-only.
+    Counts aggregate as longs and the ratio is the single float op, at
+    the end: rounding one float op matches the oracle bit for bit,
+    rounding after a float SUM (order-dependent) does not."""
     docs = read_testdata(spark, sf, "documents")
     # include_subsumed keeps fully-duplicate docs as n_kept=0 rows, so
     # the per-source denominator counts ALL paragraphs and the
@@ -2681,8 +2683,7 @@ def _phash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # broadcast-join back — guide §8) was built, oracle-proven and
     # MEASURED against this shape: it LOSES at fixture scale (A/B min
     # ratios 2.17x sf0.1, 1.60x sf1 — its extra distinct/join/python
-    # stages cost more than 50k avoided encodes) and was reverted; see
-    # OPTIMIZATION_r16.md.
+    # stages cost more than 50k avoided encodes) and was reverted.
     assets = multimodal.attach_image_payload(
         docs.select("doc_id", "img_class"), id_col="img_class", spread_col="doc_id"
     )

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_spark.lake.versioned import (
+    ConstraintViolationError,
     SchemaEnforcementError,
     VersionedTable,
     WhenMatched,
@@ -2429,11 +2430,11 @@ def test_matview_refresh_uses_recorded_feeds(spark, tmp_path):
 
 
 def test_pinned_slot_survives_latest_rearm(spark, tmp_path):
-    # r6 review: _latest() inside _commit_write (dv-carry / properties
-    # reads) must not re-arm the OCC token past a concurrently-taken
-    # slot — the first _next_version() of an operation PINS the slot,
-    # and losing it surfaces as a loud publish conflict, never a silent
-    # commit past another writer's version.
+    # r6 review: a _latest() re-read mid-operation (the commit
+    # builder's base-snapshot read) must not re-arm the OCC token past
+    # a concurrently-taken slot — the first _next_version() of an
+    # operation PINS the slot, and losing it surfaces as a loud publish
+    # conflict, never a silent commit past another writer's version.
     t = VersionedTable(spark, str(tmp_path / "pin")).create(
         spark.createDataFrame([(1, 1.0)], ["id", "v"])
     )
@@ -2558,3 +2559,135 @@ def test_vacuum_sql_rejects_duplicate_retain_clause(spark, cars, tmp_path):
     # single and mixed clauses still parse
     router.sql("VACUUM sqldup RETAIN 1 VERSIONS DRY RUN")
     router.sql("VACUUM sqldup RETAIN 0 HOURS RETAIN 1 VERSIONS DRY RUN")
+
+
+def test_restore_keeps_constraints_and_generated_columns(spark, tmp_path):
+    # RESTORE brings back the target version's whole snapshot, table
+    # rules included: a constraint and a generated column declared at or
+    # before that version keep holding after the restore.
+    t = VersionedTable(spark, str(tmp_path / "rs")).create(
+        spark.createDataFrame([(1, 10, 20)], "id INT, v INT, g INT"),
+        generated={"g": "v * 2"},
+    )
+    t.add_constraint("v_pos", "v > 0")  # v1
+    t.append(spark.createDataFrame([(2, 5)], "id INT, v INT"))  # v2
+    t.restore(1)
+    assert t.constraints() == {"v_pos": "v > 0"}
+    with pytest.raises(ConstraintViolationError):
+        t.append(spark.createDataFrame([(3, -5)], "id INT, v INT"))
+    t.append(spark.createDataFrame([(4, 7)], "id INT, v INT"))
+    assert {r.id: r.g for r in t.read().collect()} == {1: 20, 4: 14}
+
+
+def test_clone_carries_constraints_and_generated_columns(spark, tmp_path):
+    src = VersionedTable(spark, str(tmp_path / "src")).create(
+        spark.createDataFrame([(1, 10, 20)], "id INT, v INT, g INT"),
+        generated={"g": "v * 2"},
+    )
+    src.add_constraint("v_pos", "v > 0")
+    clone = VersionedTable.clone_from(src, str(tmp_path / "cl"))
+    assert clone.constraints() == {"v_pos": "v > 0"}
+    assert clone.generated_columns() == {"g": "v * 2"}
+    with pytest.raises(ConstraintViolationError):
+        clone.append(spark.createDataFrame([(2, -5)], "id INT, v INT"))
+    clone.append(spark.createDataFrame([(3, 4)], "id INT, v INT"))
+    assert {r.id: r.g for r in clone.read().collect()} == {1: 20, 3: 8}
+
+
+def test_idempotent_append_mints_identity_like_append(spark, tmp_path):
+    t = VersionedTable(spark, str(tmp_path / "idtxn")).create(
+        spark.createDataFrame([(f"u{i}",) for i in range(5)], ["name"]),
+        identity={"uid": {"start": 100, "step": 2}},
+    )
+    v0 = [r.uid for r in t.read().collect()]
+    batch = spark.createDataFrame([("x",), ("y",)], ["name"])
+    assert t.idempotent_append(batch, app_id="job", batch_id=0) is True
+    new = [r.uid for r in t.read().where("name IN ('x', 'y')").collect()]
+    assert len(set(new)) == 2 and all(u is not None and u > max(v0) for u in new)
+    with pytest.raises(ValueError, match="GENERATED ALWAYS"):
+        t.idempotent_append(
+            spark.createDataFrame([(999, "z")], ["uid", "name"]),
+            app_id="job",
+            batch_id=1,
+        )
+    # the watermark advanced: a plain append mints above the txn batch
+    t.append(spark.createDataFrame([("w",)], ["name"]))
+    (w,) = [r.uid for r in t.read().where("name = 'w'").collect()]
+    assert w > max(new)
+
+
+def test_history_skips_inflight_newest_entry(spark, cars, tmp_path):
+    # A young, unparsable newest log entry is a live O_EXCL-fallback
+    # publish still copying: history() skips it the way reads do.
+    t = VersionedTable(spark, str(tmp_path / "hinf")).create(cars)
+    t.append(cars)
+    (t.log_dir / f"{2:020d}.json").write_text("")
+    assert t.read().count() == 6
+    assert [h["version"] for h in t.history()] == [1, 0]
+
+
+@pytest.fixture(scope="module")
+def rich_table(spark, tmp_path_factory):
+    """A table whose newest commit sets every carried Commit field:
+    partitioning, a CHECK constraint, a generated column, column mapping
+    (a rename), deletion vectors, properties (NOT NULL included) and
+    stats refs."""
+    root = tmp_path_factory.mktemp("carry") / "base"
+    t = VersionedTable(spark, str(root)).create(
+        spark.createDataFrame(
+            [(i, i + 1, 2 * (i + 1), i * 10, "a" if i % 2 else "b", "x") for i in range(6)],
+            "id INT, v INT, g INT, w INT, p STRING, u STRING",
+        ),
+        partition_by=["p"],
+        generated={"g": "v * 2"},
+    )
+    t.add_constraint("v_pos", "v > 0")
+    t.set_properties({"delta.enableDeletionVectors": "true"})
+    t.delete(where="id = 2")
+    t.rename_column("u", "u2")
+    t.set_not_null("id")
+    return root
+
+
+# metadata-only op -> (how to run it, the Commit fields it owns)
+_CARRY_OPS = {
+    "set_properties": (lambda t: t.set_properties({"k": "v"}), {"properties"}),
+    "add_constraint": (lambda t: t.add_constraint("w_nonneg", "w >= 0"), {"constraints"}),
+    "drop_constraint": (lambda t: t.drop_constraint("v_pos"), {"constraints"}),
+    "set_not_null": (lambda t: t.set_not_null("w"), {"schema_json", "properties"}),
+    "drop_not_null": (lambda t: t.drop_not_null("id"), {"schema_json", "properties"}),
+    "add_column": (lambda t: t.add_column("extra", "string"), {"schema_json", "column_mapping"}),
+    "drop_column": (
+        lambda t: t.drop_column("w"),
+        {"schema_json", "column_mapping", "properties"},
+    ),
+    "rename_column": (
+        lambda t: t.rename_column("w", "w2"),
+        {"schema_json", "partition_by", "column_mapping", "properties"},
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_CARRY_OPS))
+def test_metadata_op_carries_every_field_it_does_not_own(spark, rich_table, tmp_path, op):
+    # The carry-forward policy in one place: a metadata-only commit
+    # equals its base snapshot on every field the operation does not own.
+    import dataclasses
+    import shutil
+
+    run, owned = _CARRY_OPS[op]
+    root = tmp_path / "t"
+    shutil.copytree(rich_table, root)  # log paths stay absolute: shared data
+    t = VersionedTable(spark, str(root))
+    base = t._latest()
+    assert base.dv_paths and base.column_mapping and base.constraints
+    run(t)
+    new = t._latest()
+    assert new.version == base.version + 1
+    per_commit = {"version", "timestamp", "operation", "params", "cdf"}
+    changed = {
+        f.name
+        for f in dataclasses.fields(new)
+        if getattr(new, f.name) != getattr(base, f.name)
+    }
+    assert changed - per_commit <= owned
