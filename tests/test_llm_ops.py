@@ -122,10 +122,8 @@ def test_ann_topk_auto_dispatch(spark, tmp_path, monkeypatch):
     def rows(df):
         return sorted((r.q_id, r.neighbor_id, r.l2_dist, r.rnk) for r in df.collect())
 
-    auto = S.ann_topk(spark, idx, queries, k=5)  # tiny corpus -> exact
-    assert auto.columns == ["q_id", "neighbor_id", "l2_dist", "rnk"]
-    exact = S.ann_topk(spark, idx, queries, k=5, mode="exact")
-    assert rows(auto) == rows(exact)
+    exact = S.ann_topk(spark, idx, queries, k=5)  # tiny corpus -> exact
+    assert exact.columns == ["q_id", "neighbor_id", "l2_dist", "rnk"]
 
     monkeypatch.setattr(S, "AUTO_INDEX_MIN_ROWS", 0)
     n = emb.count()
@@ -135,11 +133,6 @@ def test_ann_topk_auto_dispatch(spark, tmp_path, monkeypatch):
     assert probed.columns == ["q_id", "neighbor_id", "l2_dist", "rnk"]
     # full probe + corpus-wide shortlist == exact ranking
     assert rows(probed) == rows(exact)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        S.ann_topk(spark, idx, queries, mode="nope")
 
 
 def test_decontamination_shuffle_fallback_past_broadcast_bound(spark):
@@ -362,6 +355,16 @@ def test_topk_recall_summary_flags_flip(spark):
     )
     row = similarity.topk_recall_summary(short, exact, k=3, floor=0.5).collect()
     assert row[0].n_returned == 1 and not row[0].recall_ok
+
+    # a query the approximate side returns nothing for still counts: it
+    # reads 0 returned and recall 0, so the mean here is (1 + 0) / 2
+    half = exact.where("q_id = 0")
+    by_q = {r.query_id: r for r in similarity.topk_recall_summary(
+        half, exact, k=3, floor=0.9).collect()}
+    assert set(by_q) == {0, 1} and by_q[1].n_returned == 0
+    assert not any(r.recall_ok for r in by_q.values())
+    assert all(r.recall_ok for r in similarity.topk_recall_summary(
+        half, exact, k=3, floor=0.5).collect())
 
 
 def test_semantic_dedup_check_flags_flip(spark):
@@ -2448,6 +2451,63 @@ def test_novelty_scores_first_occurrence_attribution(spark):
     assert out[3].n_shingles == 6 and out[3].n_novel == 4
     assert abs(out[3].novelty - 4 / 6) < 1e-6
     assert out[4].novelty == 1.0
+
+
+# Ids 3 and 5 share one embedding (the query's own), id 4 has none.
+_TIE_CORPUS = [
+    (1, [1.0] * 8),
+    (2, [2.0] + [1.0] * 7),
+    (3, [1.0, 2.0, 3.0, 4.0] * 2),
+    (4, None),
+    (5, [1.0, 2.0, 3.0, 4.0] * 2),
+    (6, [4.0, 3.0, 2.0, 1.0] * 2),
+    (7, [1.0, 1.0, 2.0, 2.0, 3.0, 3.0, 4.0, 4.0]),
+    (8, [3.0, 1.0] * 4),
+]
+
+
+@pytest.mark.parametrize(
+    "search",
+    [
+        "brute_force_topk",
+        "brute_force_l2_topk",
+        "lsh_bucketed_topk",
+        "pq_topk",
+        "pq_topk_refined",
+        "ivfpq_probe_topk-sql_luts",
+        "ivfpq_probe_topk-driver_luts",
+    ],
+)
+def test_search_ranks_tie_by_lower_id_and_never_a_null_vector(
+    spark, tmp_path, monkeypatch, search
+):
+    # Every search shares one tie policy: equal scores rank the lower
+    # id first, and a NULL embedding never ranks.
+    S = similarity
+    schema = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame(_TIE_CORPUS, schema)
+    queries = spark.createDataFrame([(100, [1.0, 2.0, 3.0, 4.0] * 2)], schema)
+    if search.startswith("ivfpq"):
+        idx = str(tmp_path / "idx")
+        S.ivfpq_build_index(corpus, idx, n_cells=2, m=4, k_codes=4, pq_iters=1)
+        if search.endswith("sql_luts"):
+            monkeypatch.setattr(S, "PROBE_DRIVER_LUT_MAX_QUERIES", 0)
+        out = S.ivfpq_probe_topk(
+            spark, idx, queries, k=5, n_probe=2, shortlist_factor=2
+        )
+    elif search.startswith("pq"):
+        books = S.pq_train(corpus, m=4, k_codes=4, iters=1)
+        codes = S.pq_encode(corpus, books)
+        out = (
+            S.pq_topk(codes, queries, books, k=5)
+            if search == "pq_topk"
+            else S.pq_topk_refined(corpus, codes, queries, books, k=5)
+        )
+    else:
+        out = getattr(S, search)(corpus, queries, k=5)
+    rank = {r.neighbor_id: r.rnk for r in out.collect()}
+    assert len(rank) == 5 and 4 not in rank
+    assert rank[5] == rank[3] + 1
 
 
 def test_mmr_select_prefers_diverse_over_clone(spark):
