@@ -38,6 +38,15 @@ time travel, restore) with an explicitly simpler physical design:
   columns — lexicographic clustering, which (like Z-order) lets
   parquet row-group min/max stats skip files on those columns.
 
+Transactions follow Delta's optimistic rule: an operation reads ONE
+snapshot (``_latest()``, or ``_resolve_commit(v)`` for time travel),
+derives everything it needs from that ``Commit`` — files, schema,
+mapping, deletion vectors, properties, constraints — and commits on it
+at version + 1, or raises ``CommitConflict`` if another writer got there
+first. Every data rewrite (UPDATE, DELETE, MERGE, OPTIMIZE, REORG, the
+row-tracking backfill) ends in one step, ``_rewrite``: write the new
+files, record the change feed, commit carried files + the new dir.
+
 At 100 TB the metadata design (full file list per commit) caps at
 O(files) JSON per commit — the known Delta-log scaling answer
 (checkpoint compaction) applies unchanged if needed.
@@ -56,7 +65,7 @@ import time
 import uuid
 from dataclasses import dataclass, replace
 from functools import reduce
-from operator import and_
+from operator import and_, or_
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -173,8 +182,8 @@ class CommitConflict(RuntimeError):
 def retry_on_conflict(fn, attempts: int = 5, base_sleep: float = 0.05):
     """Run ``fn()`` retrying on :class:`CommitConflict` with exponential
     backoff. Each retry must RE-DERIVE from the table (call ``fn`` that
-    re-reads state internally — every VersionedTable op re-reads its
-    base snapshot per call, and a conflicted attempt may leave a stale
+    re-reads state internally — every VersionedTable op reads its base
+    snapshot once per call, and a conflicted attempt may leave a stale
     slot pin that the FIRST retry consumes by raising one more
     conflict, which this loop also absorbs). Raises the last conflict
     after ``attempts`` tries."""
@@ -279,6 +288,58 @@ class Commit:
     # honest-cost caveat in lake/matview.py.
     cdf: dict | None = None
 
+    # Everything an operation needs to know about its snapshot derives
+    # from the ONE commit it read — never from a second log read.
+    @classmethod
+    def seed(cls) -> "Commit":
+        """The state before a table exists: what version 0 builds on,
+        and what the metadata getters read on a missing table."""
+        return cls(
+            version=-1, timestamp=0.0, operation="", params={}, data_dirs=[], schema_json=""
+        )
+
+    def schema(self) -> T.StructType:
+        return T.StructType.fromJson(json.loads(self.schema_json))
+
+    def mapping(self) -> dict[str, str]:
+        """Logical -> physical column names, identity-filled."""
+        cm = self.column_mapping or {}
+        return {f.name: cm.get(f.name, f.name) for f in self.schema().fields}
+
+    def files(self) -> list[str]:
+        """The snapshot's parquet files, in data_dirs order."""
+        files: list[str] = []
+        for d in self.data_dirs:
+            p = Path(d)
+            if p.is_file():  # partial compaction commits reference loose files
+                files.append(str(p))
+            else:  # recursive: hive-partitioned commits nest k=v dirs
+                files.extend(str(x) for x in sorted(p.glob("**/*.parquet")))
+        return files
+
+    def flag(self, prop: str) -> bool:
+        return (self.properties or {}).get(prop, "").lower() == "true"
+
+    def row_tracking(self) -> bool:
+        return self.flag("delta.enableRowTracking")
+
+    def identity_columns(self) -> dict[str, dict]:
+        pre = VersionedTable._IDENTITY_PROP
+        return {
+            k[len(pre) :]: json.loads(v)
+            for k, v in (self.properties or {}).items()
+            if k.startswith(pre)
+        }
+
+    def not_null_columns(self) -> list[str]:
+        return list(
+            json.loads((self.properties or {}).get(VersionedTable._NOT_NULL_PROP, "[]"))
+        )
+
+    def clustering_columns(self) -> list[str]:
+        raw = (self.properties or {}).get("spark_graft.clusterBy", "")
+        return [c for c in raw.split(",") if c]
+
 
 class VersionedTable:
     """A versioned parquet table with Delta-style DML and time travel."""
@@ -321,12 +382,11 @@ class VersionedTable:
         """THIS THREAD's pinned commit slot: the FIRST _next_version()
         call of an operation fixes the slot; every later call in the
         same operation (data-dir naming, DV-dir naming, the commit
-        itself) returns the SAME slot even if _latest() re-armed the
-        token in between (e.g. the base-snapshot read before the
-        commit is built). If a concurrent writer takes the pinned slot
-        meanwhile, the put-if-absent publish fails LOUDLY with a
-        conflict instead of silently committing past it. Cleared after
-        every publish attempt."""
+        itself) returns the SAME slot while it is still the log tail +
+        1. If a concurrent writer takes the pinned slot meanwhile, the
+        put-if-absent publish fails LOUDLY with a conflict instead of
+        silently committing past it. Cleared after every publish
+        attempt."""
         return getattr(self._txn, "pinned_slot", None)
 
     @_pinned_slot.setter
@@ -405,26 +465,38 @@ class VersionedTable:
     # commit #10,000 costs the same as on commit #20.
     CHECKPOINT_INTERVAL = 10
 
-    def _write_commit(self, commit: Commit) -> None:
-        self.log_dir.mkdir(parents=True, exist_ok=True)
-        target = self.log_dir / f"{commit.version:020d}.json"
-        fd, tmp = tempfile.mkstemp(dir=self.log_dir, suffix=".tmp")
+    @staticmethod
+    def _write_json(directory: Path, obj: object, place) -> None:
+        """Serialize ``obj`` to a temp file in ``directory`` and hand its
+        path to ``place`` (a rename, or the put-if-absent publish). The
+        temp file is removed on every exit path — serialization
+        failure, publish conflict, or success (link leaves it behind)."""
+        directory.mkdir(parents=True, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=directory, suffix=".tmp")
         try:
             with os.fdopen(fd, "w") as fh:
-                json.dump(commit.__dict__, fh)
-            self._publish_commit(tmp, target, commit.version)
+                json.dump(obj, fh)
+            place(tmp)
+        finally:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
+
+    def _write_commit(self, commit: Commit) -> None:
+        target = self.log_dir / f"{commit.version:020d}.json"
+        try:
+            self._write_json(
+                self.log_dir,
+                commit.__dict__,
+                lambda tmp: self._publish_commit(tmp, target, commit.version),
+            )
             # published: later commits by this instance (multi-commit
             # ops) build on the state just written
             self._snapshot_version = commit.version
         finally:
             # the pinned slot is spent whether the publish won or lost
             self._pinned_slot = None
-            # tmp is removed on every exit path — serialization failure,
-            # publish conflict, or success (link leaves tmp behind).
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
         if commit.version and commit.version % self.CHECKPOINT_INTERVAL == 0:
             try:
                 self._write_history_checkpoint(commit.version)
@@ -456,27 +528,15 @@ class VersionedTable:
     def _write_history_checkpoint(self, version: int) -> None:
         # Incremental roll-up: previous checkpoint + the ≤N commits
         # since it — building a checkpoint never replays the full log.
-        entries, base = self._latest_checkpoint()
-        for f in self._log_files():
-            v = int(f.stem)
-            if base < v <= version:
-                entries.append(
-                    self._history_entry(Commit(**json.loads(f.read_text())))
-                )
+        entries = [h for h in reversed(self.history()) if h["version"] <= version]
         cpd = self._checkpoint_dir()
-        cpd.mkdir(parents=True, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=cpd, suffix=".tmp")
-        try:
-            with os.fdopen(fd, "w") as fh:
-                json.dump({"version": version, "entries": entries}, fh)
-            # checkpoints are derived data: last-writer-wins replace is
-            # fine (unlike commit publish, which must be put-if-absent)
-            os.replace(tmp, cpd / f"{version:020d}.json")
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
+        # checkpoints are derived data: last-writer-wins replace is
+        # fine (unlike commit publish, which must be put-if-absent)
+        self._write_json(
+            cpd,
+            {"version": version, "entries": entries},
+            lambda tmp: os.replace(tmp, cpd / f"{version:020d}.json"),
+        )
 
     # errnos that actually mean "this filesystem cannot hardlink" —
     # anything else (ENOSPC, EIO, EACCES…) is a real failure and must
@@ -619,7 +679,10 @@ class VersionedTable:
         "float": ("double",),
     }
 
-    def _enforce(self, incoming: T.StructType, merge_schema: bool) -> T.StructType:
+    @classmethod
+    def _enforce(
+        cls, current: T.StructType, incoming: T.StructType, merge_schema: bool
+    ) -> T.StructType:
         """Schema enforcement/evolution (D7 + type widening):
 
         - extra incoming columns: rejected unless ``merge_schema`` (the
@@ -634,14 +697,13 @@ class VersionedTable:
           table-schema scan upcasts it like every other narrow file.
         - anything else (string vs numeric, double→int, …): rejected.
         """
-        current = T.StructType.fromJson(json.loads(self._latest().schema_json))
-        cur, new = self._schema_fields(current), self._schema_fields(incoming)
+        cur, new = cls._schema_fields(current), cls._schema_fields(incoming)
         mismatched = {k for k in cur.keys() & new.keys() if cur[k] != new[k]}
         widened = {
-            k for k in mismatched if new[k] in self._WIDENINGS.get(cur[k], ())
+            k for k in mismatched if new[k] in cls._WIDENINGS.get(cur[k], ())
         }
         narrowed = {
-            k for k in mismatched if cur[k] in self._WIDENINGS.get(new[k], ())
+            k for k in mismatched if cur[k] in cls._WIDENINGS.get(new[k], ())
         }
         bad = mismatched - widened - narrowed
         if bad:
@@ -679,33 +741,29 @@ class VersionedTable:
         return T.StructType(merged)
 
     # ------------------------------------------------------------ writes
+    # Metadata getters read the newest commit; write operations never
+    # call them — they derive the same facts from the base they read.
+    def _meta(self) -> Commit:
+        try:
+            return self._latest()
+        except FileNotFoundError:
+            return Commit.seed()
+
     def partition_columns(self) -> list[str]:
         """The table's hive partition columns (empty when unpartitioned)."""
-        try:
-            return list(self._latest().partition_by or [])
-        except FileNotFoundError:
-            return []
+        return list(self._meta().partition_by or [])
 
     def constraints(self) -> dict[str, str]:
         """The table's CHECK constraints (empty when none)."""
-        try:
-            return dict(self._latest().constraints or {})
-        except FileNotFoundError:
-            return {}
+        return dict(self._meta().constraints or {})
 
     def generated_columns(self) -> dict[str, str]:
         """Generated-column expressions (empty when none)."""
-        try:
-            return dict(self._latest().generated or {})
-        except FileNotFoundError:
-            return {}
+        return dict(self._meta().generated or {})
 
     def table_properties(self) -> dict[str, str]:
         """Delta-style TBLPROPERTIES (empty when none)."""
-        try:
-            return dict(self._latest().properties or {})
-        except FileNotFoundError:
-            return {}
+        return dict(self._meta().properties or {})
 
     def set_properties(self, props: dict[str, str]) -> "VersionedTable":
         """ALTER TABLE … SET TBLPROPERTIES: metadata-only commit merging
@@ -715,34 +773,30 @@ class VersionedTable:
         ``delete``; 'delta.enableRowTracking' = 'true' triggers the
         row-id backfill exactly as Delta's property does."""
         props = {str(k): str(v) for k, v in props.items()}
+        base = self._latest()
         rt_req = props.get("delta.enableRowTracking", "").lower()
-        if rt_req == "true" and not self._row_tracking_enabled():
-            self.enable_row_tracking()
+        if rt_req in ("true", "false") and (rt_req == "true") != base.row_tracking():
+            # a plain property write would skip the backfill, or be a
+            # one-way trapdoor on disable: id minting stops, later
+            # appends NULL-fill _row_id, and re-enable fails on "column
+            # already exists" — route through the real paths instead
+            if rt_req == "true":
+                self.enable_row_tracking()
+            else:
+                self.disable_row_tracking()
             props.pop("delta.enableRowTracking")
             if not props:
                 return self
-        elif rt_req == "false" and self._row_tracking_enabled():
-            # a plain property write would be a one-way trapdoor: id
-            # minting stops, later appends NULL-fill _row_id, and
-            # re-enable fails on "column already exists" — route
-            # through the real disable path instead
-            self.disable_row_tracking()
-            props.pop("delta.enableRowTracking")
-            if not props:
-                return self
-        latest = self._latest()
+            base = self._latest()  # the rest commits on top of the toggle
+        return self._set_properties(base, props)
+
+    def _set_properties(self, base: Commit, props: dict[str, str]) -> "VersionedTable":
         return self._commit(
-            latest,
+            base,
             "SET TBLPROPERTIES",
             {"properties": dict(props)},
             cdf={"mode": "empty"},  # metadata-only: no row changes
-            properties={**(latest.properties or {}), **props},
-        )
-
-    def _dv_enabled(self) -> bool:
-        return (
-            self.table_properties().get("delta.enableDeletionVectors", "").lower()
-            == "true"
+            properties={**(base.properties or {}), **props},
         )
 
     # -------------------------------------------------------- row tracking
@@ -750,10 +804,7 @@ class VersionedTable:
     _HWM_PROP = "spark_graft.rowIdHighWatermark"
 
     def _row_tracking_enabled(self) -> bool:
-        return (
-            self.table_properties().get("delta.enableRowTracking", "").lower()
-            == "true"
-        )
+        return self._meta().row_tracking()
 
     def enable_row_tracking(self) -> "VersionedTable":
         """Delta row-tracking analogue: every row gets a stable
@@ -771,20 +822,18 @@ class VersionedTable:
         exactly the same trigger; ours stays visible in ``read()``
         (documented divergence — the engine has no hidden-column
         projection layer)."""
-        if self._row_tracking_enabled():
+        base = self._latest()
+        if base.row_tracking():
             return self
-        import pyarrow.parquet as pq
-
-        files, schema = self._snapshot_files()
-        if self.ROW_ID_COL in {f.name for f in schema.fields}:
+        files = base.files()
+        if self.ROW_ID_COL in {f.name for f in base.schema().fields}:
             raise ValueError(f"column {self.ROW_ID_COL} already exists")
+        log_stats = self._log_stats(base)
         bases, acc = [], 0
         for f in files:
             bases.append((f, acc))
-            acc += pq.ParquetFile(f).metadata.num_rows
-        src = self._df_for_paths(
-            files, schema, self._mapping(), self._dv(), with_meta=True
-        )
+            acc += self._file_stats(f, log_stats)["rows"]
+        src = self._scan(base, files, with_meta=True)
         base_df = self.spark.createDataFrame(
             bases or [("", 0)], "path string, __base long"
         )
@@ -798,17 +847,14 @@ class VersionedTable:
             )
             .drop("__dv_path", "__dv_idx", "__path", "path", "__base")
         )
-        d = self._write_data(with_ids, self._next_version(), self.partition_columns())
-        latest = self._latest()
-        return self._commit(
-            latest,
+        return self._rewrite(
+            base,
             "ROW TRACKING BACKFILL",
             {"rows_backfilled": acc},
-            data_dirs=[d],
-            schema_json=json.dumps(with_ids.schema.jsonValue()),
-            dv_paths=None,  # backfill materialized a clean snapshot
+            with_ids,
+            carried=[],
             properties={
-                **(latest.properties or {}),
+                **(base.properties or {}),
                 "delta.enableRowTracking": "true",
                 self._HWM_PROP: str(acc),
             },
@@ -822,13 +868,13 @@ class VersionedTable:
         a later re-enable backfills a fresh snapshot — old ids cannot
         resurrect because the backfill writes new files and a re-added
         column of a dropped name maps to a fresh physical name."""
-        if not self._row_tracking_enabled():
+        base = self._latest()
+        if not base.row_tracking():
             return self
-        latest = self._latest()
-        props = dict(latest.properties or {})
+        props = dict(base.properties or {})
         props["delta.enableRowTracking"] = "false"
         props.pop(self._HWM_PROP, None)
-        self._commit(latest, "DISABLE ROW TRACKING", {}, properties=props)
+        self._commit(base, "DISABLE ROW TRACKING", {}, properties=props)
         # tracking is now off, so the drop guard admits the column
         return self.drop_column(self.ROW_ID_COL)
 
@@ -838,11 +884,7 @@ class VersionedTable:
     def identity_columns(self) -> dict[str, dict]:
         """Declared GENERATED ALWAYS AS IDENTITY columns:
         name -> {"start", "step", "next"}."""
-        out = {}
-        for k, v in self.table_properties().items():
-            if k.startswith(self._IDENTITY_PROP):
-                out[k[len(self._IDENTITY_PROP) :]] = json.loads(v)
-        return out
+        return self._meta().identity_columns()
 
     def _assign_identity(
         self, df: DataFrame, specs: dict[str, dict]
@@ -867,12 +909,22 @@ class VersionedTable:
             obs[col] = o
         return df, obs
 
-    def _advance_identity(
+    def _advance_minted(
         self,
         props: dict | None,
         obs: dict[str, "Observation"],
         specs: dict[str, dict],
+        row_obs: "Observation | None" = None,
+        hwm: int = 0,
     ) -> dict | None:
+        """After a write that minted ids: move each identity spec's next
+        value and the ``_row_id`` high-watermark past the observed max.
+        The watermark never regresses: an update-only merge's max
+        surviving id can be below it (earlier rows deleted), and reusing
+        those ids would corrupt identity."""
+        max_id = None if row_obs is None else row_obs.get["max_id"]
+        if max_id is not None:
+            props = {**(props or {}), self._HWM_PROP: str(max(hwm, int(max_id) + 1))}
         for col, o in obs.items():
             max_id = o.get["max_id"]
             spec = specs[col]
@@ -884,18 +936,25 @@ class VersionedTable:
             }
         return props
 
-    def _assign_fresh_row_ids(self, df: DataFrame) -> tuple[DataFrame, "Observation"]:
-        """``_row_id`` for new rows: high-watermark + a per-df unique
-        offset (monotonically_increasing_id — sparse but unique, like
-        Delta's non-contiguous fresh ids). The observed max advances
-        the watermark after the write."""
-        hwm = int(self.table_properties().get(self._HWM_PROP, "0"))
-        obs = Observation()
-        out = df.withColumn(
-            self.ROW_ID_COL,
-            (F.lit(hwm) + F.monotonically_increasing_id()).cast("long"),
-        ).observe(obs, F.max(self.ROW_ID_COL).alias("max_id"))
-        return out, obs
+    def _guard_minted(
+        self, cols, identity: dict, row_tracking: bool, writer: str
+    ) -> None:
+        """Engine-minted columns are never written by callers: identity
+        columns (GENERATED ALWAYS) and, under row tracking, ``_row_id``
+        — a clobbered id in rewritten files (while carried files keep
+        the originals) would duplicate row ids and break CDF pre/post
+        image pairing."""
+        clash = sorted(set(identity) & set(cols))
+        if clash:
+            raise ValueError(
+                f"identity columns {clash} are GENERATED ALWAYS; "
+                f"{writer} cannot write them"
+            )
+        if row_tracking and self.ROW_ID_COL in cols:
+            raise ValueError(
+                f"{self.ROW_ID_COL} is engine-managed while row tracking "
+                f"is enabled; {writer} cannot write it"
+            )
 
     # ------------------------------------------------- log-resident stats
     @staticmethod
@@ -966,21 +1025,16 @@ class VersionedTable:
 
         out: dict[str, str] = {}
         for d in data_dirs:
-            if d in prev:
-                out[d] = prev[d]
-                continue
             # partial-rewrite DML carries untouched files as LOOSE paths
             # under a previously-committed dir — reuse that dir's stats
             # file (extra entries for files no longer in the snapshot
             # are harmless; lookups are per-file) instead of re-reading
             # O(carried files) footers on every small DML commit.
-            anc_ref = None
-            for anc in Path(d).parents:
-                if str(anc) in prev:
-                    anc_ref = prev[str(anc)]
-                    break
-            if anc_ref is not None:
-                out[d] = anc_ref
+            ref = next(
+                (prev[str(p)] for p in (d, *Path(d).parents) if str(p) in prev), None
+            )
+            if ref is not None:
+                out[d] = ref
                 continue
             name = hashlib.sha1(d.encode()).hexdigest()[:16] + ".json"
             target = self._stats_dir() / name
@@ -1000,17 +1054,10 @@ class VersionedTable:
                         # (conservative keep); it must never fail the
                         # commit after data was written
                         continue
-                self._stats_dir().mkdir(parents=True, exist_ok=True)
-                fd, tmp = tempfile.mkstemp(dir=self._stats_dir(), suffix=".tmp")
-                try:
-                    with os.fdopen(fd, "w") as fh:
-                        json.dump(stats, fh)
-                    os.replace(tmp, target)  # idempotent: content-determined
-                finally:
-                    try:
-                        os.unlink(tmp)
-                    except FileNotFoundError:
-                        pass
+                # idempotent: content-determined
+                self._write_json(
+                    self._stats_dir(), stats, lambda tmp: os.replace(tmp, target)
+                )
             out[d] = name
         return out
 
@@ -1034,11 +1081,19 @@ class VersionedTable:
             merged.update(cached)
         return merged
 
-    def _align(self, df: DataFrame, schema: T.StructType) -> DataFrame:
+    def _file_stats(self, f: str, log_stats: dict) -> dict:
+        """One file's ``{"rows", "cols": {physical col: [lo, hi]}}``,
+        bounds encoded: the log-resident entry when the snapshot carries
+        one, else the parquet footer."""
+        ls = log_stats.get(f)
+        return ls if ls is not None else self._read_footer_stats(f)
+
+    @staticmethod
+    def _align(df: DataFrame, schema: T.StructType, gen: dict | None) -> DataFrame:
         """Project ``df`` onto the table schema: present columns cast,
         missing generated columns computed from their expression (Delta
         GENERATED ALWAYS AS), other missing columns NULL-filled."""
-        gen = self.generated_columns()
+        gen = gen or {}
         cols = []
         for f in schema.fields:
             if f.name in df.columns:
@@ -1050,10 +1105,13 @@ class VersionedTable:
         return df.select(*cols)
 
     def _check_constraints(
-        self, df: DataFrame, constraints: dict[str, str] | None = None
+        self, df: DataFrame, base: Commit, checks: dict[str, str] | None = None
     ) -> None:
-        write_path = constraints is None
-        cons = self.constraints() if write_path else constraints
+        """A write (``checks=None``) must pass every CHECK constraint and
+        NOT NULL column of ``base``; ADD CONSTRAINT passes its one new
+        check."""
+        write_path = checks is None
+        cons = (base.constraints or {}) if write_path else checks
         for name, expr in cons.items():
             # SQL CHECK semantics: only a FALSE evaluation violates.
             bad = df.where(f"NOT coalesce(({expr}), true)").limit(1).count()
@@ -1064,8 +1122,8 @@ class VersionedTable:
         if write_path:
             # Engine-minted columns (identity, _row_id) are assigned
             # AFTER this check and are never null by construction.
-            managed = set(self.identity_columns()) | {self.ROW_ID_COL}
-            nn = [c for c in self.not_null_columns() if c not in managed]
+            managed = set(base.identity_columns()) | {self.ROW_ID_COL}
+            nn = [c for c in base.not_null_columns() if c not in managed]
             missing = [c for c in nn if c not in df.columns]
             if missing:
                 raise ConstraintViolationError(
@@ -1075,12 +1133,7 @@ class VersionedTable:
                 # ONE probe job for all constrained columns (write cost
                 # must not grow with the constraint count); the column
                 # is named on the failure path only
-                import functools
-                import operator
-
-                any_null = functools.reduce(
-                    operator.or_, (F.col(f"`{c}`").isNull() for c in nn)
-                )
+                any_null = reduce(or_, (F.col(f"`{c}`").isNull() for c in nn))
                 hits = df.where(any_null).select(*nn).limit(1).collect()
                 if hits:
                     culprits = [c for c in nn if hits[0][c] is None]
@@ -1094,36 +1147,33 @@ class VersionedTable:
         """Columns under an explicit NOT NULL constraint (empty when
         none). Tracked as an engine property rather than inferred from
         incoming DataFrame nullability, which Spark does not preserve
-        reliably across IO boundaries. (table_properties() already
-        tolerates a missing table; a malformed property value raises —
-        that is real metadata damage, not something to mask.)"""
-        return list(
-            json.loads(self.table_properties().get(self._NOT_NULL_PROP, "[]"))
-        )
+        reliably across IO boundaries. (A malformed property value
+        raises — that is real metadata damage, not something to mask.)"""
+        return self._meta().not_null_columns()
 
-    def _set_nullability(self, col: str, nullable: bool, op: str) -> None:
-        latest = self._latest()
-        schema = T.StructType.fromJson(json.loads(latest.schema_json))
+    def _set_nullability(
+        self, base: Commit, col: str, nullable: bool, op: str
+    ) -> "VersionedTable":
         new_schema = T.StructType(
             [
                 T.StructField(f.name, f.dataType, nullable, f.metadata)
                 if f.name == col
                 else f
-                for f in schema.fields
+                for f in base.schema().fields
             ]
         )
-        cols = set(self.not_null_columns())
+        cols = set(base.not_null_columns())
         if nullable:
             cols.discard(col)
         else:
             cols.add(col)
-        props = dict(latest.properties or {})
+        props = dict(base.properties or {})
         if cols:
             props[self._NOT_NULL_PROP] = json.dumps(sorted(cols))
         else:
             props.pop(self._NOT_NULL_PROP, None)
-        self._commit(
-            latest,
+        return self._commit(
+            base,
             op,
             {"column": col},
             schema_json=json.dumps(new_schema.jsonValue()),
@@ -1135,36 +1185,36 @@ class VersionedTable:
         validates the CURRENT snapshot contains no nulls, then records
         the constraint in a metadata-only commit (schema nullability
         flag + engine property); every later write enforces it."""
-        schema = T.StructType.fromJson(json.loads(self._latest().schema_json))
-        if col not in {f.name for f in schema.fields}:
+        base = self._latest()
+        if col not in {f.name for f in base.schema().fields}:
             raise ValueError(f"column {col!r} not in table schema")
-        if col in self.not_null_columns():
+        if col in base.not_null_columns():
             raise ValueError(f"column {col!r} is already NOT NULL")
-        if self.read().where(F.col(f"`{col}`").isNull()).limit(1).count():
+        if self._scan(base).where(F.col(f"`{col}`").isNull()).limit(1).count():
             raise ConstraintViolationError(
                 f"cannot SET NOT NULL on {col!r}: existing rows contain nulls"
             )
-        self._set_nullability(col, nullable=False, op="SET NOT NULL")
-        return self
+        return self._set_nullability(base, col, nullable=False, op="SET NOT NULL")
 
     def drop_not_null(self, col: str) -> "VersionedTable":
         """ALTER TABLE … ALTER COLUMN … DROP NOT NULL."""
-        if col not in self.not_null_columns():
+        base = self._latest()
+        if col not in base.not_null_columns():
             raise ValueError(f"column {col!r} has no NOT NULL constraint")
-        self._set_nullability(col, nullable=True, op="DROP NOT NULL")
-        return self
+        return self._set_nullability(base, col, nullable=True, op="DROP NOT NULL")
 
     def add_constraint(self, name: str, expr: str) -> "VersionedTable":
         """ALTER TABLE ... ADD CONSTRAINT ... CHECK (Delta feature):
         validates the current snapshot, then records the constraint in a
         metadata-only commit; every later write enforces it."""
-        cons = self.constraints()
+        base = self._latest()
+        cons = dict(base.constraints or {})
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists")
-        self._check_constraints(self.read(), {name: expr})
+        self._check_constraints(self._scan(base), base, {name: expr})
         cons[name] = expr
         return self._commit(
-            self._latest(),
+            base,
             "ADD CONSTRAINT",
             {"name": name, "expr": expr},
             cdf={"mode": "empty"},
@@ -1172,10 +1222,11 @@ class VersionedTable:
         )
 
     def drop_constraint(self, name: str) -> "VersionedTable":
-        cons = self.constraints()
+        base = self._latest()
+        cons = dict(base.constraints or {})
         cons.pop(name, None)
         return self._commit(
-            self._latest(),
+            base,
             "DROP CONSTRAINT",
             {"name": name},
             cdf={"mode": "empty"},
@@ -1192,13 +1243,13 @@ class VersionedTable:
         resolved per-commit. At 100 TB this is the whole point: a
         rename is O(1) metadata, not a table rewrite."""
         latest = self._latest()
-        schema = T.StructType.fromJson(json.loads(latest.schema_json))
+        schema = latest.schema()
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"column {old!r} not in table schema {names}")
         if new in names:
             raise ValueError(f"column {new!r} already exists in table schema")
-        if old == self.ROW_ID_COL and self._row_tracking_enabled():
+        if old == self.ROW_ID_COL and latest.row_tracking():
             raise ValueError(
                 f"cannot rename {self.ROW_ID_COL} while "
                 "'delta.enableRowTracking' is true"
@@ -1206,28 +1257,11 @@ class VersionedTable:
         # Delta likewise blocks renaming a column referenced by a CHECK
         # constraint or generated-column expression: the stored SQL text
         # would dangle against the new schema.
-        self._guard_column_refs(old, "rename")
+        self._guard_column_refs(latest, old, "rename")
         mapping = dict(latest.column_mapping or {})
         physical = mapping.pop(old, old)  # chained renames keep the v0 name
         mapping[new] = physical
-        # engine-managed properties follow the rename: clusterBy lists
-        # and identity specs are keyed by LOGICAL name
-        props = dict(latest.properties or {})
-        if props.get("spark_graft.clusterBy"):
-            props["spark_graft.clusterBy"] = ",".join(
-                new if c == old else c
-                for c in props["spark_graft.clusterBy"].split(",")
-            )
-        id_key = self._IDENTITY_PROP + old
-        if id_key in props:
-            props[self._IDENTITY_PROP + new] = props.pop(id_key)
-        if props.get(self._NOT_NULL_PROP):
-            props[self._NOT_NULL_PROP] = json.dumps(
-                sorted(
-                    new if c == old else c
-                    for c in json.loads(props[self._NOT_NULL_PROP])
-                )
-            )
+        props = self._props_follow_column(latest.properties, old, new)
         new_schema = T.StructType(
             [
                 T.StructField(new, f.dataType, f.nullable) if f.name == old else f
@@ -1247,13 +1281,37 @@ class VersionedTable:
             properties=props or None,
         )
 
-    def _guard_column_refs(self, col: str, action: str) -> None:
+    @classmethod
+    def _props_follow_column(cls, props: dict | None, old: str, new: str | None) -> dict:
+        """Engine-managed properties are keyed by LOGICAL column name —
+        the clusterBy list, identity specs, the NOT NULL list — so they
+        follow a rename to ``new``, or die with a drop (``new=None``):
+        appends must not keep minting into a phantom physical column."""
+        props = dict(props or {})
+
+        def follow(cols: list[str]) -> list[str]:
+            return [new if c == old else c for c in cols if c != old or new]
+
+        if props.get("spark_graft.clusterBy"):
+            props["spark_graft.clusterBy"] = ",".join(
+                follow(props["spark_graft.clusterBy"].split(","))
+            )
+        spec = props.pop(cls._IDENTITY_PROP + old, None)
+        if spec is not None and new:
+            props[cls._IDENTITY_PROP + new] = spec
+        not_null = sorted(follow(json.loads(props.pop(cls._NOT_NULL_PROP, "[]"))))
+        if not_null:
+            props[cls._NOT_NULL_PROP] = json.dumps(not_null)
+        return props
+
+    @staticmethod
+    def _guard_column_refs(base: Commit, col: str, action: str) -> None:
         """Reject DDL on a column referenced by stored SQL text (CHECK
         constraints, generated columns) — the expression would dangle."""
         ref = re.compile(rf"\b{re.escape(col)}\b")
         for kind, exprs in (
-            ("CHECK constraint", self.constraints()),
-            ("generated column", self.generated_columns()),
+            ("CHECK constraint", base.constraints or {}),
+            ("generated column", base.generated or {}),
         ):
             for cname, expr in exprs.items():
                 if cname == col or ref.search(expr):
@@ -1270,10 +1328,7 @@ class VersionedTable:
         DDL pays it."""
         out: set[str] = set()
         for c in self._commits():
-            schema = T.StructType.fromJson(json.loads(c.schema_json))
-            cm = c.column_mapping or {}
-            for f in schema.fields:
-                out.add(cm.get(f.name, f.name))
+            out |= set(c.mapping().values())
         return out
 
     def add_column(self, name: str, dtype: str) -> "VersionedTable":
@@ -1286,7 +1341,7 @@ class VersionedTable:
         from pyspark.sql.types import _parse_datatype_string
 
         latest = self._latest()
-        schema = T.StructType.fromJson(json.loads(latest.schema_json))
+        schema = latest.schema()
         if name in {f.name for f in schema.fields}:
             raise ValueError(f"column {name!r} already exists")
         mapping = dict(latest.column_mapping or {})
@@ -1313,38 +1368,26 @@ class VersionedTable:
         column or one referenced by a CHECK constraint / generated
         column is rejected, as in Delta."""
         latest = self._latest()
-        schema = T.StructType.fromJson(json.loads(latest.schema_json))
+        schema = latest.schema()
         if name not in {f.name for f in schema.fields}:
             raise ValueError(f"column {name!r} not in table schema")
         if name in (latest.partition_by or []):
             raise ValueError(f"cannot drop partition column {name!r}")
-        if name in self.clustering_columns():
+        if name in latest.clustering_columns():
             raise ValueError(
                 f"cannot drop clustering column {name!r}; re-declare "
                 "CLUSTER BY without it first"
             )
-        if name == self.ROW_ID_COL and self._row_tracking_enabled():
+        if name == self.ROW_ID_COL and latest.row_tracking():
             raise ValueError(
                 f"cannot drop {self.ROW_ID_COL} while "
                 "'delta.enableRowTracking' is true; use "
                 "SET TBLPROPERTIES ('delta.enableRowTracking'='false')"
             )
-        self._guard_column_refs(name, "drop")
+        self._guard_column_refs(latest, name, "drop")
         mapping = dict(latest.column_mapping or {})
         mapping.pop(name, None)
-        # an identity column's spec dies with the column — appends must
-        # not keep minting values into a phantom physical column
-        props = dict(latest.properties or {})
-        props.pop(self._IDENTITY_PROP + name, None)
-        # ... and so does its NOT NULL constraint
-        if props.get(self._NOT_NULL_PROP):
-            remaining = [
-                c for c in json.loads(props[self._NOT_NULL_PROP]) if c != name
-            ]
-            if remaining:
-                props[self._NOT_NULL_PROP] = json.dumps(remaining)
-            else:
-                props.pop(self._NOT_NULL_PROP)
+        props = self._props_follow_column(latest.properties, name, None)
         new_schema = T.StructType([f for f in schema.fields if f.name != name])
         return self._commit(
             latest,
@@ -1355,24 +1398,18 @@ class VersionedTable:
             properties=props or None,
         )
 
-    def _mapping(self, version: int | None = None) -> dict[str, str]:
-        """Logical -> physical column names for a snapshot, identity-
-        filled for unmapped fields; {} before the first commit."""
-        try:
-            commit = self._resolve_commit(version)
-        except FileNotFoundError:
-            return {}
-        schema = T.StructType.fromJson(json.loads(commit.schema_json))
-        cm = commit.column_mapping or {}
-        return {f.name: cm.get(f.name, f.name) for f in schema.fields}
-
     def _write_data(
-        self, df: DataFrame, version: int, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        version: int,
+        partition_by: list[str] | None = None,
+        mapping: dict[str, str] | None = None,
     ) -> str:
         # Data files always carry PHYSICAL column names (Delta column
-        # mapping): every file in every snapshot agrees regardless of
-        # how many renames happened in between.
-        mapping = self._mapping()
+        # mapping, ``mapping`` = the base snapshot's logical -> physical):
+        # every file in every snapshot agrees regardless of how many
+        # renames happened in between.
+        mapping = mapping or {}
         renames = {l: p for l, p in mapping.items() if p != l and l in df.columns}
         if renames:
             df = df.withColumnsRenamed(renames)
@@ -1407,16 +1444,14 @@ class VersionedTable:
         operation builds on — at the next slot, with this operation's
         ``operation``/``params``/``cdf`` and the Commit fields it owns
         (``changes``). Every other field carries forward unchanged,
-        deletion vectors included: partial rewrites keep the tombstones
-        their untouched files need, and a full-snapshot rewrite passes
-        ``dv_paths=None`` (every surviving row was re-materialized).
-        ``stats_refs`` follows ``data_dirs``: carried while the dirs are
-        the base's, resolved by ``_stats_for_commit`` when they change.
-        ``base=None`` seeds version 0 of a new table."""
-        if base is None:
-            base = Commit(
-                version=0, timestamp=0.0, operation="", params={}, data_dirs=[], schema_json=""
-            )
+        deletion vectors included (data rewrites apply their DV rule in
+        ``_rewrite``). ``stats_refs`` follows ``data_dirs``: carried
+        while the dirs are the base's, resolved by ``_stats_for_commit``
+        when they change. ``base=None`` seeds version 0 of a new table.
+        The slot is ``base.version + 1`` or ``_next_version`` raises
+        ``CommitConflict``: the operation's one ``_latest()`` read armed
+        that check."""
+        base = base or Commit.seed()
         dirs = changes.get("data_dirs", base.data_dirs)
         if dirs != base.data_dirs:
             changes["stats_refs"] = self._stats_for_commit(dirs, base.stats_refs or {})
@@ -1458,6 +1493,51 @@ class VersionedTable:
         feed.write.parquet(str(path))
         return {"mode": "parquet", "path": str(path)}
 
+    def _rewrite(
+        self,
+        base: Commit,
+        operation: str,
+        params,
+        out: DataFrame | None,
+        carried: list[str],
+        feed=None,
+        **changes,
+    ) -> "VersionedTable":
+        """The one data-rewrite step: write ``out`` — the new content of
+        the files the operation chose, read off ``base`` with its
+        deletion vectors applied — under the pinned slot, record
+        ``feed`` as the commit's change feed, and commit ``carried`` +
+        the new dir on ``base``. ``out=None`` writes no data (a DV
+        delete's tombstones are its write). ``params``, ``feed`` and
+        any ``changes`` value may be a function of the new dir (None
+        without ``out``), evaluated after the write: observed metrics
+        and minted ids are known only then.
+
+        The DV rule: tombstones key on file paths, and rewritten files
+        were read with them applied, so ``base.dv_paths`` carry over
+        only while some file carries over (a caller that knows better —
+        DV delete, full purge — passes ``dv_paths``)."""
+        version = self._next_version()
+        d = None
+        if out is not None:
+            d = self._write_data(out, version, base.partition_by, base.mapping())
+            changes.setdefault("schema_json", json.dumps(out.schema.jsonValue()))
+
+        def late(v):
+            return v(d) if callable(v) else v
+
+        changes = {k: late(v) for k, v in changes.items()}
+        changes.setdefault("dv_paths", base.dv_paths if carried else None)
+        feed = late(feed)
+        return self._commit(
+            base,
+            operation,
+            late(params),
+            cdf=None if feed is None else self._write_cdf_feed(feed, version),
+            data_dirs=list(carried) + ([d] if d else []),
+            **changes,
+        )
+
     def create(
         self,
         df: DataFrame,
@@ -1483,17 +1563,10 @@ class VersionedTable:
         gen_missing = set(generated or {}) - set(df.columns)
         if gen_missing:
             raise ValueError(f"generated columns {sorted(gen_missing)} not in schema")
-        props = None
         id_obs: dict[str, Observation] = {}
         specs: dict[str, dict] = {}
         if identity:
-            clash = set(identity) & set(df.columns)
-            if clash:
-                raise ValueError(
-                    f"identity columns {sorted(clash)} are GENERATED ALWAYS; "
-                    "omit them from the data"
-                )
-            specs = {}
+            self._guard_minted(df.columns, identity, False, "CREATE")
             for c, sp in identity.items():
                 step = int(sp.get("step", 1))
                 if step < 1:
@@ -1505,8 +1578,6 @@ class VersionedTable:
                 specs[c] = {"start": start, "step": step, "next": start}
             df, id_obs = self._assign_identity(df, specs)
         d = self._write_data(df, 0, partition_by)
-        if specs:
-            props = self._advance_identity(props, id_obs, specs)
         return self._commit(
             None,
             "CREATE",
@@ -1515,7 +1586,7 @@ class VersionedTable:
             schema_json=json.dumps(df.schema.jsonValue()),
             partition_by=list(partition_by) if partition_by else None,
             generated=dict(generated) if generated else None,
-            properties=props,
+            properties=self._advance_minted(None, id_obs, specs),
         )
 
     @classmethod
@@ -1537,7 +1608,7 @@ class VersionedTable:
 
     def append(self, df: DataFrame, merge_schema: bool = False) -> "VersionedTable":
         """D6/D7 append with schema enforcement / opt-in evolution."""
-        return self._append(df, merge_schema)
+        return self._append(self._latest(), df, merge_schema)
 
     def idempotent_append(
         self,
@@ -1555,57 +1626,56 @@ class VersionedTable:
         The check is monotonic per app_id — batch ids must not decrease
         — which is exactly Structured Streaming's foreachBatch contract.
         """
-        # Newest-first scan, stop at the first commit carrying this
+        # Newest-first scan of the commits this transaction builds on
+        # (up to the base version), stopping at the first carrying this
         # app_id: batch ids are monotonic per app, so the most recent
         # marker decides — O(commits since that app's last txn), not
-        # O(history).
+        # O(history). A newer entry (a live publish still copying, a
+        # replay that landed after the base read) is _next_version's
+        # to judge: the commit below then conflicts, and the retry's
+        # scan sees it.
+        base = self._latest()
         last = -1
-        for f in reversed(self._log_files()):
-            c = Commit(**json.loads(f.read_text()))
+        for f in reversed([f for f in self._log_files() if int(f.stem) <= base.version]):
+            c = self._read_commit_file(f, newest=False)
             if c.params.get("txn_app") == app_id:
                 last = int(c.params.get("txn_batch", -1))
                 break
         if batch_id <= last:
             return False
-        self._append(df, merge_schema, txn_app=app_id, txn_batch=batch_id)
+        self._append(base, df, merge_schema, txn_app=app_id, txn_batch=batch_id)
         return True
 
-    def _append(self, df: DataFrame, merge_schema: bool, **txn) -> "VersionedTable":
+    def _append(
+        self, base: Commit, df: DataFrame, merge_schema: bool, **txn
+    ) -> "VersionedTable":
         """The one append body; ``txn`` is the exactly-once marker
         ``idempotent_append`` records in the commit's params."""
-        rt = self._row_tracking_enabled()
-        if rt and self.ROW_ID_COL in df.columns:
-            raise ValueError(f"{self.ROW_ID_COL} is engine-managed; drop it")
-        specs = self.identity_columns()
-        clash = set(specs) & set(df.columns)
-        if clash:
-            raise ValueError(
-                f"identity columns {sorted(clash)} are GENERATED ALWAYS; "
-                "omit them from the data"
-            )
-        merged = self._enforce(df.schema, merge_schema)
-        aligned = self._align(df, merged)
-        self._check_constraints(aligned)
+        rt = base.row_tracking()
+        specs = base.identity_columns()
+        self._guard_minted(df.columns, specs, rt, "APPEND")
+        merged = self._enforce(base.schema(), df.schema, merge_schema)
+        aligned = self._align(df, merged, base.generated)
+        self._check_constraints(aligned, base)
         obs = None
+        hwm = int((base.properties or {}).get(self._HWM_PROP, "0"))
         if rt:
-            aligned, obs = self._assign_fresh_row_ids(
-                aligned.drop(self.ROW_ID_COL)
-            )
+            # fresh ``_row_id``: high-watermark + a per-df unique offset
+            # (sparse but unique, like Delta's non-contiguous fresh ids);
+            # the observed max advances the watermark after the write
+            obs = Observation()
+            aligned = aligned.withColumn(
+                self.ROW_ID_COL,
+                (F.lit(hwm) + F.monotonically_increasing_id()).cast("long"),
+            ).observe(obs, F.max(self.ROW_ID_COL).alias("max_id"))
         id_obs: dict[str, Observation] = {}
         if specs:
             aligned, id_obs = self._assign_identity(
                 aligned.drop(*specs), specs
             )
-        version = self._next_version()
-        base = self._latest()
-        d = self._write_data(aligned, version, base.partition_by)
-        props = base.properties
-        if obs is not None:
-            max_id = obs.get["max_id"]
-            if max_id is not None:
-                props = {**(props or {}), self._HWM_PROP: str(int(max_id) + 1)}
-        if id_obs:
-            props = self._advance_identity(dict(props or {}), id_obs, specs)
+        d = self._write_data(
+            aligned, self._next_version(), base.partition_by, base.mapping()
+        )
         return self._commit(
             base,
             "APPEND",
@@ -1613,10 +1683,10 @@ class VersionedTable:
             cdf={"mode": "insert_dirs", "dirs": [d]},
             data_dirs=base.data_dirs + [d],
             schema_json=json.dumps(merged.jsonValue()),
-            properties=props,
+            properties=self._advance_minted(base.properties, id_obs, specs, obs, hwm),
         )
 
-    def _dml_target_files(self, where: str) -> tuple[list[str], list[str], T.StructType]:
+    def _dml_target_files(self, base: Commit, where: str) -> tuple[list[str], list[str]]:
         """File-granular DML planning: intersect the predicate with hive
         path values + parquet footer min/max stats (``plan_files``) and
         split the snapshot into (rewrite, carry-by-reference) file sets.
@@ -1624,38 +1694,28 @@ class VersionedTable:
         every file — correct, just coarser. This is Delta's matched-file
         rewrite: an UPDATE touching one partition of a 100 TB table
         rewrites that partition, not the table."""
-        files, schema = self._snapshot_files()
+        files = base.files()
         preds = lift_skip_predicates(where)
         if preds is None:
-            return files, [], schema
+            return files, []
         try:
-            selected, _total = self.plan_files(preds)
+            selected, _total = self._plan(base, preds, files)
         except ValueError:  # op outside the skip set
-            return files, [], schema
+            return files, []
         sel = set(selected)
-        return selected, [f for f in files if f not in sel], schema
+        return selected, [f for f in files if f not in sel]
 
     def update(self, where: str, set_exprs: dict[str, str]) -> "VersionedTable":
         """D4 UPDATE ... SET col = expr WHERE predicate (SQL strings).
         Rewrites only files whose stats range intersects the predicate;
         the rest of the snapshot carries into the new commit by
         reference (see ``_dml_target_files``)."""
-        selected, untouched, schema = self._dml_target_files(where)
-
-        locked = set(self.identity_columns()) & set(set_exprs)
-        if locked:
-            raise ValueError(
-                f"identity columns {sorted(locked)} are GENERATED ALWAYS; "
-                "UPDATE cannot SET them"
-            )
-        if self._row_tracking_enabled() and self.ROW_ID_COL in set_exprs:
-            # mirrors the identity guard: clobbered ids in rewritten
-            # files (while carried files keep originals) would produce
-            # duplicate row ids and break CDF pre/postimage pairing
-            raise ValueError(
-                f"{self.ROW_ID_COL} is engine-managed while row tracking "
-                "is enabled; UPDATE cannot SET it"
-            )
+        base = self._latest()
+        selected, untouched = self._dml_target_files(base, where)
+        schema = base.schema()
+        self._guard_minted(
+            set_exprs, base.identity_columns(), base.row_tracking(), "UPDATE SET"
+        )
 
         def apply_set(df: DataFrame) -> DataFrame:
             return df.withColumns(
@@ -1669,7 +1729,7 @@ class VersionedTable:
             return [(f.name, f.dataType) for f in sch.fields]  # nullability-blind
 
         if selected and shape(
-            apply_set(self._df_for_paths(selected, schema, self._mapping())).schema
+            apply_set(self._df_for_paths(selected, schema, base.mapping())).schema
         ) != shape(schema):  # schema probe only; DV application not needed
             # SET expression widened a column type (e.g. int + 0.5):
             # partial rewrite would fork the schema between old and new
@@ -1683,10 +1743,9 @@ class VersionedTable:
             "num_affected_rows": 0,
         }
         if not selected:  # predicate can't match any file: metadata-only
-            return self._commit(self._latest(), "UPDATE", params, cdf={"mode": "empty"})
-        src = self._df_for_paths(selected, schema, self._mapping(), self._dv())
-        updated = apply_set(src)
-        self._check_constraints(updated)
+            return self._commit(base, "UPDATE", params, cdf={"mode": "empty"})
+        src = self._scan(base, selected)
+        self._check_constraints(apply_set(src), base)
         # Matched-row metric observed during the write pass itself (no
         # separate pre-scan): CollectMetrics rides the rewrite scan. The
         # observed twin is built AFTER the constraint check so the
@@ -1698,9 +1757,6 @@ class VersionedTable:
                 obs, F.count(F.when(F.expr(where), True)).alias("num_affected_rows")
             )
         )
-        version = self._next_version()
-        d = self._write_data(updated_obs, version, self.partition_columns())
-        params["num_affected_rows"] = int(obs.get["num_affected_rows"])
         # Recorded change feed: pre/post images of the matched rows only
         # (file-granular like Delta CDC — a predicate-true row whose SET
         # leaves it unchanged still appears, and nets out in any signed
@@ -1709,7 +1765,7 @@ class VersionedTable:
         # refinement only exists when row tracking gives row identity.
         pre_tag, post_tag = (
             ("update_preimage", "update_postimage")
-            if self._row_tracking_enabled()
+            if base.row_tracking()
             else ("delete", "insert")
         )
         hit = F.coalesce(F.expr(where), F.lit(False))
@@ -1720,15 +1776,13 @@ class VersionedTable:
                 apply_set(src.where(hit)).withColumn("_change_type", F.lit(post_tag))
             )
         )
-        base = self._latest()
-        return self._commit(
+        return self._rewrite(
             base,
             "UPDATE",
-            params,
-            cdf=self._write_cdf_feed(feed, version),
-            data_dirs=untouched + [d],
-            schema_json=json.dumps(updated.schema.jsonValue()),
-            dv_paths=base.dv_paths if untouched else None,
+            lambda _d: {**params, "num_affected_rows": int(obs.get["num_affected_rows"])},
+            updated_obs,
+            untouched,
+            feed=feed,
         )
 
     def delete(self, where: str, use_dv: bool | None = None) -> "VersionedTable":
@@ -1746,9 +1800,10 @@ class VersionedTable:
         tombstones into a physical rewrite of only the affected files.
         Default (``use_dv=None``) follows the table property
         'delta.enableDeletionVectors' — Delta's own opt-in shape."""
+        base = self._latest()
         if use_dv is None:
-            use_dv = self._dv_enabled()
-        selected, untouched, schema = self._dml_target_files(where)
+            use_dv = base.flag("delta.enableDeletionVectors")
+        selected, untouched = self._dml_target_files(base, where)
         params = {
             "where": where,
             "rewritten_files": len(selected),
@@ -1756,12 +1811,11 @@ class VersionedTable:
             "num_affected_rows": 0,
         }
         if not selected:
-            return self._commit(self._latest(), "DELETE", params, cdf={"mode": "empty"})
+            return self._commit(base, "DELETE", params, cdf={"mode": "empty"})
+        hit = F.coalesce(F.expr(where), F.lit(False))
         if use_dv:
-            src = self._df_for_paths(
-                selected, schema, self._mapping(), self._dv(), with_meta=True
-            )
-            tombstones = src.where(F.coalesce(F.expr(where), F.lit(False))).select(
+            src = self._scan(base, selected, with_meta=True)
+            tombstones = src.where(hit).select(
                 F.col("__dv_path").alias("file_path"),
                 F.col("__dv_idx").alias("row_index"),
             )
@@ -1793,63 +1847,39 @@ class VersionedTable:
                 # with one more anti-join input until REORG. Drop it —
                 # the commit is metadata-only.
                 shutil.rmtree(dv_dir, ignore_errors=True)
-                return self._commit(
-                    self._latest(), "DELETE", params, cdf={"mode": "empty"}
-                )
+                return self._commit(base, "DELETE", params, cdf={"mode": "empty"})
             # Recorded feed: the tombstoned rows themselves (schema cols
             # only — the DV path/idx identity is physical, not logical).
-            version = self._next_version()
-            feed = src.where(F.coalesce(F.expr(where), F.lit(False))).select(
-                *[F.col(f"`{f.name}`") for f in schema.fields]
+            # Data files are untouched: every dir carries.
+            feed = src.where(hit).select(
+                *[F.col(f"`{f.name}`") for f in base.schema().fields]
             ).withColumn("_change_type", F.lit("delete"))
-            base = self._latest()  # data files untouched
-            return self._commit(
+            return self._rewrite(
                 base,
                 "DELETE",
                 params,
-                cdf=self._write_cdf_feed(feed, version),
+                None,
+                base.data_dirs,
+                feed=feed,
                 dv_paths=list(base.dv_paths or []) + [str(dv_dir)],
             )
-        src = self._df_for_paths(selected, schema, self._mapping(), self._dv())
+        src = self._scan(base, selected)
         # Deleted-row metric observed on the pre-filter scan of the same
         # write pass (CollectMetrics sees every row the filter drops).
         obs = Observation()
         src_obs = src.observe(
-            obs,
-            F.count(F.when(F.coalesce(F.expr(where), F.lit(False)), True)).alias(
-                "num_affected_rows"
-            ),
+            obs, F.count(F.when(hit, True)).alias("num_affected_rows")
         )
-        remaining = src_obs.where(~F.coalesce(F.expr(where), F.lit(False)))
-        version = self._next_version()
-        d = self._write_data(remaining, version, self.partition_columns())
-        params["num_affected_rows"] = int(obs.get["num_affected_rows"])
         # Recorded feed: the rows the predicate removed (one extra
         # O(matched rows) pass over the selected files).
-        feed = src.where(F.coalesce(F.expr(where), F.lit(False))).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        base = self._latest()
-        return self._commit(
+        return self._rewrite(
             base,
             "DELETE",
-            params,
-            cdf=self._write_cdf_feed(feed, version),
-            data_dirs=untouched + [d],
-            schema_json=json.dumps(remaining.schema.jsonValue()),
-            dv_paths=base.dv_paths if untouched else None,
+            lambda _d: {**params, "num_affected_rows": int(obs.get["num_affected_rows"])},
+            src_obs.where(~hit),
+            untouched,
+            feed=src.where(hit).withColumn("_change_type", F.lit("delete")),
         )
-
-    def _dv_counts_by_file(self, dv_paths: list[str]) -> dict[str, int]:
-        """Live tombstone count per snapshot file. One small Spark agg
-        over the DV parquets (output is O(distinct files), collected)."""
-        return {
-            re.sub(r"^file:/+", "/", r.file_path): r.n
-            for r in self.spark.read.parquet(*dv_paths)
-            .groupBy("file_path")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
 
     def purge_deletion_vectors(
         self, max_dv_fraction: float | None = None
@@ -1864,32 +1894,35 @@ class VersionedTable:
         are rewritten (the reads that pay the anti-join tax hardest),
         the rest keep their DVs. Tombstones referencing the rewritten
         files become dangling — harmless by the DV contract (file paths
-        are never reused) — so the DV set carries unchanged and a later
-        full REORG or VACUUM retires it."""
-        dv_paths = self._dv()
+        are never reused) — so the DV set carries while any file does,
+        and a later full REORG or VACUUM retires it."""
+        base = self._latest()
+        dv_paths = list(base.dv_paths or [])
         if not dv_paths:
             return self
-        files, schema = self._snapshot_files()
-        # _metadata.file_path is a file:// URI; snapshot files are plain
-        # paths — canonicalize before intersecting.
-        dv_counts = self._dv_counts_by_file(dv_paths)
+        files = base.files()
+        # Live tombstone count per file: one small Spark agg over the DV
+        # parquets (output O(distinct files)). _metadata.file_path is a
+        # file:// URI; snapshot files are plain paths — canonicalize.
+        dv_counts = {
+            re.sub(r"^file:/+", "/", r.file_path): r.n
+            for r in self.spark.read.parquet(*dv_paths)
+            .groupBy("file_path")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
         affected = [f for f in files if f in dv_counts]
         if max_dv_fraction is not None:
-            import pyarrow.parquet as pq
-
+            log_stats = self._log_stats(base)
             affected = [
                 f
                 for f in affected
-                if dv_counts[f] / max(pq.ParquetFile(f).metadata.num_rows, 1)
+                if dv_counts[f] / max(self._file_stats(f, log_stats)["rows"], 1)
                 > max_dv_fraction
             ]
             if not affected:
                 return self  # nothing over threshold: no-op, no commit
-        d = None
         untouched = [f for f in files if f not in set(affected)]
-        if affected:
-            clean = self._df_for_paths(affected, schema, self._mapping(), dv_paths)
-            d = self._write_data(clean, self._next_version(), self.partition_columns())
         partial = max_dv_fraction is not None
         params = {
             "purged_dv_files": 0 if partial else len(dv_paths),
@@ -1897,13 +1930,15 @@ class VersionedTable:
             "carried_files": len(untouched),
             **({"max_dv_fraction": max_dv_fraction} if partial else {}),
         }
-        base = self._latest()
-        return self._commit(
+        return self._rewrite(
             base,
             "REORG",
             params,
-            data_dirs=untouched + ([d] if d else []),
-            dv_paths=base.dv_paths if partial else None,
+            self._scan(base, affected) if affected else None,
+            untouched,
+            schema_json=base.schema_json,  # same rows, same schema
+            # a full purge rewrote every tombstoned file
+            **({} if partial else {"dv_paths": None}),
         )
 
     def merge_upsert(self, source: DataFrame, keys: list[str]) -> "VersionedTable":
@@ -1917,41 +1952,31 @@ class VersionedTable:
         source broadcasts when small) — the same physical shape Delta
         produces for a full-table merge without file-level pruning.
         """
-        if self._row_tracking_enabled() or self.identity_columns():
+        base = self._latest()
+        id_specs = base.identity_columns()
+        if base.row_tracking() or id_specs:
             # engine-managed identity (row ids / identity columns) must
             # survive the upsert; the clause-based merge handles that.
             # Keep the non-tracked path's loud failure on a short source
             # — merge's INSERT * would silently NULL-fill missing
             # columns.
             target_cols = (
-                {
-                    f.name
-                    for f in T.StructType.fromJson(
-                        json.loads(self._latest().schema_json)
-                    ).fields
-                }
+                {f.name for f in base.schema().fields}
                 - {self.ROW_ID_COL}
-                - set(self.identity_columns())
+                - set(id_specs)
             )
             missing = target_cols - set(source.columns)
             if missing:
                 raise ValueError(
                     f"merge_upsert source is missing table columns {sorted(missing)}"
                 )
-            return self.merge(
-                source,
-                keys,
-                matched=[WhenMatched()],
-                not_matched=[WhenNotMatched()],
-            )
-        self._enforce(source.schema, merge_schema=False)
-        target = self.read()
+            return self._merge(base, source, keys, [WhenMatched()], [WhenNotMatched()])
+        self._enforce(base.schema(), source.schema, merge_schema=False)
+        target = self._scan(base)
         survivors = target.join(
             source.select(*keys).distinct(), on=keys, how="left_anti"
         )
         merged = source.select(*target.columns).unionByName(survivors)
-        version = self._next_version()
-        d = self._write_data(merged, version, self.partition_columns())
         # Recorded feed: replaced target rows out, every source row in
         # (CDC semantics — a source row identical to its target twin
         # still appears and nets out in any signed fold).
@@ -1964,15 +1989,7 @@ class VersionedTable:
                 )
             )
         )
-        return self._commit(
-            self._latest(),
-            "MERGE",
-            {"keys": keys},
-            cdf=self._write_cdf_feed(feed, version),
-            data_dirs=[d],
-            schema_json=json.dumps(merged.schema.jsonValue()),
-            dv_paths=None,
-        )
+        return self._rewrite(base, "MERGE", {"keys": keys}, merged, [], feed=feed)
 
     def merge(
         self,
@@ -2017,9 +2034,28 @@ class VersionedTable:
         groupBy already counts NULL as one group, consistent with this
         mode.
         """
-        import functools
-        import operator
+        return self._merge(
+            self._latest(),
+            source,
+            keys,
+            matched,
+            not_matched,
+            validate_unique_source,
+            extra_properties,
+            null_safe_keys,
+        )
 
+    def _merge(
+        self,
+        base: Commit,
+        source: DataFrame,
+        keys: list[str],
+        matched: list[WhenMatched] | None,
+        not_matched: list[WhenNotMatched] | None,
+        validate_unique_source: bool = True,
+        extra_properties: dict[str, str] | None = None,
+        null_safe_keys: bool = False,
+    ) -> "VersionedTable":
         matched = list(matched or [])
         not_matched = list(not_matched or [])
         if not matched and not not_matched:
@@ -2028,7 +2064,7 @@ class VersionedTable:
             cl.insert is None for cl in not_matched
         )
         if star:
-            self._enforce(source.schema, merge_schema=False)
+            self._enforce(base.schema(), source.schema, merge_schema=False)
         if validate_unique_source:
             dups = (
                 source.groupBy(*keys)
@@ -2039,11 +2075,11 @@ class VersionedTable:
                 raise MergeCardinalityError(
                     f"source has duplicate rows on merge keys {keys}"
                 )
-        target = self.read()
+        target = self._scan(base)
         t = target.withColumn("__t", F.lit(1)).alias("t")
         s = source.withColumn("__s", F.lit(1)).alias("s")
-        key_cond = functools.reduce(
-            operator.and_,
+        key_cond = reduce(
+            and_,
             [
                 F.col(f"t.`{k}`").eqNullSafe(F.col(f"s.`{k}`"))
                 if null_safe_keys
@@ -2070,29 +2106,14 @@ class VersionedTable:
         is_matched = F.col("t.__t").isNotNull() & F.col("s.__s").isNotNull()
         t_present = F.col("t.__t").isNotNull()
 
-        rt = self._row_tracking_enabled()
-        id_specs = self.identity_columns()
-        if set(id_specs) & set(source.columns):
-            raise ValueError(
-                f"identity columns {sorted(set(id_specs) & set(source.columns))} "
-                "are GENERATED ALWAYS; remove them from the merge source"
-            )
+        rt = base.row_tracking()
+        id_specs = base.identity_columns()
+        # the source's own _row_id is ignored (kept rows keep the target's)
+        self._guard_minted(source.columns, id_specs, False, "the MERGE source")
         for cl in matched:
-            if cl.update and set(cl.update) & set(id_specs):
-                raise ValueError("MERGE cannot UPDATE SET an identity column")
-            if rt and cl.update and self.ROW_ID_COL in cl.update:
-                raise ValueError(
-                    f"{self.ROW_ID_COL} is engine-managed while row tracking "
-                    "is enabled; MERGE cannot UPDATE SET it"
-                )
+            self._guard_minted(cl.update or {}, id_specs, rt, "MERGE UPDATE SET")
         for cl in not_matched:
-            if cl.insert and set(cl.insert) & set(id_specs):
-                raise ValueError("MERGE cannot INSERT an identity column")
-            if rt and cl.insert and self.ROW_ID_COL in cl.insert:
-                raise ValueError(
-                    f"{self.ROW_ID_COL} is engine-managed while row tracking "
-                    "is enabled; MERGE cannot INSERT it"
-                )
+            self._guard_minted(cl.insert or {}, id_specs, rt, "MERGE INSERT")
 
         def out_col(fld: T.StructField) -> Column:
             c = fld.name
@@ -2134,7 +2155,7 @@ class VersionedTable:
             .otherwise(nidx != -1)
         )
         out_cols = [out_col(f) for f in target.schema.fields]
-        hwm = int(self.table_properties().get(self._HWM_PROP, "0"))
+        hwm = int((base.properties or {}).get(self._HWM_PROP, "0"))
         obs_rt = Observation() if rt else None
         id_obs: dict[str, Observation] = {}
 
@@ -2166,44 +2187,40 @@ class VersionedTable:
                     id_obs[col] = o
             return df
 
-        merged = finish(joined.where(keep).select(*out_cols), observe_ids=False)
-        self._check_constraints(merged)
+        self._check_constraints(
+            finish(joined.where(keep).select(*out_cols), observe_ids=False), base
+        )
         # Delta-style merge metrics observed on the join output during
         # the write pass itself (pre-filter, so deleted rows are seen;
         # no before/after snapshot counts). Built after the constraint
         # check so its limit(1) probe can't consume the observation.
         upd_idx = [i for i, cl in enumerate(matched) if not cl.delete]
-        n_upd = F.count(
-            F.when(is_matched & (midx.isin(upd_idx) if upd_idx else F.lit(False)), True)
-        ).alias("num_updated_rows")
-        n_del = F.count(
-            F.when(is_matched & (midx.isin(del_idx) if del_idx else F.lit(False)), True)
-        ).alias("num_deleted_rows")
-        n_ins = F.count(F.when(~t_present & (nidx != -1), True)).alias(
-            "num_inserted_rows"
-        )
+        upd_mask = is_matched & (midx.isin(upd_idx) if upd_idx else F.lit(False))
+        del_mask = is_matched & (midx.isin(del_idx) if del_idx else F.lit(False))
+        ins_mask = ~t_present & (nidx != -1)
         obs = Observation()
         merged_obs = finish(
-            joined.observe(obs, n_upd, n_del, n_ins).where(keep).select(*out_cols),
+            joined.observe(
+                obs,
+                F.count(F.when(upd_mask, True)).alias("num_updated_rows"),
+                F.count(F.when(del_mask, True)).alias("num_deleted_rows"),
+                F.count(F.when(ins_mask, True)).alias("num_inserted_rows"),
+            )
+            .where(keep)
+            .select(*out_cols),
             observe_ids=True,
         )
-        version = self._next_version()
-        d = self._write_data(merged_obs, version, self.partition_columns())
-        metrics = {k: int(v) for k, v in obs.get.items()}
         # Recorded change feed. Requires validated source cardinality:
         # with duplicate source keys the join emits one pre-image per
         # (target, source) PAIR, so an unvalidated merge would
         # over-count deletions in the feed — that case keeps the
         # snapshot-diff fallback.
-        cdf = None
+        feed = None
         if validate_unique_source:
             pre_cols = [
                 F.col(f"t.`{f.name}`").cast(f.dataType).alias(f.name)
                 for f in target.schema.fields
             ]
-            upd_mask = is_matched & (midx.isin(upd_idx) if upd_idx else F.lit(False))
-            del_mask = is_matched & (midx.isin(del_idx) if del_idx else F.lit(False))
-            ins_mask = (~t_present) & (nidx != -1)
             if not rt and not id_specs:
                 feed = (
                     joined.where(upd_mask | del_mask)
@@ -2237,65 +2254,54 @@ class VersionedTable:
                     if rt
                     else ("delete", "insert")
                 )
-                written = self._df_for_paths([d], target.schema, self._mapping())
                 tgt_keys = target.select(F.col(f"`{key}`"))
                 upd_keys = joined.where(upd_mask).select(
                     F.col(f"t.`{key}`").alias(key)
                 )
-                feed = (
-                    joined.where(del_mask)
-                    .select(*pre_cols)
-                    .withColumn("_change_type", F.lit("delete"))
-                    .unionByName(
-                        joined.where(upd_mask)
+
+                def feed(d: str) -> DataFrame:
+                    written = self._df_for_paths([d], target.schema, base.mapping())
+                    return (
+                        joined.where(del_mask)
                         .select(*pre_cols)
-                        .withColumn("_change_type", F.lit(pre_tag))
+                        .withColumn("_change_type", F.lit("delete"))
+                        .unionByName(
+                            joined.where(upd_mask)
+                            .select(*pre_cols)
+                            .withColumn("_change_type", F.lit(pre_tag))
+                        )
+                        .unionByName(
+                            written.join(upd_keys, on=key, how="left_semi")
+                            .withColumn("_change_type", F.lit(post_tag))
+                        )
+                        .unionByName(
+                            written.join(tgt_keys, on=key, how="left_anti")
+                            .withColumn("_change_type", F.lit("insert"))
+                        )
                     )
-                    .unionByName(
-                        written.join(upd_keys, on=key, how="left_semi")
-                        .withColumn("_change_type", F.lit(post_tag))
-                    )
-                    .unionByName(
-                        written.join(tgt_keys, on=key, how="left_anti")
-                        .withColumn("_change_type", F.lit("insert"))
-                    )
-                )
-            cdf = self._write_cdf_feed(feed, version)
-        base = self._latest()
-        props = base.properties
-        if rt:
-            max_id = obs_rt.get["max_id"]
-            if max_id is not None:
-                # never regress the watermark: an update-only merge's max
-                # surviving id can be below the stored HWM (earlier rows
-                # deleted), and reusing those ids would corrupt identity
-                props = {
-                    **(props or {}),
-                    self._HWM_PROP: str(max(hwm, int(max_id) + 1)),
-                }
-        if id_obs:
-            props = self._advance_identity(dict(props or {}), id_obs, id_specs)
-        if extra_properties:
-            # properties ride the SAME commit as the data change, so a
-            # caller tracking state in them (e.g. an incremental view's
-            # source watermark) can never observe the merge without its
-            # watermark or vice versa
-            props = {**(props or {}), **extra_properties}
-        return self._commit(
-            base,
-            "MERGE",
-            {
+
+        def params(_d) -> dict:
+            metrics = {k: int(v) for k, v in obs.get.items()}
+            return {
                 "keys": keys,
                 "matched_clauses": len(matched),
                 "not_matched_clauses": len(not_matched),
                 "num_affected_rows": sum(metrics.values()),
                 **metrics,
-            },
-            cdf=cdf,
-            data_dirs=[d],
-            schema_json=json.dumps(merged.schema.jsonValue()),
-            dv_paths=None,
-            properties=props,
+            }
+
+        def properties(_d) -> dict | None:
+            props = self._advance_minted(base.properties, id_obs, id_specs, obs_rt, hwm)
+            if extra_properties:
+                # properties ride the SAME commit as the data change, so
+                # a caller tracking state in them (e.g. an incremental
+                # view's source watermark) can never observe the merge
+                # without its watermark or vice versa
+                props = {**(props or {}), **extra_properties}
+            return props
+
+        return self._rewrite(
+            base, "MERGE", params, merged_obs, [], feed=feed, properties=properties
         )
 
     @classmethod
@@ -2367,35 +2373,22 @@ class VersionedTable:
         conflict retries — the starvation
         tests/test_streaming.py::test_maintenance_beside_active_folds
         exposed when every loop iteration burned a commit slot."""
+        base = self._latest()
+        pcols = list(base.partition_by or [])
         if target_partitions is None:
+            target_partitions = 1
             if target_file_size_bytes:
-                files, _ = self._snapshot_files()
-                total = sum(Path(f).stat().st_size for f in files)
+                total = sum(Path(f).stat().st_size for f in base.files())
                 target_partitions = max(1, -(-total // target_file_size_bytes))
-            else:
-                target_partitions = 1
-        latest = self._latest()
         if (
-            latest.operation == "OPTIMIZE"
-            and "where" not in latest.params  # partial compaction ≠ settled
-            and latest.params.get("zorder_by", []) == (zorder_by or [])
-            and (
-                self.partition_columns()
-                or len(self._snapshot_files()[0]) <= target_partitions
-            )
+            base.operation == "OPTIMIZE"
+            and "where" not in base.params  # partial compaction ≠ settled
+            and base.params.get("zorder_by", []) == (zorder_by or [])
+            and (pcols or len(base.files()) <= target_partitions)
         ):
             return self
-        pcols = self.partition_columns()
-        cur = self._compact(self.read(), pcols, zorder_by, target_partitions)
-        d = self._write_data(cur, self._next_version(), pcols)
-        return self._commit(
-            self._latest(),
-            "OPTIMIZE",
-            {"zorder_by": zorder_by or []},
-            data_dirs=[d],
-            schema_json=json.dumps(cur.schema.jsonValue()),
-            dv_paths=None,
-        )
+        cur = self._compact(self._scan(base), pcols, zorder_by, target_partitions)
+        return self._rewrite(base, "OPTIMIZE", {"zorder_by": zorder_by or []}, cur, [])
 
     @classmethod
     def _compact(
@@ -2453,21 +2446,21 @@ class VersionedTable:
         OPTIMIZE over the hot partition touches only that partition's
         files instead of rewriting the table (the full ``optimize()``).
         """
-        selected, _total = self.plan_files(predicate)
+        base = self._latest()
+        files = base.files()
+        selected, _total = self._plan(base, predicate, files)
         if not selected:
             return self  # nothing overlaps the predicate; no commit
-        files, schema = self._snapshot_files()
         sel = set(selected)
         untouched = [f for f in files if f not in sel]
         # Apply DVs while rewriting: tombstones key on the OLD file
         # paths, so a rewritten file must be materialized clean or its
         # deleted rows would resurrect under the new path.
-        df = self._df_for_paths(selected, schema, self._mapping(), self._dv())
-        pcols = self.partition_columns()
-        df = self._compact(df, pcols, zorder_by, target_partitions)
-        d = self._write_data(df, self._next_version(), pcols)
-        return self._commit(
-            self._latest(),
+        df = self._compact(
+            self._scan(base, selected), base.partition_by or [], zorder_by, target_partitions
+        )
+        return self._rewrite(
+            base,
             "OPTIMIZE",
             {
                 "where": list(predicate),
@@ -2475,8 +2468,8 @@ class VersionedTable:
                 "rewritten_files": len(selected),
                 "carried_files": len(untouched),
             },
-            data_dirs=untouched + [d],
-            schema_json=json.dumps(df.schema.jsonValue()),
+            df,
+            untouched,
         )
 
     # ------------------------------------------- liquid-style clustering
@@ -2485,64 +2478,14 @@ class VersionedTable:
         ``CLUSTER BY``): recorded as a table property; writes stay
         cheap and unclustered, ``optimize_incremental`` (or a plain
         routed ``OPTIMIZE``) restores locality incrementally."""
-        schema = T.StructType.fromJson(json.loads(self._latest().schema_json))
-        missing = set(cols) - {f.name for f in schema.fields}
+        base = self._latest()
+        missing = set(cols) - {f.name for f in base.schema().fields}
         if missing:
             raise ValueError(f"clustering columns {sorted(missing)} not in schema")
-        return self.set_properties({"spark_graft.clusterBy": ",".join(cols)})
+        return self._set_properties(base, {"spark_graft.clusterBy": ",".join(cols)})
 
     def clustering_columns(self) -> list[str]:
-        raw = self.table_properties().get("spark_graft.clusterBy", "")
-        return [c for c in raw.split(",") if c]
-
-    def _file_key_ranges(
-        self, files: list[str], col: str
-    ) -> dict[str, tuple | None]:
-        """(min, max) of ``col`` per file — log-resident stats when the
-        commit carries them, parquet footers otherwise; None when stats
-        are missing (treated as overlapping everything)."""
-        import pyarrow.parquet as pq
-
-        log_stats = self._log_stats(self._latest())
-        out: dict[str, tuple | None] = {}
-        for f in files:
-            ls = log_stats.get(f)
-            if ls is not None:
-                cs = ls["cols"].get(col)
-                out[f] = (
-                    None
-                    if cs is None or ls["rows"] == 0
-                    else (self._dec_stat(cs[0]), self._dec_stat(cs[1]))
-                )
-                continue
-            md = pq.ParquetFile(f).metadata
-            names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if col not in names or md.num_rows == 0:
-                out[f] = None
-                continue
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(names[col]).statistics
-                if st is None or not st.has_min_max:
-                    lo = None
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            # decode(encode(..)) normalizes tz-aware footer timestamps to
-            # naive UTC so ranges from footers and from log stats sort
-            # together instead of raising on naive-vs-aware comparison;
-            # unencodable stat types (bytes, decimal) degrade to None =
-            # overlap-everything, same as missing stats
-            if lo is None:
-                out[f] = None
-            else:
-                elo, ehi = self._enc_stat(lo), self._enc_stat(hi)
-                out[f] = (
-                    None
-                    if elo is None or ehi is None
-                    else (self._dec_stat(elo), self._dec_stat(ehi))
-                )
-        return out
+        return self._meta().clustering_columns()
 
     def optimize_incremental(
         self,
@@ -2575,19 +2518,25 @@ class VersionedTable:
         100 TB table costs I/O proportional to the NEW data, which is
         the entire point of liquid clustering over static Z-order.
         """
-        cols = self.clustering_columns()
+        base = self._latest()
+        cols = base.clustering_columns()
         if not cols:
             raise ValueError("no clustering columns; call cluster_by first")
-        files, schema = self._snapshot_files()
-        mapping = self._mapping()
-        keys = [mapping.get(c, c) for c in cols]
-        per_col = {k: self._file_key_ranges(files, k) for k in keys}
-        # bounding box per file across ALL clustering columns; any
-        # missing stat voids the box (treated as overlap-everything)
+        files = base.files()
+        mapping = base.mapping()
+        log_stats = self._log_stats(base)
+        # bounding box per file across ALL clustering columns (log stats,
+        # else footers); an empty file or any missing stat voids the box
+        # (treated as overlap-everything)
         boxes: dict[str, list[tuple] | None] = {}
         for f in files:
-            rs = [per_col[k][f] for k in keys]
-            boxes[f] = None if any(r is None for r in rs) else rs
+            st = self._file_stats(f, log_stats)
+            box = [st["cols"].get(mapping.get(c, c)) for c in cols]
+            boxes[f] = (
+                None
+                if st["rows"] == 0 or None in box
+                else [(self._dec_stat(lo), self._dec_stat(hi)) for lo, hi in box]
+            )
         ranges = {f: (b[0] if b else None) for f, b in boxes.items()}
         degree = {f: 0 for f in files}
         statless = [f for f in files if boxes[f] is None]
@@ -2645,7 +2594,6 @@ class VersionedTable:
         if len(selected) < min_files:
             return self  # already clustered enough: no commit, no I/O
         untouched = [f for f in files if f not in set(selected)]
-        df = self._df_for_paths(selected, schema, self._mapping(), self._dv())
         # Output granularity must let the pass CONVERGE: a fresh append
         # spans the whole key range, so rewriting it as one file would
         # re-overlap everything and be selected again next pass. Split
@@ -2666,15 +2614,12 @@ class VersionedTable:
             )
         elif not untouched:
             n_overlapped = 0
+        parts = max(1, n_overlapped)
         if target_file_size_bytes:
             total = sum(Path(f).stat().st_size for f in selected)
-            parts = max(1, n_overlapped, -(-total // target_file_size_bytes))
-        else:
-            parts = max(1, n_overlapped)
-        df = self._cluster(df, cols, parts)
-        d = self._write_data(df, self._next_version(), self.partition_columns())
-        return self._commit(
-            self._latest(),
+            parts = max(parts, -(-total // target_file_size_bytes))
+        return self._rewrite(
+            base,
             "CLUSTER",
             {
                 "cluster_by": cols,
@@ -2682,8 +2627,8 @@ class VersionedTable:
                 "carried_files": len(untouched),
                 "max_overlap": max_overlap,
             },
-            data_dirs=untouched + [d],
-            schema_json=json.dumps(df.schema.jsonValue()),
+            self._cluster(self._scan(base, selected), cols, parts),
+            untouched,
         )
 
     def optimize_fragmented(
@@ -2703,12 +2648,13 @@ class VersionedTable:
         that partition's files (a conjunctive equality predicate for
         composite partition keys).
         """
-        pcols = self.partition_columns()
+        base = self._latest()
+        pcols = list(base.partition_by or [])
         if not pcols:
             raise ValueError("optimize_fragmented needs a partitioned table")
-        files, schema = self._snapshot_files()
-        ftypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-        phys = self._mapping()  # hive paths carry physical names
+        files = base.files()
+        ftypes = {f.name: f.dataType.simpleString() for f in base.schema().fields}
+        phys = base.mapping()  # hive paths carry physical names
         counts: dict[tuple[str, ...], int] = {}
         for f in files:
             hv = _hive_values(f)
@@ -2784,9 +2730,7 @@ class VersionedTable:
         keep = all_commits[-keep_versions:]
 
         def commit_refs(c) -> set[str]:
-            out: set[str] = set()
-            for d in c.dv_paths or []:  # tombstones are live metadata
-                out.add(d)
+            out = set(c.dv_paths or [])  # tombstones are live metadata
             for d in c.data_dirs:
                 out.add(d)
                 p = Path(d)
@@ -2812,73 +2756,50 @@ class VersionedTable:
             for r in commit_refs(c):
                 if c.version > last_ref.get(r, -1):
                     last_ref[r] = c.version
-        ever_referenced = set(last_ref)
         ts_by_version = sorted((c.version, c.timestamp) for c in all_commits)
-
-        def superseded_ts(path: str) -> float | None:
-            """Timestamp of the commit that superseded ``path`` (None =
-            no successor exists, so never collect)."""
-            v = last_ref[path]
-            for ver, ts in ts_by_version:
-                if ver > v:
-                    return ts
-            return None
-        live_cdf: set[str] = set()
-        for c in keep:
-            if (c.cdf or {}).get("mode") == "parquet":
-                # recorded change feeds of kept versions stay readable
-                live_cdf.add(c.cdf["path"])
         now = time.time()
-        removed = []
-        if self.data_dir.exists():
-            for d in self.data_dir.iterdir():
-                if str(d) in live:
-                    continue
-                if str(d) not in ever_referenced:
-                    try:
-                        age = now - d.stat().st_mtime
-                    except OSError:
-                        continue  # vanished mid-scan (racing writer cleanup)
-                    if age < retention:
-                        continue  # possibly a live in-flight staging dir
-                else:
-                    ts = superseded_ts(str(d))
-                    if ts is None or now - ts < retention:
-                        continue  # a concurrent reader may still hold it
-                if not dry_run:
-                    shutil.rmtree(d)
-                removed.append(str(d))
+
+        def retired(v: int) -> bool:
+            """Version ``v`` was superseded longer than the retention
+            window ago: the FIRST later commit is that old (no later
+            commit: never retired)."""
+            ts = next((t for ver, t in ts_by_version if ver > v), None)
+            return ts is not None and now - ts >= retention
+
+        def collectable(d: Path, last_version: int | None) -> bool:
+            """A dead dir goes once retired — a concurrent reader may
+            still hold a recently superseded one — or, never referenced
+            (``last_version`` None), once its mtime is older than the
+            window: it may be a live in-flight staging dir."""
+            if last_version is not None:
+                return retired(last_version)
+            try:
+                return now - d.stat().st_mtime >= retention
+            except OSError:
+                return False  # vanished mid-scan (racing writer cleanup)
+
         # recorded change feeds share the staging race class: a feed dir
-        # is written BEFORE its commit publishes, so never-committed
-        # young dirs get the same retention benefit of the doubt.
+        # is written BEFORE its commit publishes; and a recorded feed
+        # goes dead when its version leaves the kept window (a
+        # concurrent changes() reader may still stream it)
+        live_cdf = {
+            c.cdf["path"] for c in keep if (c.cdf or {}).get("mode") == "parquet"
+        }
         ever_cdf = {
             c.cdf["path"]: c.version
             for c in all_commits
             if (c.cdf or {}).get("mode") == "parquet"
         }
-        cdf_root = self.root / "_change_data"
-        if cdf_root.exists():
-            for d in cdf_root.iterdir():
-                if str(d) in live_cdf:
+        removed = []
+        for root, live_set, last in (
+            (self.data_dir, live, last_ref),
+            (self.root / "_change_data", live_cdf, ever_cdf),
+        ):
+            if not root.exists():
+                continue
+            for d in root.iterdir():
+                if str(d) in live_set or not collectable(d, last.get(str(d))):
                     continue
-                if str(d) not in ever_cdf:
-                    try:
-                        age = now - d.stat().st_mtime
-                    except OSError:
-                        continue
-                    if age < retention:
-                        continue
-                else:
-                    # a recorded feed goes dead when its version leaves
-                    # the kept window; retention runs from the first
-                    # LATER commit, same as superseded data dirs (a
-                    # concurrent changes() reader may still stream it)
-                    v = ever_cdf[str(d)]
-                    ts = next(
-                        (t for ver, t in ts_by_version if ver > v), None
-                    )
-                    if ts is None or now - ts < retention:
-                        continue
                 if not dry_run:
                     shutil.rmtree(d)
                 removed.append(str(d))
@@ -2890,12 +2811,8 @@ class VersionedTable:
         kept_versions = {c.version for c in keep}
         live_refs = set()
         for c in all_commits:
-            if c.version not in kept_versions:
-                ts = next(
-                    (t for ver, t in ts_by_version if ver > c.version), None
-                )
-                if ts is not None and now - ts >= retention:
-                    continue
+            if c.version not in kept_versions and retired(c.version):
+                continue
             live_refs |= set((c.stats_refs or {}).values())
         if self._stats_dir().exists():
             for f in self._stats_dir().glob("*.json"):
@@ -2908,27 +2825,16 @@ class VersionedTable:
         if version is None:
             return self._latest()
         # direct by-filename lookup: time travel parses one log file
-        target = self.log_dir / f"{version:020d}.json"
-        if target.exists():
-            files = self._log_files()
-            c = self._read_commit_file(
-                target, newest=bool(files) and files[-1] == target
-            )
-            if c is not None:
-                return c
         files = self._log_files()
         if not files:
             raise FileNotFoundError(f"no versioned table at {self.root}")
-        raise ValueError(
-            f"version {version} not in history (0..{int(files[-1].stem)})"
-        )
-
-    def _dv(self, version: int | None = None) -> list[str]:
-        """Live deletion-vector directories for a snapshot ([] if none)."""
-        try:
-            return list(self._resolve_commit(version).dv_paths or [])
-        except FileNotFoundError:
-            return []
+        target = self.log_dir / f"{version:020d}.json"
+        c = self._read_commit_file(target, target == files[-1]) if target in files else None
+        if c is None:
+            raise ValueError(
+                f"version {version} not in history (0..{int(files[-1].stem)})"
+            )
+        return c
 
     def _df_for_paths(
         self,
@@ -3025,27 +2931,26 @@ class VersionedTable:
             out = out.drop("__dv_path", "__dv_idx")
         return out
 
+    def _scan(
+        self, c: Commit, paths: list[str] | None = None, with_meta: bool = False
+    ) -> DataFrame:
+        """``paths`` (default: all of ``c``'s data dirs) read under
+        ``c``'s schema and column mapping, its deletion vectors applied."""
+        return self._df_for_paths(
+            c.data_dirs if paths is None else paths,
+            c.schema(),
+            c.mapping(),
+            list(c.dv_paths or []),
+            with_meta=with_meta,
+        )
+
     def read(self, version: int | None = None) -> DataFrame:
         """Current snapshot, or D5 time travel when ``version`` given."""
-        commit = self._resolve_commit(version)  # one log-file parse
-        schema = T.StructType.fromJson(json.loads(commit.schema_json))
-        cm = commit.column_mapping or {}
-        mapping = {f.name: cm.get(f.name, f.name) for f in schema.fields}
-        return self._df_for_paths(
-            commit.data_dirs, schema, mapping, list(commit.dv_paths or [])
-        )
+        return self._scan(self._resolve_commit(version))  # one log-file parse
 
     def _snapshot_files(self, version: int | None = None) -> tuple[list[str], T.StructType]:
         commit = self._resolve_commit(version)
-        schema = T.StructType.fromJson(json.loads(commit.schema_json))
-        files: list[str] = []
-        for d in commit.data_dirs:
-            p = Path(d)
-            if p.is_file():  # partial compaction commits reference loose files
-                files.append(str(p))
-            else:  # recursive: hive-partitioned commits nest k=v dirs
-                files.extend(str(x) for x in sorted(p.glob("**/*.parquet")))
-        return files, schema
+        return commit.files(), commit.schema()
 
     def plan_files(
         self,
@@ -3065,17 +2970,25 @@ class VersionedTable:
         Delta data skipping. Pays off after ``optimize(zorder_by=…)``,
         which makes per-file ranges disjoint.
         """
-        import pyarrow.parquet as pq
+        return self._plan(self._resolve_commit(version), predicate)
 
+    def _plan(
+        self,
+        c: Commit,
+        predicate: tuple[str, str, object] | list[tuple[str, str, object]],
+        files: list[str] | None = None,
+    ) -> tuple[list[str], int]:
+        """``plan_files`` over snapshot ``c`` (``files``: its file list,
+        when the caller already has it)."""
         preds = [predicate] if isinstance(predicate, tuple) else list(predicate)
-        files, schema = self._snapshot_files(version)
-        ftypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+        files = c.files() if files is None else files
+        ftypes = {f.name: f.dataType.simpleString() for f in c.schema().fields}
         # predicates arrive with logical names; paths and footers hold
         # physical names (column-mapping tables)
-        phys = self._mapping(version)
+        phys = c.mapping()
         # log-resident stats first (metadata-only planning, the Delta
         # shape); footer reads only for files absent from the log
-        log_stats = self._log_stats(self._resolve_commit(version))
+        log_stats = self._log_stats(c)
 
         for _col, op, _val in preds:
             if op not in _SKIP_OPS:
@@ -3106,7 +3019,7 @@ class VersionedTable:
         kept = []
         for f in files:
             hv = _hive_values(f)
-            md = names = None
+            st = None
             keep = True
             for col, op, val in preds:
                 pcol = phys.get(col, col)
@@ -3122,41 +3035,14 @@ class VersionedTable:
                         keep = False
                         break
                     continue
-                ls = log_stats.get(f)
-                if ls is not None:
-                    if ls["rows"] == 0:
-                        keep = False
-                        break
-                    cs = ls["cols"].get(pcol)
-                    if cs is None:
-                        continue  # no stats for this column: keep
-                    lo, hi = self._dec_stat(cs[0]), self._dec_stat(cs[1])
-                    if not may_match(op, val, lo, hi):
-                        keep = False
-                        break
-                    continue
-                if md is None:
-                    md = pq.ParquetFile(f).metadata
-                    if md.num_rows == 0:
-                        keep = False  # empty part-file matches nothing
-                        break
-                    names = {
-                        md.schema.column(i).name: i for i in range(md.num_columns)
-                    }
-                if pcol not in names:
-                    continue  # unknown column: conservative keep
-                lo = hi = None
-                ok_stats = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(names[pcol]).statistics
-                    if st is None or not st.has_min_max:
-                        ok_stats = False
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if not ok_stats or lo is None:
-                    continue  # missing stats: conservative keep
-                if not may_match(op, val, lo, hi):
+                st = st or self._file_stats(f, log_stats)
+                if st["rows"] == 0:
+                    keep = False  # empty part-file matches nothing
+                    break
+                cs = st["cols"].get(pcol)
+                if cs is None:
+                    continue  # no stats for this column: conservative keep
+                if not may_match(op, val, self._dec_stat(cs[0]), self._dec_stat(cs[1])):
                     keep = False
                     break
             if keep:
@@ -3173,17 +3059,15 @@ class VersionedTable:
         Semantically identical to ``read().where(...)``; the pruned file
         list is the I/O win."""
         preds = [predicate] if isinstance(predicate, tuple) else list(predicate)
-        kept, _ = self.plan_files(preds, version)
-        _, schema = self._snapshot_files(version)
+        c = self._resolve_commit(version)
+        kept, _ = self._plan(c, preds)
         if not kept:
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], c.schema())
         # Column expressions, not interpolated SQL text: values with
         # quotes, dates, Decimals, etc. are bound as literals, never
         # spliced into a parseable string.
         cond = reduce(and_, (_predicate_column(*p) for p in preds))
-        return self._df_for_paths(
-            kept, schema, self._mapping(version), self._dv(version)
-        ).where(cond)
+        return self._scan(c, kept).where(cond)
 
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Change data feed (Delta CDF / ``table_changes`` analogue):
@@ -3222,22 +3106,20 @@ class VersionedTable:
         already-present row still surfaces as one 'insert'. The update
         refinement adds one id-keyed intersect + two id-keyed joins.
         """
-        to_v = (
-            to_version if to_version is not None else self._latest().version
-        )
-        recorded = self._recorded_changes(from_version, to_v)
+        to_c = self._resolve_commit(to_version)
+        recorded = self._recorded_changes(from_version, to_c.version)
         self.last_changes_route = "recorded" if recorded is not None else "diff"
         if recorded is not None:
             return recorded
-        newer = self.read(version=to_version)
-        older = self.read(version=from_version)
+        from_c = self._resolve_commit(from_version)
+        newer, older = self._scan(to_c), self._scan(from_c)
         # align the older snapshot to the newer schema (evolution-safe:
         # columns added since from_version read as NULL, like Delta CDF).
         # Column identity is the PHYSICAL name (column-mapping tables):
         # a renamed column is the same column, not a drop+add, so a
         # metadata-only rename produces an empty change feed.
-        new_phys = self._mapping(to_version)
-        old_logical = {p: l for l, p in self._mapping(from_version).items()}
+        new_phys = to_c.mapping()
+        old_logical = {p: l for l, p in from_c.mapping().items()}
 
         def src(name: str) -> str | None:
             cand = old_logical.get(new_phys.get(name, name), name)
@@ -3295,7 +3177,7 @@ class VersionedTable:
         if not commits:
             return None
         target = commits[-1]
-        schema = T.StructType.fromJson(json.loads(target.schema_json))
+        schema = target.schema()
         to_types = {f.name: f.dataType for f in schema.fields}
         # Recorded feeds are stored in their commit's schema and read
         # back under the TO-version schema (schema-enforced parquet
@@ -3306,11 +3188,10 @@ class VersionedTable:
         for c in commits[1:]:
             if c.column_mapping != target.column_mapping:
                 return None
-            for f in T.StructType.fromJson(json.loads(c.schema_json)).fields:
+            for f in c.schema().fields:
                 if to_types.get(f.name) != f.dataType:
                     return None
-        cm = target.column_mapping or {}
-        mapping = {f.name: cm.get(f.name, f.name) for f in schema.fields}
+        mapping = target.mapping()
         feed_schema = T.StructType(
             list(schema.fields) + [T.StructField("_change_type", T.StringType())]
         )
@@ -3383,7 +3264,7 @@ class VersionedTable:
         constraints, version span. Computed from the commit log + file
         footers only; no data read."""
         commit = self._latest()
-        files, schema = self._snapshot_files()
+        files = commit.files()
         # tombstone rows from DV parquet footers only (driver-side, no
         # scan); counts dangling tombstones too, so it is an upper bound
         # on logically-deleted rows — exact after any REORG.
@@ -3403,11 +3284,11 @@ class VersionedTable:
             "constraints": dict(commit.constraints or {}),
             "num_deletion_vectors": len(commit.dv_paths or []),
             "num_tombstone_rows": num_tombstones,
-            "clustering_columns": self.clustering_columns(),
-            "identity_columns": sorted(self.identity_columns()),
-            "not_null_columns": self.not_null_columns(),
+            "clustering_columns": commit.clustering_columns(),
+            "identity_columns": sorted(commit.identity_columns()),
+            "not_null_columns": commit.not_null_columns(),
             "properties": dict(commit.properties or {}),
-            "num_columns": len(schema.fields),
+            "num_columns": len(commit.schema().fields),
             "created_version_timestamp": json.loads(
                 self._log_files()[0].read_text()
             )["timestamp"],
@@ -3416,5 +3297,4 @@ class VersionedTable:
 
     def describe(self) -> list[tuple[str, str]]:
         """D8 DESCRIBE TABLE: (column, type) pairs of the live schema."""
-        schema = T.StructType.fromJson(json.loads(self._latest().schema_json))
-        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+        return [(f.name, f.dataType.simpleString()) for f in self._latest().schema().fields]

@@ -10,11 +10,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_spark.lake.versioned import (
+    CommitConflict,
     ConstraintViolationError,
     SchemaEnforcementError,
     VersionedTable,
     WhenMatched,
     WhenNotMatched,
+    retry_on_conflict,
 )
 from data_pipeline_with_spark_spark.lake.zones import LakeLayout, run_reference_pipeline
 
@@ -2691,3 +2693,161 @@ def test_metadata_op_carries_every_field_it_does_not_own(spark, rich_table, tmp_
         if getattr(new, f.name) != getattr(base, f.name)
     }
     assert changed - per_commit <= owned
+
+
+@pytest.fixture(scope="module")
+def race_table(spark, tmp_path_factory):
+    """Two overlapping files (ids 0..9, v = id), a deletion vector on
+    id 9, clustered by id: every rewriting op has work to do."""
+    root = tmp_path_factory.mktemp("race") / "base"
+    t = VersionedTable(spark, str(root)).create(
+        spark.createDataFrame([(i, i) for i in range(0, 10, 2)], "id INT, v INT").coalesce(1)
+    )
+    t.append(
+        spark.createDataFrame([(i, i) for i in range(1, 10, 2)], "id INT, v INT").coalesce(1)
+    )
+    t.delete("id = 9", use_dv=True)
+    t.cluster_by(["id"])
+    return root
+
+
+def _race_copy(spark, race_table, tmp_path) -> VersionedTable:
+    import shutil
+
+    root = tmp_path / "t"
+    shutil.copytree(race_table, root)  # log paths stay absolute: shared data
+    return VersionedTable(spark, str(root))
+
+
+_RACE_BATCH = [(50 + i, 50 + i) for i in range(5)]
+_RACE_OTHER = [(100 + i, 100 + i) for i in range(5)]
+
+# op -> (run it on a handle, its effect on a list of (id, v) rows)
+_RACE_OPS = {
+    "update": (
+        lambda t: t.update("id < 4", {"v": "v + 100"}),
+        lambda rows: [(i, v + 100 if i < 4 else v) for i, v in rows],
+    ),
+    "delete": (
+        lambda t: t.delete("id < 4", use_dv=False),
+        lambda rows: [(i, v) for i, v in rows if i >= 4],
+    ),
+    "delete_dv": (
+        lambda t: t.delete("id < 4", use_dv=True),
+        lambda rows: [(i, v) for i, v in rows if i >= 4],
+    ),
+    "optimize_where": (lambda t: t.optimize_where(("id", ">=", 0)), list),
+    "optimize_incremental": (lambda t: t.optimize_incremental(max_overlap=0), list),
+    "purge_deletion_vectors": (lambda t: t.purge_deletion_vectors(), list),
+    "merge": (
+        lambda t: t.merge(
+            t.spark.createDataFrame([(2, -1), (20, -1)], "id INT, v INT"),
+            ["id"],
+            matched=[WhenMatched()],
+            not_matched=[WhenNotMatched()],
+        ),
+        lambda rows: [(i, -1 if i == 2 else v) for i, v in rows] + [(20, -1)],
+    ),
+    "idempotent_append": (
+        lambda t: t.idempotent_append(
+            t.spark.createDataFrame(_RACE_BATCH, "id INT, v INT"), "app", 0
+        ),
+        list,  # the injected writer replays this same batch
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_RACE_OPS))
+def test_op_commits_on_the_snapshot_it_read_or_conflicts(
+    spark, race_table, tmp_path, monkeypatch, op
+):
+    # A second handle's write lands right after the op's first commit-log
+    # parse. The op must then raise CommitConflict or keep those rows —
+    # never drop them, never apply a batch twice — and a retry lands both.
+    from data_pipeline_with_spark_spark.lake import versioned as V
+
+    t = _race_copy(spark, race_table, tmp_path)
+    other = VersionedTable(spark, str(t.root))
+    if op == "idempotent_append":
+        injected = _RACE_BATCH
+        batch = spark.createDataFrame(_RACE_BATCH, "id INT, v INT")
+        write = lambda: other.idempotent_append(batch, "app", 0)  # noqa: E731
+    else:
+        injected = _RACE_OTHER
+        write = lambda: other.append(  # noqa: E731
+            spark.createDataFrame(_RACE_OTHER, "id INT, v INT")
+        )
+    armed = [True]
+
+    class Injecting(V.Commit):
+        # every log parse builds a Commit: the first one fires the write
+        def __init__(self, *a, **k):
+            super().__init__(*a, **k)
+            if armed[0]:
+                armed[0] = False
+                write()
+
+    monkeypatch.setattr(V, "Commit", Injecting)
+    run, effect = _RACE_OPS[op]
+    try:
+        run(t)
+        landed = True
+    except CommitConflict:
+        landed = False
+    assert not armed[0]
+    ids = [r.id for r in t.read().collect()]
+    assert all(ids.count(i) == 1 for i, _ in injected), (landed, sorted(ids))
+    if not landed:
+        retry_on_conflict(lambda: run(t))
+    rows = sorted((r.id, r.v) for r in t.read().collect())
+    assert rows == sorted(effect([(i, i) for i in range(9)] + injected))
+
+
+def test_idempotent_append_waits_out_inflight_publish(spark, tmp_path):
+    # The marker scan reads only commits up to the base version: a young,
+    # unparsable newest entry (a live O_EXCL publish still copying) is
+    # left to the settle barrier, which waits it out and then conflicts.
+    import json as _json
+    import threading as _threading
+    import time as _time
+
+    t = VersionedTable(spark, str(tmp_path / "t")).create(
+        spark.createDataFrame([(1, 1)], "id INT, v INT")
+    )
+    base = t._latest()
+    inflight = t.log_dir / f"{base.version + 1:020d}.json"
+    inflight.write_text("")  # slot claimed, content not yet synced
+    done = _json.dumps({**base.__dict__, "version": base.version + 1})
+    w = _threading.Thread(target=lambda: (_time.sleep(1.0), inflight.write_text(done)))
+    batch = spark.createDataFrame([(2, 2)], "id INT, v INT")
+    w.start()
+    try:
+        with pytest.raises(CommitConflict):
+            t.idempotent_append(batch, "app", 0)
+    finally:
+        w.join()
+    assert t.idempotent_append(batch, "app", 0)
+    assert not t.idempotent_append(batch, "app", 0)
+    assert sorted(r.id for r in t.read().collect()) == [1, 2]
+
+
+@pytest.mark.parametrize(
+    "rewrite",
+    [
+        lambda t: t.optimize_where(("id", ">=", 0)),
+        lambda t: t.optimize_incremental(max_overlap=0),
+    ],
+    ids=["optimize_where", "optimize_incremental"],
+)
+def test_whole_table_rewrite_drops_dangling_deletion_vectors(
+    spark, race_table, tmp_path, rewrite
+):
+    # Rewritten files were read with their tombstones applied; with no
+    # file carried over, every tombstone dangles and must not be kept.
+    t = _race_copy(spark, race_table, tmp_path)
+    assert t.detail()["num_deletion_vectors"] == 1
+    rewrite(t)
+    assert t._latest().params["carried_files"] == 0
+    assert t.detail()["num_deletion_vectors"] == 0
+    assert "LeftAnti" not in t.read()._jdf.queryExecution().optimizedPlan().toString()
+    assert t.read().count() == 9

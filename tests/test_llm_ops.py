@@ -353,8 +353,9 @@ def test_topk_recall_summary_flags_flip(spark):
     short = spark.createDataFrame(
         [(0, 10, 1.0, 1)], ["q_id", "neighbor_id", "cos_sim", "rnk"]
     )
-    row = similarity.topk_recall_summary(short, exact, k=3, floor=0.5).collect()
-    assert row[0].n_returned == 1 and not row[0].recall_ok
+    by_q = {r.query_id: r for r in similarity.topk_recall_summary(
+        short, exact, k=3, floor=0.5).collect()}
+    assert by_q[0].n_returned == 1 and not by_q[0].recall_ok
 
     # a query the approximate side returns nothing for still counts: it
     # reads 0 returned and recall 0, so the mean here is (1 + 0) / 2
