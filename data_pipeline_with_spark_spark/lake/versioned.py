@@ -2723,9 +2723,10 @@ class VersionedTable:
             else orphan_retention_seconds
         )
         # strict parse, unlike history(): skipping an in-flight RESTORE
-        # here could delete the old dirs it points back to
+        # here could delete the old dirs it points back to, so a live
+        # publish at the tail is waited out, never skipped
         all_commits = [
-            Commit(**json.loads(f.read_text())) for f in self._log_files()
+            Commit(**json.loads(f.read_text())) for f in self._settle_log_tail()
         ]
         keep = all_commits[-keep_versions:]
 

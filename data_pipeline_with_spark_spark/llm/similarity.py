@@ -25,6 +25,18 @@ shortlist's vectors, score exact L2, rank), ``_lloyd_means`` (the
 distributed Lloyd mean step) and ``_load_quantizer`` (an index's
 centroids and codebooks, cached on the artifacts' mtimes).
 
+Every search that broadcasts its queries gets them from one
+``_query_side``: ONE bounded Arrow collect (at most
+``MAX_BROADCAST_QUERIES + 1`` rows) fails fast past the bound, else
+freezes the rows on the driver and hands back a ``LocalTableScan``
+frame of them to broadcast. Every later decision (|Q|, probed cells,
+driver LUTs) reads those frozen rows, so a sample- or limit-derived
+query set is drawn exactly once, and nothing is persisted. Probe cells
+have one ranker, ``_rank_cells``: numpy over the frozen rows with the
+SQL kernels' sequential double folds (bit-identical scores) and a
+stable argsort, so a tie goes to the lowest cell. The probed-cell
+literal that prunes cell directories comes from the driver.
+
 All arithmetic is element-wise double (cast from float32 first, then a
 sequential fold), and final scores round to 6 decimals so rankings are
 stable across engines.
@@ -32,18 +44,18 @@ stable across engines.
 
 from __future__ import annotations
 
+import hashlib
 import math
+import operator
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from data_pipeline_with_spark_spark.util import (
     arrow_local_df,
     ensure_min_partitions,
     exploded,
-    session_cache,
-    session_cache_forget,
     too_big_to_broadcast,
 )
 
@@ -112,17 +124,6 @@ def _top_k(
     )
 
 
-def _query_vectors(
-    queries: DataFrame, id_col: str, emb_col: str, query_id_col: str
-) -> DataFrame:
-    """The L2 searches' query side: (query_id_col, ``__q`` double
-    array). NULL embeddings have no distance and are dropped, uniform
-    with ``_ivfpq_assign``'s index-side exclusion."""
-    return queries.where(F.col(emb_col).isNotNull()).select(
-        F.col(id_col).alias(query_id_col), _as_double(F.col(emb_col)).alias("__q")
-    )
-
-
 def _cosine_topk(
     pairs: DataFrame, k: int, id_col: str, emb_col: str, query_id_col: str
 ) -> DataFrame:
@@ -137,11 +138,10 @@ def _cosine_topk(
     )
 
 
-# Both the brute-force scorer and the IVF probe BROADCAST the query
-# side: right for the intended regime (|queries| ≪ corpus — ad-hoc
-# search, eval probes), wrong past executor memory. The guard below
-# fails fast with the remedy instead of letting the broadcast OOM an
-# executor at scale.
+# Every exact and ANN search BROADCASTS the query side: right for the
+# intended regime (|queries| ≪ corpus — ad-hoc search, eval probes),
+# wrong past executor memory. ``_query_side`` fails fast with the remedy
+# instead of letting the broadcast OOM an executor at scale.
 MAX_BROADCAST_QUERIES = 100_000
 
 # PQ re-rank shortlists are (q_id, neighbor_id) pairs — 16 bytes of
@@ -150,40 +150,94 @@ MAX_BROADCAST_QUERIES = 100_000
 SHORTLIST_BROADCAST_MAX_ROWS = 2_000_000
 
 
-def _guard_query_side(q: DataFrame, op: str) -> tuple[DataFrame, int]:
-    """Enforce the broadcast size bound entirely JVM-side: persist the
-    (small) query side, probe its cardinality with a bounded
-    ``limit(MAX+1).count()`` job, and hand back (persisted frame,
-    count) for ``F.broadcast`` and downstream size decisions (callers
-    price shortlists/LUT relations from the count instead of re-running
-    the job). No row ever crosses to the Python driver, and the plan
-    never carries a ``Scan ExistingRDD``.
-
-    The cache is registered via util.session_cache with ``spill=True``
-    (MEMORY_AND_DISK): query sets are often sample()/limit-derived —
-    nondeterministic lineage — and later driver decisions (the counted
-    bound, IVF's collected probe-cell set) assume THIS materialization,
-    so an eviction-triggered recompute would silently desync them;
-    spilling cannot. The frame outlives this call (consumers
-    materialize it lazily), so it cannot be unpersisted here;
-    util.release_session_caches() frees it deterministically."""
-    q = session_cache(q, spill=True)
-    n = q.limit(MAX_BROADCAST_QUERIES + 1).count()
-    if n > MAX_BROADCAST_QUERIES:
-        _reject_query_side(q, op)
-    return q, n
+def _query_side(projection: DataFrame, op: str):
+    """The query side of every broadcast search: ONE bounded Arrow
+    collect of ``projection`` (its first ``MAX_BROADCAST_QUERIES + 1``
+    rows — one job, no row past the bound reaches the driver), the
+    remedy ``ValueError`` past the bound, else ``(rows, frame)``: the
+    frozen ``pyarrow.Table`` and a ``LocalTableScan`` frame of it to
+    broadcast. Callers read |Q| as ``len(rows)`` and rank probe cells
+    from ``rows``, so every decision sees the same rows the join does,
+    even when ``projection`` is sample()- or limit()-derived."""
+    rows = projection.limit(MAX_BROADCAST_QUERIES + 1).toArrow()
+    if len(rows) > MAX_BROADCAST_QUERIES:
+        raise ValueError(
+            f"{op} broadcasts the query set, sized for |queries| <= "
+            f"{MAX_BROADCAST_QUERIES}; got more. For query sets at corpus "
+            "scale use the bucketed self-join shape instead "
+            "(embedding_near_dup_pairs / lsh_bucketed_topk with the big "
+            "side as corpus)."
+        )
+    return rows, arrow_local_df(projection.sparkSession, rows)
 
 
-def _reject_query_side(q: DataFrame, op: str) -> None:
-    """Free the persisted query side and fail with the remedy."""
-    q.unpersist()
-    session_cache_forget(q)
-    raise ValueError(
-        f"{op} broadcasts the query set, sized for |queries| <= "
-        f"{MAX_BROADCAST_QUERIES}; got more. For query sets at corpus "
-        "scale use the bucketed self-join shape instead "
-        "(embedding_near_dup_pairs / lsh_bucketed_topk with the big "
-        "side as corpus)."
+def _l2_query_side(
+    queries: DataFrame, id_col: str, emb_col: str, query_id_col: str, op: str
+):
+    """``_query_side`` of the L2 searches: (query_id_col, ``__q`` double
+    array). NULL embeddings have no distance and are dropped, uniform
+    with ``_ivfpq_assign``'s index-side exclusion — after the collect,
+    so a filter never splits the caller's own limit from the bound's
+    (one job, not a shuffle plus one); the bound counts every query."""
+    rows, q = _query_side(
+        queries.select(
+            F.col(id_col).alias(query_id_col), _as_double(F.col(emb_col)).alias("__q")
+        ),
+        op,
+    )
+    return rows.filter(rows.column("__q").is_valid()), q.where(F.col("__q").isNotNull())
+
+
+def _np_fold(a, b, term=operator.mul):
+    """numpy twin of the SQL folds (``dot``, ``_sq_dist_cols``):
+    ``term(a_i, b_i)`` summed over the last axis in the same sequential
+    double order, so a driver-side score is bit-identical to the one an
+    executor computes. Broadcasts over the leading axes."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for t in range(a.shape[-1]):
+        acc = acc + term(a[..., t], b[..., t])
+    return acc
+
+
+def _sq_term(x, y):
+    return (x - y) * (x - y)
+
+
+def _vectors(rows, col: str, dim: int):
+    """Column ``col`` of the frozen query rows as an (n, ``dim``)
+    float64 matrix; a NULL vector becomes a row of NaN (it scores
+    nothing)."""
+    vals = rows.column(col).to_pylist()
+    filled = [[math.nan] * dim if v is None else v for v in vals]
+    return np.array(filled, dtype=np.float64).reshape(len(vals), dim)
+
+
+def _rank_cells(vecs, centroid_list, n_probe: int, metric: str):
+    """The one probe-cell ranker: per query row of ``vecs``, the
+    ``n_probe`` nearest cells (an (n, min(n_probe, n_cells)) int array)
+    by ``metric`` ("cosine" — highest first — or "l2" squared distance).
+    Scores are the SQL kernels' folds (``_np_fold``); the stable argsort
+    sends a tie to the lowest cell and a NaN score last."""
+    C = np.asarray(centroid_list, dtype=np.float64)
+    X = vecs[:, None, :]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        if metric == "cosine":
+            norms = np.sqrt(_np_fold(X, X)) * np.sqrt(_np_fold(C, C))
+            score = -(_np_fold(X, C) / norms)
+        else:
+            score = _np_fold(X, C, _sq_term)
+    return np.argsort(score, axis=1, kind="stable")[:, :n_probe]
+
+
+def _with_cells(rows, cells):
+    """The (query, cell) pairs a probe joins on: ``rows`` repeated once
+    per ranked cell of ``cells`` (from ``_rank_cells``), plus an INT
+    ``cell`` column."""
+    import pyarrow as pa
+
+    n, take = cells.shape
+    return rows.take(np.repeat(np.arange(n), take)).append_column(
+        "cell", pa.array(cells.ravel(), pa.int32())
     )
 
 
@@ -197,7 +251,7 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k neighbors per query. Queries broadcast; the
     corpus is scanned once; ranking window partitions by query."""
-    q, _ = _guard_query_side(
+    _, q = _query_side(
         queries.select(F.col(id_col).alias(query_id_col), F.col(emb_col).alias("q_emb")),
         "brute_force_topk",
     )
@@ -249,8 +303,8 @@ def brute_force_l2_topk(
     are excluded from BOTH sides, matching ``_ivfpq_assign``'s uniform
     exclusion: an unfiltered NULL candidate would score a NULL
     distance, which ``_top_k`` ranks last as defense in depth."""
-    q, _ = _guard_query_side(
-        _query_vectors(queries, id_col, emb_col, query_id_col), "brute_force_l2_topk"
+    _, q = _l2_query_side(
+        queries, id_col, emb_col, query_id_col, "brute_force_l2_topk"
     )
     scored = (
         ensure_min_partitions(corpus)
@@ -471,26 +525,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def _rank_cells_cosine(
-    q: DataFrame, centroid_list: list[list[float]], n_probe: int, query_id_col: str
-) -> DataFrame:
-    """Top-``n_probe`` cells per query by cosine — a pure PROJECTION
-    over the guarded query frame: one ``transform`` over the nested
-    centroid literal, ``array_sort`` on (−cos, cell) structs (ties to
-    the lowest cell), slice, explode. No centroid broadcast and no
-    per-query window."""
-    cent_lit = _double_lit(centroid_list)
-    dists = F.transform(cent_lit, lambda c: -cosine(F.col("q_emb"), c))
-    ranked = F.array_sort(
-        F.transform(
-            dists, lambda dist, i: F.struct(dist.alias("dist"), i.alias("cell"))
-        )
-    )
-    return exploded(
-        q, [query_id_col, "q_emb"], F.slice(ranked, 1, n_probe), "__rc"
-    ).select(query_id_col, "q_emb", F.col("__rc.cell").alias("cell"))
-
-
 def _ivf_probe(
     centroid_list: list[list[float]],
     cells_for,
@@ -503,21 +537,25 @@ def _ivf_probe(
     op: str,
 ) -> DataFrame:
     """The cosine IVF probe shared by ``ivf_topk`` and
-    ``ivf_probe_topk``: guard the query side, rank its ``n_probe``
-    cells, join the corpus rows of those cells (``cells_for(q_cells)``)
-    and score exact cosine inside them."""
-    q, n_q = _guard_query_side(
+    ``ivf_probe_topk``: take the query side, rank each query's
+    ``n_probe`` cells on the driver, join the corpus rows of the probed
+    cells (``cells_for(sorted cell list)``) and score exact cosine
+    inside them."""
+    rows, _ = _query_side(
         queries.select(F.col(id_col).alias(query_id_col), F.col(emb_col).alias("q_emb")),
         op,
     )
-    q_cells = _rank_cells_cosine(q, centroid_list, n_probe, query_id_col)
-    cells = cells_for(q_cells)
+    cells = _rank_cells(
+        _vectors(rows, "q_emb", len(centroid_list[0])), centroid_list, n_probe, "cosine"
+    )
+    q_cells = arrow_local_df(queries.sparkSession, _with_cells(rows, cells))
     # q_cells is |Q| × n_probe rows each carrying the full query vector
-    # — n_probe× the guarded relation; hint only under the bound
-    if n_q * n_probe <= MAX_BROADCAST_QUERIES:
+    # — n_probe× the query side; hint only under the bound
+    if len(rows) * n_probe <= MAX_BROADCAST_QUERIES:
         q_cells = F.broadcast(q_cells)
+    probed = cells_for(np.unique(cells).tolist())
     return _cosine_topk(
-        cells.join(q_cells, on="cell"), k, id_col, emb_col, query_id_col
+        probed.join(q_cells, on="cell"), k, id_col, emb_col, query_id_col
     )
 
 
@@ -580,13 +618,7 @@ def ivf_build_index(
     assigned.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/data"
     )
-    spark = corpus.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(clist)],
-        ["cell", "centroid"],
-    )
-    centroids.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    return centroids
+    return _write_centroids(corpus.sparkSession, path, clist)
 
 
 def ivf_probe_topk(
@@ -600,19 +632,15 @@ def ivf_probe_topk(
     query_id_col: str = "q_id",
 ) -> DataFrame:
     """Probe a materialized IVF index (see `ivf_build_index`): rank
-    cells per query, push the distinct probed-cell set into the
-    partitioned read as an IN filter (Catalyst turns it into
+    cells per query on the driver, push the probed-cell set into the
+    partitioned read as an IN literal (Catalyst turns it into
     PartitionFilters — only those directories are listed/scanned),
-    then exact cosine + top-k inside the probed cells. Driver traffic
-    is ≤ n_cells ints; everything row-scale stays distributed.
-    Centroids load through ``_load_quantizer``."""
+    then exact cosine + top-k inside the probed cells. Everything
+    row-scale on the corpus side stays distributed. Centroids load
+    through ``_load_quantizer``."""
     clist, _ = _load_quantizer(spark, path, with_books=False)
 
-    def cells_for(q_cells):
-        # The probed-cell set is tiny (≤ n_cells): collect it so the
-        # scan carries a literal partition predicate and prunes
-        # directories.
-        cells = sorted({r.cell for r in q_cells.select("cell").distinct().collect()})
+    def cells_for(cells):
         return spark.read.parquet(f"{path}/data").where(F.col("cell").isin(cells))
 
     return _ivf_probe(
@@ -833,8 +861,6 @@ def semantic_dedup_auto(
     # or not (SemDeDup's representative-per-group rule would compare
     # only vs kept rows; the twin's rule is the pinned contract).
     def drop_dups(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[emb_col]])
         norms = np.sqrt((X * X).sum(axis=1))
@@ -1133,18 +1159,16 @@ def pq_topk(
     Ranking ascends distance with the id tiebreak; ``adc_dist`` rounds
     to 6 decimals for cross-engine-stable ordering.
 
-    NULL query embeddings are excluded at the guard projection and
-    legacy NULL-codes rows (older ``pq_encode`` output) are skipped,
-    uniform with ``_ivfpq_assign``."""
-    q, _ = _guard_query_side(
-        _query_vectors(queries, id_col, emb_col, query_id_col), "pq_topk"
-    )
-    return _pq_topk_on_guarded(
+    NULL query embeddings are excluded from the query side and legacy
+    NULL-codes rows (older ``pq_encode`` output) are skipped, uniform
+    with ``_ivfpq_assign``."""
+    _, q = _l2_query_side(queries, id_col, emb_col, query_id_col, "pq_topk")
+    return _pq_adc_topk(
         codes_df, q, codebooks, k, id_col, query_id_col
     ).select(query_id_col, F.col(id_col).alias("neighbor_id"), "adc_dist", "rnk")
 
 
-def _pq_topk_on_guarded(
+def _pq_adc_topk(
     codes_df: DataFrame,
     q: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1152,11 +1176,11 @@ def _pq_topk_on_guarded(
     id_col: str,
     query_id_col: str,
 ) -> DataFrame:
-    """ADC top-k over an ALREADY-guarded query frame (columns
-    ``query_id_col, __q``) — the shared core of ``pq_topk`` and
-    ``pq_topk_refined``, so the refined path guards the query side
-    once. The per-query LUTs are computed against the codebooks riding
-    a broadcast 1-row constants frame."""
+    """ADC top-k over a query-side frame (columns ``query_id_col,
+    __q``) — the shared core of ``pq_topk`` and ``pq_topk_refined``, so
+    the refined path collects its query side once. The per-query LUTs
+    are computed against the codebooks riding a broadcast 1-row
+    constants frame."""
     m, d = len(codebooks), len(codebooks[0][0])
     books = _nested_const_df(q.sparkSession, "__books", codebooks, 3)
     q_lut = q.crossJoin(F.broadcast(books)).select(
@@ -1206,17 +1230,17 @@ def pq_topk_refined(
     ``shortlist_factor`` while the exact-math cost stays
     O(|Q| × k × factor), never O(corpus).
 
-    The query side is guarded once (persisted; its count prices the
-    shortlist with no extra job over raw ``queries``, whose lineage may
-    be arbitrarily expensive to re-execute)."""
-    q, n_q = _guard_query_side(
-        _query_vectors(queries, id_col, emb_col, query_id_col), "pq_topk_refined"
+    The query side is collected once (``_query_side``); its row count
+    prices the shortlist with no job over raw ``queries``, whose
+    lineage may be arbitrarily expensive to re-execute."""
+    rows, q = _l2_query_side(
+        queries, id_col, emb_col, query_id_col, "pq_topk_refined"
     )
-    cand = _pq_topk_on_guarded(
+    cand = _pq_adc_topk(
         codes_df, q, codebooks, k * shortlist_factor, id_col, query_id_col
     ).select(query_id_col, F.col(id_col).alias("neighbor_id"))
     return _exact_rerank(
-        corpus.where(F.col(emb_col).isNotNull()), cand, q, n_q * k * shortlist_factor,
+        corpus.where(F.col(emb_col).isNotNull()), cand, q, len(rows) * k * shortlist_factor,
         k, id_col, emb_col, query_id_col,
     )
 
@@ -1237,7 +1261,7 @@ def _exact_rerank(
     (query_id_col, ``__q``) and rank the ``k`` best.
 
     The shortlist is |Q| × k × factor rows — NOT bounded by the query
-    guard (100k queries × k=5 × factor=10 is already 5M rows), so it
+    side's bound (100k queries × k=5 × factor=10 is already 5M rows), so it
     broadcasts only when its known size ``n_shortlist`` is under
     SHORTLIST_BROADCAST_MAX_ROWS (the point-read shape); above it the
     fetch is a plain equi-join, which AQE plans as a shuffle on ids."""
@@ -1273,8 +1297,6 @@ def _lloyd_numpy(X, k: int, iters: int):
     these rules (same centroids → same assignment → same means), so the
     early exit can never change the result of a fixed-iteration run.
     """
-    import numpy as np
-
     C = X[:k].copy()
     for _ in range(iters):
         lab = _nearest_numpy(X, C)
@@ -1329,8 +1351,6 @@ def _fit_coarse_centroids(
     SQL literal assignment, and the collected sample matrix for
     callers that train further quantizers on the same rows (residual
     PQ)."""
-    import numpy as np
-
     corpus = corpus.where(F.col(emb_col).isNotNull())
     n = corpus.count()
     train = corpus
@@ -1356,6 +1376,19 @@ def _fit_coarse_centroids(
     X = np.asarray([r["__v"] for r in sample], dtype=np.float64)
     C = _lloyd_numpy(X, n_cells, iters)
     return [[float(x) for x in c] for c in C], X
+
+
+def _write_centroids(spark, path: str, centroid_list) -> DataFrame:
+    """Write an index's coarse quantizer to ``{path}/centroids`` as
+    (cell INT, centroid ARRAY<DOUBLE>) — one Arrow frame, one file —
+    and return the frame. Both index kinds write through here."""
+    centroids = arrow_local_df(
+        spark,
+        {"cell": list(range(len(centroid_list))), "centroid": centroid_list},
+        "cell INT, centroid ARRAY<DOUBLE>",
+    )
+    centroids.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    return centroids
 
 
 def _ivfpq_train(
@@ -1389,18 +1422,12 @@ def _ivfpq_train(
     encoding distributed. The residual codebooks follow ``pq_train``'s
     rules (empty codes keep their previous centroid, ties to the lowest
     code) on residuals of the FINAL coarse assignment."""
-    import numpy as np
-
     spark = corpus.sparkSession
     centroid_list, X = _fit_coarse_centroids(
         corpus, n_cells, id_col, emb_col, seed, max_train_rows
     )
     C = np.asarray(centroid_list, dtype=np.float64)
-    arrow_local_df(
-        spark,
-        {"cell": list(range(len(centroid_list))), "centroid": centroid_list},
-        "cell INT, centroid ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, path, centroid_list)
     assigned = _ivfpq_assign(corpus, centroid_list, id_col, emb_col).persist()
     if X.shape[0] < k_codes:
         raise ValueError(
@@ -1523,20 +1550,6 @@ def _artifact_sig(path: str, sub: str) -> tuple:
         return (sub, None)
 
 
-def _probe_plan_sig(centroid_list, books) -> str:
-    """Content fingerprint of the quantizer values for the probe's
-    Column-fragment cache: md5 over the exact float reprs (repr
-    round-trips doubles, so distinct quantizers can't collide short of
-    an md5 collision). ~100 KB hashed in well under a millisecond —
-    noise next to the ~1.8 s of Column construction it gates."""
-    import hashlib
-
-    h = hashlib.md5()
-    h.update(repr(centroid_list).encode())
-    h.update(repr(books).encode())
-    return h.hexdigest()
-
-
 def _probe_const_df(spark, centroid_list, books) -> DataFrame:
     """ONE-row persisted frame carrying the probe constants
     (``__cents`` = cell-indexed centroids, ``__books`` = PQ codebooks).
@@ -1550,11 +1563,10 @@ def _probe_const_df(spark, centroid_list, books) -> DataFrame:
     per-probe execution cost is one 1-row broadcast — the BM25
     corpus-stats pattern. Session-keyed (applicationId): the persisted
     plan dies with the JVM."""
-    key = (
-        "probe_consts",
-        spark.sparkContext.applicationId,
-        _probe_plan_sig(centroid_list, books),
-    )
+    # content key: md5 over the exact float reprs (repr round-trips
+    # doubles, so distinct quantizers collide only with md5 itself)
+    sig = hashlib.md5(repr((centroid_list, books)).encode()).hexdigest()
+    key = ("probe_consts", spark.sparkContext.applicationId, sig)
     df = _QUANTIZER_CACHE.get(key)
     if df is None:
         df = arrow_local_df(
@@ -1600,8 +1612,9 @@ def ivfpq_probe_topk(
     """Probe an IVFPQ index (squared-L2 metric; normalize embeddings
     first when cosine ranking is wanted):
 
-    1. rank cells per query by exact centroid distance (centroids are
-       tiny and broadcast), keep ``n_probe``;
+    1. rank cells per query by exact centroid distance on the driver
+       (``_rank_cells`` over the collected query side), keep
+       ``n_probe``;
     2. build each (query, cell) pair's ADC lookup table from the
        query's RESIDUAL in that cell — |Q| × n_probe rows, each
        m × k_codes doubles, broadcast;
@@ -1612,9 +1625,9 @@ def ivfpq_probe_topk(
        (second pruned scan, id-keyed point-read; broadcast conditional
        on the known shortlist bound, as in ``pq_topk_refined``).
 
-    Driver traffic is ≤ n_cells ints (the probed-cell set for the
-    partition predicate) + the codebooks; every row-scale structure
-    stays distributed. Quantizer artifacts load through
+    The driver holds the query side, the quantizers and the probed-cell
+    set for the partition predicate; every corpus-scale structure stays
+    distributed. Quantizer artifacts load through
     ``_load_quantizer``, so warm probes against the same index skip the
     two driver collects."""
     clist, books = _load_quantizer(spark, path)
@@ -1675,122 +1688,36 @@ def ann_topk(
     ).select(query_id_col, "neighbor_id", F.col("l2_sq").alias("l2_dist"), "rnk")
 
 
-# Below this many queries the probe computes cell ranking + ADC LUTs
-# DRIVER-SIDE (numpy over the already-driver-known quantizers) and
-# ships them as one Arrow frame: the executor-side LUT pipeline's
-# stats job (collect_set of probed cells + guard count) was ~1.0 s of
-# the warm probe's 1.7 s fixed cost at sf1 — for a serving-sized
-# query batch that job computes 160 rows. Past the bound the SQL
-# pipeline takes over (LUT bytes grow as |Q| × n_probe × m × k_codes;
-# at the 100k guard that is ~800 MB, which belongs on executors).
+# Below this many queries the probe computes the ADC LUTs DRIVER-SIDE
+# (numpy over the driver-known quantizers and the frozen query rows)
+# and ships them as one Arrow frame: for a serving-sized query batch
+# the executor-side LUT subtree (constants crossJoin, residual and LUT
+# projections) is fixed cost that computes a few hundred rows. Past the
+# bound the SQL pipeline takes over (LUT bytes grow as |Q| × n_probe ×
+# m × k_codes; at the 100k query bound that is ~800 MB, which belongs
+# on executors).
 PROBE_DRIVER_LUT_MAX_QUERIES = 1024
 
 
-def _probe_with_driver_luts(
-    centroid_list,
-    books,
-    scan_for,
-    q_rows,
-    spark,
-    k: int,
-    n_probe: int,
-    shortlist_factor: int,
-    id_col: str,
-    emb_col: str,
-    query_id_col: str,
-    qid_type,
-) -> DataFrame:
-    """Fast path of ``_ivfpq_probe_core`` for serving-sized query sets:
-    steps 1–2 (cell ranking, residual ADC LUTs) run in numpy on the
-    driver — the quantizers already live there — and the LUT relation
-    arrives as ONE broadcast Arrow frame, removing the stats job and
-    the crossJoin/explode subtree. Steps 3–4 are the shared
-    ``_probe_rerank`` tail, so plan pins (PartitionFilters, codes-only
-    ReadSchema) hold.
+def _driver_luts(qids, Q, cells, centroid_list, books):
+    """The driver back-end of the probe's step 2: ``_with_cells(qids,
+    cells)`` plus the ADC LUT columns ``__lut{j}`` of every (query, cell)
+    pair, scored on the residual q − centroid(cell) with ``_np_fold`` —
+    bit-identical to the executor back-end's ``_adc_luts``."""
+    import pyarrow as pa
 
-    Numeric note: numpy's pairwise summation may differ from the SQL
-    fold by ulps in LUT entries; the shortlist is a superset selector
-    and the RE-RANK distance is computed SQL-side either way, so
-    returned distances are bit-identical to the big path and top-k
-    membership can only differ where ADC scores tie at the shortlist
-    boundary — the documented approx-ANN contract."""
-    import numpy as np
-    import pandas as pd
-
-    m = len(books)
-    d = len(books[0][0])
     C = np.asarray(centroid_list, dtype=np.float64)
     B = np.asarray(books, dtype=np.float64)  # m × k_codes × d
-    take = min(n_probe, len(centroid_list))
-    qids, cells_col, luts = [], [], {f"__lut{j}": [] for j in range(m)}
-    probe_cells = set()
-    for r in q_rows:
-        qv = np.asarray(r["__q"], dtype=np.float64)
-        d2 = ((C - qv[None, :]) ** 2).sum(axis=1)
-        order = np.argsort(d2, kind="stable")[:take]  # stable = low cell on tie
-        for cell in order:
-            cell = int(cell)
-            probe_cells.add(cell)
-            resid = qv - C[cell]
-            qids.append(r[query_id_col])
-            cells_col.append(cell)
-            for j in range(m):
-                sub = resid[j * d : (j + 1) * d]
-                luts[f"__lut{j}"].append(
-                    [float(((sub - B[j, c]) ** 2).sum()) for c in range(len(B[j]))]
-                )
-
-    def local_df(cols: dict, *fields):
-        schema = T.StructType([T.StructField(query_id_col, qid_type), *fields])
-        return spark.createDataFrame(pd.DataFrame(cols), schema=schema)
-
-    dbl = T.ArrayType(T.DoubleType())
-    q_lut = F.broadcast(
-        local_df(
-            {query_id_col: qids, "cell": cells_col, **luts},
-            T.StructField("cell", T.IntegerType()),
-            *[T.StructField(f"__lut{j}", dbl) for j in range(m)],
+    m, k_codes, d = B.shape
+    resid = (Q[:, None, :] - C[cells]).reshape(-1, Q.shape[1])
+    out = _with_cells(qids, cells)
+    offsets = pa.array(np.arange(0, len(resid) * k_codes + 1, k_codes, dtype=np.int32))
+    for j in range(m):
+        lut = _np_fold(resid[:, None, j * d : (j + 1) * d], B[j][None], _sq_term)
+        out = out.append_column(
+            f"__lut{j}", pa.ListArray.from_arrays(offsets, pa.array(lut.ravel()))
         )
-    )
-    qdf = local_df(
-        {
-            query_id_col: [r[query_id_col] for r in q_rows],
-            "__q": [[float(x) for x in r["__q"]] for r in q_rows],
-        },
-        T.StructField("__q", dbl),
-    )
-    return _probe_rerank(
-        scan_for(sorted(probe_cells)), q_lut, qdf, len(q_rows), m,
-        k, shortlist_factor, id_col, emb_col, query_id_col,
-    )
-
-
-def _probe_rerank(
-    pruned: DataFrame,
-    q_lut: DataFrame,
-    q: DataFrame,
-    n_q: int,
-    m: int,
-    k: int,
-    shortlist_factor: int,
-    id_col: str,
-    emb_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Steps 3–4 of the IVFPQ probe, shared by both LUT back-ends:
-    ADC-score the pruned scan's codes — ONLY (cell, id, pq_codes), never
-    the embedding column — against the per-(query, cell) LUTs,
-    shortlist ``k × shortlist_factor`` per query, then
-    ``_exact_rerank`` from the same pruned relation (one scan_for call:
-    a second paid the parquet footer/schema resolution twice)."""
-    shortlist = _adc_topk(
-        pruned.select("cell", id_col, "pq_codes").join(q_lut, on="cell"),
-        m, k * shortlist_factor, id_col, query_id_col, rank_col="srnk",
-    ).select(query_id_col, F.col(id_col).alias("neighbor_id"))
-    return _exact_rerank(
-        pruned, shortlist, q, n_q * k * shortlist_factor, k,
-        id_col, emb_col, query_id_col,
-    )
+    return out
 
 
 def _ivfpq_probe_core(
@@ -1810,86 +1737,63 @@ def _ivfpq_probe_core(
     pq_codes) frame — a partition-pruned ``spark.read.parquet`` for the
     plain index, a file-skipping ``read_where`` for the versioned one.
 
-    Cell ranking is a pure PROJECTION over the guarded query frame: per
-    query an array of (cdist, cell) structs over the centroids,
-    ``array_sort`` (lexicographic: distance then lowest-cell tiebreak),
-    slice ``n_probe``, explode — no centroid broadcast and no per-query
-    window."""
-    m = len(books)
-    d = len(books[0][0])
-    # Serving-sized query sets take the driver-LUT fast path: ONE
-    # bounded collect decides the dispatch AND, under the bound,
-    # already delivers the query vectors the LUT build needs
-    # (limit(N+1): > N rows back means big path, nothing wasted).
-    probe_q = _query_vectors(queries, id_col, emb_col, query_id_col)
-    q_rows = probe_q.limit(PROBE_DRIVER_LUT_MAX_QUERIES + 1).collect()
-    if len(q_rows) <= PROBE_DRIVER_LUT_MAX_QUERIES:
-        return _probe_with_driver_luts(
-            centroid_list, books, scan_for, q_rows, queries.sparkSession,
-            k=k, n_probe=n_probe, shortlist_factor=shortlist_factor,
-            id_col=id_col, emb_col=emb_col, query_id_col=query_id_col,
-            qid_type=queries.schema[id_col].dataType,
-        )
-    q = session_cache(probe_q, spill=True)
-    # The quantizers ride `_probe_const_df` — a persisted, broadcast
-    # 1-row frame — so every expression below references the `__cents`
-    # / `__books` COLUMNS and each probe's plan is a handful of nodes.
-    # The interpreted per-row cost is irrelevant: these project the
-    # guarded QUERY rows (|Q| × n_probe), never the corpus.
-    const_df = _probe_const_df(queries.sparkSession, centroid_list, books)
-    cents = F.col("__cents")
-    ranked = F.array_sort(
-        F.transform(
-            _dists_to(F.col("__q"), cents),
-            lambda dist, i: F.struct(dist.alias("cdist"), i.alias("cell")),
-        )
+    Step 1 ranks cells on the driver over the frozen query rows
+    (``_rank_cells``, squared L2). Step 2's per-(query, cell) LUTs come
+    from numpy for up to PROBE_DRIVER_LUT_MAX_QUERIES queries
+    (``_driver_luts``); past that, executors compute the residuals and
+    LUTs from the (query, cell) local frame against the quantizers
+    riding ``_probe_const_df``."""
+    spark = queries.sparkSession
+    m, d = len(books), len(books[0][0])
+    rows, q = _l2_query_side(
+        queries, id_col, emb_col, query_id_col, "ivfpq_probe_topk"
     )
-    resid = F.zip_with(
-        F.col("__q"),
-        F.element_at(cents, F.col("__rc.cell") + 1),
-        lambda a, b: a - b,
-    ).alias("__resid")
-    q_cells = (
-        exploded(
-            q.crossJoin(F.broadcast(const_df)),  # 1-row constants side
-            [query_id_col, "__q", "__cents", "__books"],
-            F.slice(ranked, 1, n_probe),
-            "__rc",
+    Q = _vectors(rows, "__q", len(centroid_list[0]))
+    cells = _rank_cells(Q, centroid_list, n_probe, "l2")
+    if len(rows) <= PROBE_DRIVER_LUT_MAX_QUERIES:
+        q_lut = F.broadcast(
+            arrow_local_df(
+                spark,
+                _driver_luts(rows.select([query_id_col]), Q, cells, centroid_list, books),
+            )
         )
-        .select(
-            query_id_col,
-            F.col("__rc.cell").alias("cell"),
-            resid,
-            "__books",
+    else:
+        # The quantizers ride `_probe_const_df` — a persisted, broadcast
+        # 1-row frame — so the expressions below reference the
+        # `__cents` / `__books` COLUMNS and the plan stays a handful of
+        # nodes. They project the (query, cell) pairs, never the corpus.
+        const_df = _probe_const_df(spark, centroid_list, books)
+        resid = F.zip_with(
+            F.col("__q"),
+            F.element_at(F.col("__cents"), F.col("cell") + 1),
+            lambda a, b: a - b,
         )
-    )
-    # ONE driver job returns the distinct probed cells (≤ n_cells ints
-    # — the partition predicate must be a literal for Catalyst to prune
-    # directories at plan time) AND the exploded row count, from which
-    # |Q| recovers exactly (every non-NULL query emits
-    # min(n_probe, n_cells) rows). The broadcast size guard enforces the
-    # SAME bound as _guard_query_side — the oversize failure pays one
-    # full pass over the query projection instead of a bounded count,
-    # but the driver still only ever receives a cell set + one long.
-    take = min(n_probe, len(centroid_list))
-    stats = q_cells.agg(
-        F.collect_set("cell").alias("cells"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    n_q = int(stats.n) // take if take else 0
-    if n_q > MAX_BROADCAST_QUERIES:
-        _reject_query_side(q, "ivfpq_probe_topk")
-    q_lut = q_cells.select(
-        query_id_col, "cell", *_adc_luts(F.col("__resid"), F.col("__books"), m, d)
-    )
-    # q_lut is |Q| × n_probe rows of m × k_codes doubles — n_probe×
-    # BIGGER than the guarded query relation, so the broadcast hint is
-    # conditional on the inflated row count; past the bound the band
-    # join falls back to a plain equi-join on cell (AQE re-plans)
-    if n_q * n_probe <= MAX_BROADCAST_QUERIES:
-        q_lut = F.broadcast(q_lut)
-    return _probe_rerank(
-        scan_for(sorted(stats.cells)), q_lut, q, n_q, m,
-        k, shortlist_factor, id_col, emb_col, query_id_col,
+        q_lut = (
+            arrow_local_df(spark, _with_cells(rows, cells))
+            .crossJoin(F.broadcast(const_df))
+            .select(query_id_col, "cell", resid.alias("__resid"), "__books")
+            .select(
+                query_id_col, "cell", *_adc_luts(F.col("__resid"), F.col("__books"), m, d)
+            )
+        )
+        # q_lut is |Q| × n_probe rows of m × k_codes doubles — n_probe×
+        # BIGGER than the query side, so the broadcast hint is
+        # conditional on the inflated row count; past the bound the band
+        # join falls back to a plain equi-join on cell (AQE re-plans)
+        if len(rows) * n_probe <= MAX_BROADCAST_QUERIES:
+            q_lut = F.broadcast(q_lut)
+    # Steps 3–4: ADC-score the pruned scan's codes — ONLY (cell, id,
+    # pq_codes), never the embedding column — shortlist k × factor per
+    # query, then the exact re-rank from the same pruned relation (one
+    # scan_for call: a second paid the footer/schema resolution twice).
+    pruned = scan_for(np.unique(cells).tolist())
+    shortlist = _adc_topk(
+        pruned.select("cell", id_col, "pq_codes").join(q_lut, on="cell"),
+        m, k * shortlist_factor, id_col, query_id_col, rank_col="srnk",
+    ).select(query_id_col, F.col(id_col).alias("neighbor_id"))
+    return _exact_rerank(
+        pruned, shortlist, q, len(rows) * k * shortlist_factor, k,
+        id_col, emb_col, query_id_col,
     )
 
 
@@ -2126,7 +2030,7 @@ def hard_negatives(
     scan, per-query ranking window); the label-inequality predicate
     runs BEFORE the window so every query still yields k rows whenever
     k different-label vectors exist."""
-    q, _ = _guard_query_side(
+    _, q = _query_side(
         queries.select(
             F.col(id_col).alias(query_id_col),
             F.col(emb_col).alias("q_emb"),

@@ -113,54 +113,36 @@ def too_big_to_broadcast(df: DataFrame) -> bool:
 # Session-lifetime operator caches.
 #
 # Several operators persist a small derived relation whose subtree is
-# expensive relative to its size (LSH fingerprints feeding a self-join;
-# the guarded ANN query side feeding a broadcast). The frame outlives
-# the function call — laziness means the consumer materializes it later
-# — so the function cannot unpersist it, and an unregistered
-# MEMORY_AND_DISK persist leaks: the disk tier is never evicted by
-# memory pressure, so repeated calls in one long-lived session grow
-# storage without bound (r7 review finding). Two-part answer:
+# expensive relative to its size (LSH fingerprints feeding a self-join,
+# a classifier's feature frame). The frame outlives the function call —
+# laziness means the consumer materializes it later — so the function
+# cannot unpersist it, and an unregistered MEMORY_AND_DISK persist
+# leaks: the disk tier is never evicted by memory pressure, so repeated
+# calls in one long-lived session grow storage without bound. Two-part
+# answer:
 #   * cache at MEMORY_ONLY — every block is LRU-evictable under
 #     pressure and simply recomputes on a miss, so the cache can never
-#     pin disk or grow past the storage pool;
+#     pin disk or grow past the storage pool. That is only safe for
+#     deterministic frames; a frame whose rows must not be re-drawn
+#     (a sample- or limit-derived ANN query set) is frozen on the
+#     driver instead (``similarity._query_side``) and never cached;
 #   * register every handle so callers (benchmarks, long-lived
 #     services, tests) can free them deterministically with
 #     release_session_caches().
 _SESSION_CACHES: list[DataFrame] = []
 
 
-def session_cache(df: DataFrame, spill: bool = False) -> DataFrame:
-    """Persist ``df`` and register the handle for
-    ``release_session_caches()``. Use for operator-internal caches that
-    must outlive the operator call (self-join sides, broadcast feeds).
-
-    Default level is MEMORY_ONLY — LRU-evictable, recompute-on-miss —
-    which is ONLY safe for deterministic frames (LSH fingerprints,
-    md5 digests): an evicted block recomputes to the same rows. Pass
-    ``spill=True`` (MEMORY_AND_DISK) for frames whose lineage may be
-    nondeterministic (a sampled/limit-derived query set): there a
-    recompute could silently produce different rows than the
-    materialization earlier driver decisions (counts, collected
-    partition predicates) were based on, so spilling is the correct
-    trade even though the disk tier is only freed by release/unpersist.
-    """
+def session_cache(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at MEMORY_ONLY and register the handle for
+    ``release_session_caches()``. Use for operator-internal caches of
+    deterministic frames that must outlive the operator call
+    (self-join sides, fingerprints, md5 digests): an evicted block
+    recomputes to the same rows."""
     from pyspark import StorageLevel
 
-    df = df.persist(
-        StorageLevel.MEMORY_AND_DISK if spill else StorageLevel.MEMORY_ONLY
-    )
+    df = df.persist(StorageLevel.MEMORY_ONLY)
     _SESSION_CACHES.append(df)
     return df
-
-
-def session_cache_forget(df: DataFrame) -> None:
-    """Drop a handle registered by ``session_cache`` (by identity) —
-    for error paths that unpersist eagerly and must not leave a stale
-    entry behind."""
-    for i, h in enumerate(_SESSION_CACHES):
-        if h is df:
-            del _SESSION_CACHES[i]
-            return
 
 
 def release_session_caches() -> int:
@@ -178,23 +160,25 @@ def release_session_caches() -> int:
             pass  # dead session / torn-down JVM: nothing left to free
     return n
 
-def arrow_local_df(spark, columns: dict, schema: str) -> DataFrame:
-    """Tiny driver-side DataFrame via the pandas→Arrow path.
 
-    ``spark.createDataFrame(list_of_tuples)`` builds a pickled-RDD
-    local relation whose every JOB spins a Python worker to
-    deserialize the rows — measured ~3.5 s of fixed cost per tiny
-    write/broadcast at r10, 23× the Arrow route, and it was being paid
-    per quantizer write, per training round, and per probe. The
-    pandas route transfers the same values as ONE Arrow batch and
-    plans as a JVM-local relation (float round-trip exact, including
-    -0.0 and denormals — verified elementwise, nested to depth 3).
+def arrow_local_df(spark, data, schema=None) -> DataFrame:
+    """Tiny driver-side DataFrame from ONE Arrow table.
 
-    ``columns`` maps column name → list of values (one list per
-    column, equal lengths)."""
-    import pandas as pd
+    ``data`` is a ``pyarrow.Table`` or a dict of column name → list of
+    values (equal lengths); ``schema`` (DDL string or StructType), when
+    given, casts the table to it, else the table's own Arrow types
+    carry over. ``createDataFrame(pa.Table)`` ships the values as one
+    Arrow stream and plans as ``LocalTableScan`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says; floats round-trip
+    exactly (-0.0, NaN and denormals, nested to depth 3). A list of
+    tuples, or pandas with that conf off (the default), instead builds
+    a pickled-row ``Scan ExistingRDD`` whose every job spins a Python
+    worker to deserialize the rows."""
+    import pyarrow as pa
 
-    return spark.createDataFrame(pd.DataFrame(columns), schema=schema)
+    if not isinstance(data, pa.Table):
+        data = pa.table(data)
+    return spark.createDataFrame(data, schema=schema)
 
 
 def exploded(

@@ -13,6 +13,17 @@ from data_pipeline_with_spark_spark.sources.readers import TESTDATA_TABLES, read
 # Every lakehouse_ entry commits to a versioned table, and every graph_
 # entry runs a checkpointed fixpoint loop.
 EXECUTES_BY_FAMILY = ("lakehouse_", "graph_")
+# Exact searches whose only build-time job is the query side's one
+# bounded collect: the size bound fails fast before anything is
+# broadcast, and every later decision reads the collected rows.
+QUERY_SIDE_ONLY = frozenset(
+    {
+        "sim_cosine_topk_bruteforce",
+        "sim_hard_negatives",
+        "sim_l2_normalized_topk",
+        "sim_retrieval_eval",
+    }
+)
 EXECUTES_AT_BUILD = frozenset(
     {
         # source schema inference and partition discovery
@@ -43,20 +54,17 @@ EXECUTES_AT_BUILD = frozenset(
         "sim_pca_label_projections",
         "text_bpe_tokenize",
         # ANN seeding: centroids, codebooks, query samples
-        "sim_cosine_topk_bruteforce",
         "sim_cosine_topk_ivf",
         "sim_cosine_topk_ivf_indexed",
-        "sim_hard_negatives",
         "sim_hybrid_rrf_search",
-        "sim_l2_normalized_topk",
         "sim_l2_topk_auto",
         "sim_l2_topk_ivfpq",
         "sim_l2_topk_pq",
         "sim_mmr_select",
-        "sim_retrieval_eval",
         "sim_semantic_dedup",
         "sim_semantic_dedup_auto",
     }
+    | QUERY_SIDE_ONLY
 )
 
 
@@ -75,3 +83,16 @@ def test_catalog_builds_start_no_jobs(spark):
         if dag.nextJobId() > j0:
             offenders[name] = dag.nextJobId() - j0
     assert not offenders, f"build() started Spark jobs: {offenders}"
+
+
+def test_exact_searches_build_with_one_query_side_job(spark):
+    specs = all_queries()
+    for t in TESTDATA_TABLES:
+        read_testdata(spark, SF, t)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = {}
+    for name in sorted(QUERY_SIDE_ONLY):
+        j0 = dag.nextJobId()
+        specs[name].build(spark, SF)
+        jobs[name] = dag.nextJobId() - j0
+    assert jobs == dict.fromkeys(QUERY_SIDE_ONLY, 1), jobs

@@ -2831,6 +2831,35 @@ def test_idempotent_append_waits_out_inflight_publish(spark, tmp_path):
     assert sorted(r.id for r in t.read().collect()) == [1, 2]
 
 
+def test_vacuum_waits_out_inflight_publish(spark, tmp_path):
+    # vacuum parses the whole log strictly (skipping an entry could
+    # collect dirs it references); a young, unparsable newest entry (a
+    # live O_EXCL publish still copying) is waited out, not a
+    # JSONDecodeError, and the dirs it references survive.
+    import json as _json
+    import threading as _threading
+    import time as _time
+    from pathlib import Path as _Path
+
+    t = VersionedTable(spark, str(tmp_path / "t")).create(
+        spark.createDataFrame([(1, 1)], "id INT, v INT")
+    )
+    t.append(spark.createDataFrame([(2, 2)], "id INT, v INT"))
+    head = t._latest()
+    inflight = t.log_dir / f"{head.version:020d}.json"
+    done = inflight.read_text()
+    inflight.write_text("")  # slot claimed, content not yet synced
+    w = _threading.Thread(target=lambda: (_time.sleep(1.0), inflight.write_text(done)))
+    w.start()
+    try:
+        t.vacuum(keep_versions=1, orphan_retention_seconds=0)
+    finally:
+        w.join()
+    assert head.data_dirs and all(_Path(d).exists() for d in head.data_dirs)
+    assert sorted(r.id for r in t.read().collect()) == [1, 2]
+    assert _json.loads(inflight.read_text())["version"] == head.version
+
+
 @pytest.mark.parametrize(
     "rewrite",
     [

@@ -1309,29 +1309,15 @@ def test_pq_shortlist_broadcast_falls_back_past_bound(spark, monkeypatch):
 
 
 def test_session_cache_registry_levels_and_release(spark):
-    # Operator caches are registered and releasable. Levels express the
-    # determinism contract (r7 review findings): the ANN query guard
-    # spills (MEMORY_AND_DISK — a recompute of a sample()-derived query
-    # set would desync the counted bound / collected probe cells), while
-    # deterministic fingerprint caches stay MEMORY_ONLY (evictable, no
-    # disk pinning, recompute-safe).
+    # Operator caches are registered and releasable, and cache only
+    # deterministic frames at MEMORY_ONLY (evictable, no disk pinning,
+    # recompute-safe).
     from pyspark import StorageLevel
 
     from data_pipeline_with_spark_spark import util
-    from data_pipeline_with_spark_spark.llm import similarity as S
     from data_pipeline_with_spark_spark.llm.dedup import simhash_near_dup_pairs
 
     util.release_session_caches()  # clean slate
-    emb = spark.range(10).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.rand(seed=7), F.rand(seed=8)).alias("embedding"),
-    )
-    out = S.brute_force_topk(emb, emb.where("vec_id < 2"), k=2)
-    out.collect()
-    assert util._SESSION_CACHES, "guard did not register its cache"
-    guard_cached = util._SESSION_CACHES[-1]
-    assert guard_cached.storageLevel == StorageLevel.MEMORY_AND_DISK
-
     docs = spark.createDataFrame(
         [(1, "aa bb cc dd"), (2, "aa bb cc dd"), (3, "zz yy xx ww")],
         "doc_id LONG, text STRING",
@@ -1341,8 +1327,7 @@ def test_session_cache_registry_levels_and_release(spark):
     assert fp_cached.storageLevel == StorageLevel.MEMORY_ONLY
 
     n = util.release_session_caches()
-    assert n >= 2 and not util._SESSION_CACHES
-    assert guard_cached.storageLevel == StorageLevel.NONE
+    assert n >= 1 and not util._SESSION_CACHES
     assert fp_cached.storageLevel == StorageLevel.NONE
 
 
@@ -1764,10 +1749,9 @@ def test_l2_family_excludes_null_embeddings(spark):
 
 
 def test_pq_topk_refined_guards_query_side_once(spark):
-    # pq_topk_refined previously guarded its own query projection AND
-    # called the public pq_topk, which re-guarded it: two persisted
-    # session-cache entries + two bounded count jobs per call (r7
-    # advice). The shared _pq_topk_on_guarded core keeps it to one.
+    # pq_topk_refined shares the ADC core with pq_topk instead of
+    # calling it, so its build collects the query side exactly once:
+    # one bounded job, and no session cache registered for it.
     from data_pipeline_with_spark_spark import util
     from data_pipeline_with_spark_spark.llm import similarity as S
 
@@ -1778,10 +1762,12 @@ def test_pq_topk_refined_guards_query_side_once(spark):
     )
     books = S.pq_train(df, m=2, k_codes=4, iters=1)
     codes = S.pq_encode(df, books)
-    before = len(util._SESSION_CACHES)
-    S.pq_topk_refined(df, codes, df.limit(3), books, k=2).collect()
-    assert len(util._SESSION_CACHES) - before == 1
-    util.release_session_caches()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    out = S.pq_topk_refined(df, codes, df.limit(3), books, k=2)
+    assert dag.nextJobId() - j0 == 1
+    assert not util._SESSION_CACHES
+    assert out.count() == 6
 
 
 @pytest.mark.slow
@@ -2184,6 +2170,37 @@ def test_longest_dup_spans_two_separate_regions(spark):
         assert out[d].n_dup_regions == 2
         assert out[d].max_dup_span == 10
         assert out[d].dup_tokens == 19
+
+
+def test_driver_cell_ranking_matches_sql_kernels_bitwise(spark):
+    # _rank_cells scores on the driver with the SQL kernels' sequential
+    # folds: cosine and squared-L2 scores are bit-identical to the
+    # executor's dot/_sq_dist_cols, so cell rankings agree with SQL.
+    import numpy as np
+
+    from data_pipeline_with_spark_spark.llm import similarity as S
+
+    rng = np.random.RandomState(11)
+    A = rng.randn(6, 16).astype(np.float32).astype(np.float64)
+    B = rng.randn(5, 16)
+    A[0, :3] = -0.0
+    rows = spark.createDataFrame(
+        [(i, a.tolist(), b.tolist()) for i, a in enumerate(A) for b in B],
+        "i INT, a ARRAY<DOUBLE>, b ARRAY<DOUBLE>",
+    ).select(
+        S.cosine(F.col("a"), F.col("b")).alias("cos"),
+        S._sq_dist_cols(F.col("a"), F.col("b")).alias("l2"),
+    ).collect()
+    X = A[:, None, :]
+    cos = S._np_fold(X, B) / (np.sqrt(S._np_fold(X, X)) * np.sqrt(S._np_fold(B, B)))
+    l2 = S._np_fold(X, B, S._sq_term)
+    assert [r.cos for r in rows] == cos.ravel().tolist()
+    assert [r.l2 for r in rows] == l2.ravel().tolist()
+    ties = np.vstack([B, B[:1]]).tolist()  # cell 5 duplicates cell 0
+    for metric in ("l2", "cosine"):
+        order = S._rank_cells(A, ties, 6, metric).tolist()
+        assert all(o.index(0) + 1 == o.index(5) for o in order)  # lowest cell first
+    assert S._rank_cells(A, ties, 2, "l2").shape == (6, 2)
 
 
 def test_ivfpq_probe_driver_lut_path_matches_sql_path(spark, tmp_path):

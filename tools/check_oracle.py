@@ -281,9 +281,9 @@ def main() -> int:
         print(f"\n===== {sf_dir} =====")
         n_pass, n_run, failures = sweep(spark, sf_dir, only)
         totals.append((sf_dir, n_pass, n_run, failures))
-        # operator session_caches (MEMORY_AND_DISK) pinned during this
-        # sweep would otherwise ride through the next, larger SF's
-        # sweep as dead eviction pressure
+        # operator session_caches (MEMORY_ONLY) held during this sweep
+        # would otherwise ride through the next, larger SF's sweep as
+        # dead eviction pressure
         release_session_caches()
     if SF1:
         sub = sf1_only()
